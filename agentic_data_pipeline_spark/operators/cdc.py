@@ -16,7 +16,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..catalog import load_table, ts_us_long
+from ..catalog import load_table, read_parquet, ts_us_long
 from ..registry import op
 
 C = F.col
@@ -120,7 +120,7 @@ def ext_compact_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     supp.repartition(32).write.mode("overwrite").parquet(frag)
     out = _scratch("compact", "supplier_compacted")
     compact_parquet(spark, frag, out)
-    return spark.read.parquet(out)
+    return read_parquet(spark, out)
 
 
 # ------------------------------------------------------------------ z-order

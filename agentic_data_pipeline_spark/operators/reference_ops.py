@@ -14,7 +14,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..agent import TransformationAgent
-from ..catalog import load_table
+from ..catalog import load_table, read_parquet
 from ..plans.dialect import sql_exec
 from ..registry import op
 from ..serving import bar_chart_data, preview, serve_csv, serve_json
@@ -278,7 +278,7 @@ def write_bronze_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     supp = load_table(spark, sf_dir, "supplier")
     lake = _scratch("lake", "x") and os.path.join(_TMP, "lake")
     write_bronze(supp, lake, "supplier_rt")
-    return spark.read.parquet(os.path.join(lake, "supplier_rt"))
+    return read_parquet(spark, os.path.join(lake, "supplier_rt"))
 
 
 @op("read_bronze", oracle="SELECT * FROM part")
@@ -420,7 +420,7 @@ def ext_partitioned_write(spark: SparkSession, sf_dir: str) -> DataFrame:
     _materialize_once(path, lambda: ev.write.mode("overwrite")
                       .partitionBy("event_type").parquet(path),
                       _lake_fp(sf_dir, "events"))
-    part = spark.read.parquet(path).filter(C("event_type") == "click")
+    part = read_parquet(spark, path).filter(C("event_type") == "click")
     return (part.groupBy((C("user_id") % 10).cast("bigint").alias("user_mod"))
             .agg(F.count(F.lit(1)).alias("n_events"),
                  (F.sum(F.round(C("value") * 100, 0).cast("bigint"))

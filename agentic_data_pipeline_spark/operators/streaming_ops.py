@@ -14,7 +14,7 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..catalog import table_path
+from ..catalog import load_table, read_parquet, table_path
 from ..registry import op
 
 C = F.col
@@ -356,7 +356,8 @@ def stream_upsert_q(spark: SparkSession, sf_dir: str) -> DataFrame:
                            uuid.uuid4().hex[:8])
     os.makedirs(run_dir, exist_ok=True)
 
-    batch_schema = spark.read.parquet(split).schema  # footer only
+    # one job reads a footer, unless the path's schema is already memoized
+    batch_schema = read_parquet(spark, split).schema
     stream = (spark.readStream.schema(batch_schema)
               .option("maxFilesPerTrigger", "1").parquet(split))
     stream = stream.withColumn("ts_us", ts_us_long(stream))
@@ -386,6 +387,8 @@ def stream_upsert_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         # pointer), so a retried epoch reads the same input version.
         prev_path = os.path.join(run_dir, f"state_v{batch_id - 1}")
         if os.path.exists(os.path.join(prev_path, "_SUCCESS")):
+            # the micro-batch session is the stream's clone (AQE off);
+            # catalog.read_parquet would tune() it, so read directly
             prev = batch_df.sparkSession.read.parquet(prev_path)
             agg = (prev.unionByName(agg).groupBy("user_id")
                    .agg(F.sum("n_events").cast("bigint").alias("n_events"),
@@ -402,7 +405,7 @@ def stream_upsert_q(spark: SparkSession, sf_dir: str) -> DataFrame:
          .trigger(availableNow=True).start())
     q.awaitTermination()
     assert state["path"] is not None, "stream produced no batches"
-    return spark.read.parquet(state["path"])
+    return read_parquet(spark, state["path"])
 
 
 @op("stream_dedup_fuzzy", oracle=_INC_FUZZY_ORACLE)
@@ -452,7 +455,7 @@ def stream_dedup_fuzzy_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     _materialize_once(src, write_src, _lake_fp(sf_dir, "documents"))
 
-    schema = spark.read.parquet(f"{src}/batch0.parquet").schema
+    schema = read_parquet(spark, f"{src}/batch0.parquet").schema
     state: dict = {}
     decisions: list = []
 
@@ -580,20 +583,18 @@ def stream_quality_gate_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     C = F.col
     split = _sf_scratch(sf_dir, "stream_gate", "orders_4")
-    orders_path = table_path(sf_dir, "orders")
     _materialize_once(
         split,
-        lambda: spark.read.parquet(orders_path)
+        lambda: load_table(spark, sf_dir, "orders")
         .repartitionByRange(4, "o_orderkey")
         .write.mode("overwrite").parquet(split),
         _lake_fp(sf_dir, "orders"))
 
-    customer = (spark.read.parquet(table_path(sf_dir, "customer"))
-                .select("c_custkey"))
+    customer = load_table(spark, sf_dir, "customer").select("c_custkey")
     run_dir = os.path.join("/root/repo/.tmp", "stream_gate",
                            _uuid.uuid4().hex[:8])
     os.makedirs(run_dir, exist_ok=True)
-    schema = spark.read.parquet(split).schema
+    schema = read_parquet(spark, split).schema
     state = {"counters": None, "keys": None}
 
     def gate_batch(bdf: DataFrame, batch_id: int) -> None:
@@ -634,6 +635,7 @@ def stream_quality_gate_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         prev_c_path = os.path.join(run_dir, f"counters_v{batch_id - 1}")
         prev_k_path = os.path.join(run_dir, f"keys_v{batch_id - 1}")
         if os.path.exists(os.path.join(prev_c_path, "_SUCCESS")):
+            # direct read: see the stream's-clone note in stream_upsert_q
             prev_c = s.read.parquet(prev_c_path)
             counters = (prev_c.unionByName(counters).agg(
                 F.sum("orders_custkey_complete")
@@ -660,8 +662,8 @@ def stream_quality_gate_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     q.awaitTermination()
     assert state["counters"] is not None, "stream produced no batches"
 
-    counters = spark.read.parquet(state["counters"])
-    dup = (spark.read.parquet(state["keys"])
+    counters = read_parquet(spark, state["counters"])
+    dup = (read_parquet(spark, state["keys"])
            .agg((F.sum("cnt") - F.count(F.lit(1))).cast("double")
                 .alias("orders_orderkey_unique")))
     wide = counters.crossJoin(F.broadcast(dup))

@@ -47,18 +47,23 @@ def fit_topics(docs: DataFrame, k: int = K_TOPICS,
     dist_sum) — dominant topic per document plus the distribution
     invariants used by the contract."""
     from pyspark.ml.clustering import LDA
-    from pyspark.ml.feature import CountVectorizer
+    from pyspark.ml.feature import CountVectorizerModel
     from pyspark.ml.functions import vector_to_array
 
     # Pin partition layout AND within-partition order before fitting:
-    # CountVectorizer's vocab tie-breaking and online LDA's mini-batch
-    # sampling both depend on partition contents/order, so without this
-    # two fits of the same data in one session can disagree on borderline
-    # docs (observed r7). Hash-repartition + sort is deterministic.
+    # online LDA's mini-batch sampling depends on partition contents/order.
+    # Hash-repartition + sort is deterministic.
     tok = (_tokens(docs).select(id_col, "__tokens")
            .repartition(8, id_col).sortWithinPartitions(id_col))
-    cv = CountVectorizer(inputCol="__tokens", outputCol="__features",
-                         vocabSize=vocab_cap).fit(tok)
+    # CountVectorizer.fit breaks count ties by arrival order, so two fits
+    # could order the vocabulary (hence the LDA features) differently. The
+    # same vocabulary, ordered by count desc then token asc, is fixed.
+    vocab = [r[0] for r in (
+        _tokens(docs).select(F.explode("__tokens").alias("t"))
+        .groupBy("t").count()
+        .orderBy(C("count").desc(), C("t")).limit(vocab_cap).collect())]
+    cv = CountVectorizerModel.from_vocabulary(
+        vocab, inputCol="__tokens", outputCol="__features")
     feats = cv.transform(tok)
     lda = LDA(k=k, seed=42, maxIter=10, optimizer="online",
               featuresCol="__features").fit(feats)

@@ -13,6 +13,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
+from ..catalog import read_parquet
 from ..session import tune
 
 
@@ -41,10 +42,11 @@ def read_bronze(spark: SparkSession, lake_dir: str, name: str,
     Pass ``schema`` to give the empty frame a real schema; otherwise it is
     zero-column like the reference's bare ``pd.DataFrame()``.
     """
-    tune(spark)
     path = bronze_path(lake_dir, name)
     try:
-        reader = spark.read.schema(schema) if schema is not None else spark.read
-        return reader.parquet(path)
+        if schema is None:
+            return read_parquet(spark, path)
+        tune(spark)
+        return spark.read.schema(schema).parquet(path)
     except Exception:
         return spark.createDataFrame([], schema=schema or StructType([]))

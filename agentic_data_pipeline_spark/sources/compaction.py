@@ -20,6 +20,8 @@ import os
 
 from pyspark.sql import SparkSession
 
+from ..catalog import read_parquet
+
 TARGET_FILE_BYTES = 128 * 1024 * 1024  # parquet row-group sweet spot
 
 
@@ -48,5 +50,5 @@ def compact_parquet(spark: SparkSession, src: str, dst: str,
     is identical.
     """
     n = target_file_count(src, target_bytes)
-    spark.read.parquet(src).coalesce(n).write.mode("overwrite").parquet(dst)
+    read_parquet(spark, src).coalesce(n).write.mode("overwrite").parquet(dst)
     return n

@@ -28,6 +28,7 @@ from pyspark.sql.types import (
     IntegerType, StringType, StructField, StructType,
 )
 
+from ..catalog import read_parquet
 from ..session import tune
 
 
@@ -125,7 +126,7 @@ _READERS = {
     "pdf": _read_pdf,
     "parquet": lambda spark, path, schema, options: (
         spark.read.schema(schema).parquet(path) if schema is not None
-        else spark.read.parquet(path)
+        else read_parquet(spark, path)
     ),
     # Beyond-reference formats Spark reads natively (same dispatch contract).
     "orc": lambda spark, path, schema, options: (

@@ -40,10 +40,10 @@ def events_stream(spark: SparkSession, input_dir: str,
     (catalog.ts_us_timestamp), so stream ops never care which variant
     shipped.
     """
-    from ..catalog import ts_us_timestamp
+    from ..catalog import read_parquet, ts_us_timestamp
 
-    tune(spark)  # nanosAsLong must be set before the footer sniff
-    batch = spark.read.parquet(input_dir)  # footer read only — no job runs
+    # one job reads a footer, unless the path's schema is already memoized
+    batch = read_parquet(spark, input_dir)
     stream = spark.readStream.schema(batch.schema).parquet(input_dir)
     if raw:
         return stream
