@@ -72,7 +72,7 @@ def _ensure_parallelism(df: DataFrame) -> DataFrame:
     return df
 
 
-def _shingle_batches(n: int):
+def _shingle_batches(n: int, id_col: str):
     """mapInArrow body factory for shingles_exploded: (id, text) batches
     in, distinct (id, s) shingle rows out — generated per DOC, inside
     one map pass, so neither the exploded token stream nor the shingle
@@ -81,7 +81,8 @@ def _shingle_batches(n: int):
     printable-ASCII corpus the lake-robustness test pins; the
     element-wise ' ' join over the same token slices == concat_ws).
     Per-doc distinct is emitted sorted so task retries reproduce
-    identical row order.
+    identical row order. A null id raises ValueError naming ``id_col``
+    (the caller's column name, for the message only).
 
     Fully vectorized (guide §4.3 — no per-row Python): the first Arrow
     form looped docs in Python (to_pylist + set + ' '.join = one
@@ -114,6 +115,10 @@ def _shingle_batches(n: int):
         for batch in it:
             if batch.num_rows == 0:
                 continue
+            if batch.column("id").null_count:
+                raise ValueError(
+                    f"shingles_exploded: id column {id_col!r} contains "
+                    "nulls; ids must be non-null and unique per row")
             ids = batch.column("id").to_numpy(zero_copy_only=False)
             text = batch.column("text")
             if text.null_count:
@@ -203,7 +208,7 @@ def shingles_exploded(df: DataFrame, id_col: str, text_col: str,
     if not isinstance(df.schema[id_col].dataType, LongType):
         return _shingles_exploded_jvm(df, id_col, text_col, n)
     return (df.select(C(id_col).alias("id"), C(text_col).alias("text"))
-            .mapInArrow(_shingle_batches(n), "id bigint, s string"))
+            .mapInArrow(_shingle_batches(n, id_col), "id bigint, s string"))
 
 
 def _shingles_exploded_jvm(df: DataFrame, id_col: str, text_col: str,
@@ -1031,9 +1036,7 @@ def ext_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def connected_components(vertices: DataFrame, edges: DataFrame,
                          max_iter: int = 25,
-                         stats: dict | None = None,
-                         eager_cuts: bool = False,
-                         check_every: int = 1) -> DataFrame:
+                         stats: dict | None = None) -> DataFrame:
     """Connected components by iterative min-label propagation.
 
     ``vertices``: one column ``id``; ``edges``: columns ``s``, ``t``
@@ -1050,27 +1053,14 @@ def connected_components(vertices: DataFrame, edges: DataFrame,
     larger diameters switch to large-star/small-star (Kiveris '14), which
     converges in O(log n) rounds over the same primitives.
 
-    ``eager_cuts=False`` (default since r11): the cuts are lazy
-    localCheckpoints — same LogicalRDD plan barrier, but the per-round
-    materializing count() job is skipped because the convergence
-    aggregate's collect() materializes the round's blocks in ITS job
-    anyway (the same lever as pagerank's lazy cuts, graph.py; labels are
-    bit-identical — only job scheduling changes). Interleaved A/B:
-    scripts/probe_cc_lazy.py.
-
-    ``check_every`` (r12, verdict item 2): run the convergence collect()
-    only every Nth round — labels are monotone non-increasing per vertex,
-    so equal sums N rounds apart still imply every intervening round was
-    a no-op (exact detection, bit-identical labels). The trade: N-1 fewer
-    driver-synced jobs per N rounds, against up to N-1 extra (no-op, but
-    still shuffled) rounds when convergence lands between checks.
-    Measured at N=2 (scripts/probe_cc_check_every.py): the extra shuffle
-    round costs more than the saved sync at every tested tier, so the
-    default stays 1; the knob is the committed evidence.
+    Every cut is a lazy ``localCheckpoint`` and the fixpoint collect()
+    runs every round: that collect() is the next job and materializes a
+    lazy cut's blocks, so an eager cut's count() is a wasted driver-synced
+    job, and checking every 2nd round costs more in extra shuffled rounds
+    than it saves in syncs (OPTIMIZATION_r11.md "connected_components /
+    _star ... lazy cuts in both loops", OPTIMIZATION_r12.md "Measured
+    negatives").
     """
-    def cut(df: DataFrame) -> DataFrame:
-        return df.localCheckpoint(eager=eager_cuts)
-
     # Materialize the symmetrized edge list ONCE before iterating: `edges`
     # is typically the expensive candidate-generation subtree (all-pairs /
     # banded-LSH Jaccard verify, cosine join), and without a lineage cut
@@ -1079,9 +1069,11 @@ def connected_components(vertices: DataFrame, edges: DataFrame,
     # O(diameter × candidate-gen) at 100 TB. Measured at sf0.1 on
     # ext_dedup_clusters_bounded (exact all-pairs front-end, ~4 rounds):
     # 3.3-4.3 s → 2.0 s, and run-to-run variance collapses with it.
-    sym = cut(edges.select("s", "t")
-              .union(edges.select(C("t").alias("s"), C("s").alias("t"))))
-    comp = cut(vertices.select(C("id"), C("id").alias("comp")))
+    sym = (edges.select("s", "t")
+           .union(edges.select(C("t").alias("s"), C("s").alias("t")))
+           .localCheckpoint(eager=False))
+    comp = (vertices.select(C("id"), C("id").alias("comp"))
+            .localCheckpoint(eager=False))
     prev_sum = None
     rounds = 0
     for _ in range(max_iter):
@@ -1090,15 +1082,14 @@ def connected_components(vertices: DataFrame, edges: DataFrame,
             .groupBy(C("t").alias("_mid"))
             .agg(F.min("comp").alias("_nbr_min"))
         )
-        comp = cut(
+        comp = (
             comp.join(msgs, C("id") == C("_mid"), "left")
             .select("id",
                     F.least(C("comp"), F.coalesce(C("_nbr_min"), C("comp")))
                     .alias("comp"))
+            .localCheckpoint(eager=False)
         )
         rounds += 1
-        if rounds % max(1, check_every) != 0:
-            continue  # skip this round's driver sync; see check_every note
         s = comp.agg(F.sum("comp")).collect()[0][0]
         if s == prev_sum:
             break
@@ -1110,9 +1101,7 @@ def connected_components(vertices: DataFrame, edges: DataFrame,
 
 def connected_components_star(vertices: DataFrame, edges: DataFrame,
                               max_iter: int = 50,
-                              stats: dict | None = None,
-                              eager_cuts: bool = False,
-                              check_every: int = 1) -> DataFrame:
+                              stats: dict | None = None) -> DataFrame:
     """Connected components by large-star/small-star alternation
     (Kiveris et al., "Connected Components in MapReduce and Beyond",
     SoCC 2014) — the O(log n)-round algorithm for graphs whose diameter
@@ -1144,14 +1133,16 @@ def connected_components_star(vertices: DataFrame, edges: DataFrame,
     themselves — bit-identical contract to ``connected_components``
     (pytest pins equality on random graphs; the chain probe pins the
     round-count separation: scripts/probe_cc_star.py).
-    """
-    def cut(df: DataFrame) -> DataFrame:
-        # Lazy by default (r11): the per-round fixpoint-signature collect()
-        # materializes the blocks in its own job — see connected_components.
-        return df.localCheckpoint(eager=eager_cuts)
 
-    E = cut(edges.select(C("s").alias("a"), C("t").alias("b"))
-            .filter(C("a") != C("b")).distinct())
+    Cuts are lazy and the fixpoint signature is collected every round,
+    for the same measured reason as ``connected_components``: that
+    collect() materializes a lazy cut's blocks, so an eager cut's count()
+    is a wasted driver-synced job (OPTIMIZATION_r11.md, OPTIMIZATION_r12.md
+    "Measured negatives").
+    """
+    E = (edges.select(C("s").alias("a"), C("t").alias("b"))
+         .filter(C("a") != C("b")).distinct()
+         .localCheckpoint(eager=False))
     prev_sig = None
     rounds = 0
     for _ in range(max_iter):
@@ -1168,16 +1159,12 @@ def connected_components_star(vertices: DataFrame, edges: DataFrame,
         smins = (oriented.groupBy("a")
                  .agg(F.least(F.min("b"), F.first("a")).alias("m")))
         joined = oriented.join(smins, "a")
-        E = cut(joined.select(C("b").alias("a"), C("m").alias("b"))
-                .union(smins.select(C("a"), C("m").alias("b")))
-                .filter(C("a") != C("b"))
-                .distinct())
+        E = (joined.select(C("b").alias("a"), C("m").alias("b"))
+             .union(smins.select(C("a"), C("m").alias("b")))
+             .filter(C("a") != C("b"))
+             .distinct()
+             .localCheckpoint(eager=False))
         rounds += 1
-        if rounds % max(1, check_every) != 0:
-            continue  # skip this round's driver sync (see the min-label
-            #           loop's check_every note: the edge multiset is a
-            #           monotone potential, so equal signatures N rounds
-            #           apart still detect the fixpoint exactly)
         # Decimal(38,0) sums: the xxhash64 sum overflows BIGINT under
         # ANSI mode after a handful of rows; decimal accumulation is
         # exact and order-independent.

@@ -22,9 +22,7 @@ C = F.col
 
 
 def pagerank(vertices: DataFrame, edges: DataFrame, damping: float = 0.85,
-             iters: int = 10, checkpoint_every: int = 1,
-             reliable_dir: str | None = None,
-             eager_cuts: bool = True) -> DataFrame:
+             iters: int = 10) -> DataFrame:
     """PageRank by power iteration. ``vertices``: one column ``id``;
     ``edges``: ``src``, ``dst`` (directed, unweighted).
 
@@ -39,99 +37,62 @@ def pagerank(vertices: DataFrame, edges: DataFrame, damping: float = 0.85,
     sizes the state is two (id, double) tables partitioned on id; rounds
     are fixed-count, so the whole run is `iters` bounded shuffles.
 
-    Lineage-cut knobs (r8 verdict item 5 — the per-round localCheckpoint
-    keeps 10 intermediate states as in-memory blocks and was suspected as
-    the sf0.1 bench-variance source): ``checkpoint_every`` cuts every Nth
-    round instead of every round (the uncut rounds' plans double once —
-    each round reads the prior state twice — so keep it small);
-    ``reliable_dir`` switches to disk-backed ``df.checkpoint()`` (no
-    executor-memory blocks, GC-quiet). Ranks are bit-identical across all
-    variants (same arithmetic, same plans modulo the cut);
-    scripts/probe_pagerank_checkpoint.py is the measured A/B.
-
-    ``reliable_dir`` contract (r9 advisor): the SparkContext checkpoint
-    dir is global, so it is repointed only for the duration of this call
-    and restored before returning when one was previously set (the public
-    API cannot unset it; checkpoints are eager, so every file is written
-    inside the call). The CALLER owns ``reliable_dir``'s
-    lifecycle — delete it after consuming the returned ranks; this
-    function cannot, because the returned DataFrame reads from those
-    files.
+    Every cut is a lazy ``localCheckpoint`` on the loop-invariant inputs
+    and after every round: the next job materializes a lazy cut's blocks,
+    so an eager cut's count() is a wasted driver-synced job (eager, every
+    2nd/5th-round and disk-checkpoint cuts all measured slower or a wash:
+    OPTIMIZATION_r11.md "ext_pagerank — lazy per-round lineage cuts",
+    OPTIMIZATION_r12.md "Measured negatives").
     """
     from pyspark.sql import Window
 
-    sc = vertices.sparkSession.sparkContext
-    prev_ckpt_dir = None
-    if reliable_dir is not None:
-        prev_ckpt_dir = sc.getCheckpointDir()
-        sc.setCheckpointDir(reliable_dir)
-
-    def cut0(df: DataFrame) -> DataFrame:
-        """Lineage cut for the loop-invariant init state — same backing
-        (disk vs executor blocks) as the per-round cuts. ``eager_cuts=
-        False`` keeps the identical LogicalRDD plan barrier (toRdd runs
-        at cut time either way) but skips the per-round materializing
-        count() job — blocks materialize when a later stage first reads
-        them, so the 10-round chain rides fewer driver-synced jobs."""
-        return (df.checkpoint() if reliable_dir is not None
-                else df.localCheckpoint(eager=eager_cuts))
-
-    def cut(df: DataFrame, rnd: int) -> DataFrame:
-        if (rnd + 1) % max(1, checkpoint_every) != 0:
-            return df
-        return cut0(df)
-
-    try:
-        n = vertices.count()
-        # Out-degree weights via a window over src: ONE pass over the edge
-        # subtree and one shuffle. The previous self-join form
-        # (edges ⋈ edges.groupBy(src).count) evaluated the edge subtree —
-        # here the full BLAS kNN construction — TWICE and paid an extra join
-        # (same recompute class as the r6 connected-components fix;
-        # interleaved A/B at sf0.1: 3.61 s → 3.16 s, ranks bit-identical).
-        w_edges = cut0(edges.select(
-            "src", "dst",
-            (1.0 / F.count(F.lit(1)).over(Window.partitionBy("src")))
-            .alias("w")))
-        has_out = w_edges.select("src").distinct()
-        # Dangling-ness is a property of the GRAPH, not the iteration: resolve
-        # it once into a boolean carried on the rank state, so each round's
-        # dangling mass is a filter+agg over the checkpointed state instead of
-        # a fresh anti-join (one join per iteration saved — measured ~20% off
-        # the 10-round sf0.1 wall time), and the update joins the prior state
-        # rather than rescanning the vertex table.
-        ranks = cut0(vertices
-                     .join(has_out.select(C("src").alias("id"),
-                                          F.lit(True).alias("__has")),
-                           "id", "left")
-                     .select("id", F.lit(1.0 / n).alias("rank"),
-                             F.coalesce(C("__has"), F.lit(False))
-                             .alias("has_out")))
-        for _it in range(iters):
-            dang = (ranks.filter(~C("has_out"))
-                    .agg(F.coalesce(F.sum("rank"), F.lit(0.0)).alias("__dang")))
-            contribs = (w_edges.join(ranks.select("id", "rank"),
-                                     C("src") == C("id"))
-                        .groupBy("dst")
-                        .agg(F.sum(C("rank") * C("w")).alias("contrib")))
-            # base = (1-d)/n + d*dang/n, evaluated in the same left-to-right
-            # double arithmetic as the oracle's recursive step.
-            base = (F.lit((1.0 - damping) / n)
-                    + F.lit(damping) * C("__dang") / F.lit(float(n)))
-            ranks = (ranks.select("id", "has_out")
-                     .join(contribs, C("id") == C("dst"), "left")
-                     .crossJoin(F.broadcast(dang))
-                     .select("id",
-                             (base
-                              + F.lit(damping) * F.coalesce(C("contrib"),
-                                                            F.lit(0.0)))
-                             .alias("rank"),
-                             "has_out"))
-            ranks = cut(ranks, _it)
-        return ranks.select("id", "rank")
-    finally:
-        if reliable_dir is not None and prev_ckpt_dir is not None:
-            sc.setCheckpointDir(prev_ckpt_dir)
+    n = vertices.count()
+    # Out-degree weights via a window over src: ONE pass over the edge
+    # subtree and one shuffle. The previous self-join form
+    # (edges ⋈ edges.groupBy(src).count) evaluated the edge subtree —
+    # here the full BLAS kNN construction — TWICE and paid an extra join
+    # (same recompute class as the r6 connected-components fix;
+    # interleaved A/B at sf0.1: 3.61 s → 3.16 s, ranks bit-identical).
+    w_edges = edges.select(
+        "src", "dst",
+        (1.0 / F.count(F.lit(1)).over(Window.partitionBy("src")))
+        .alias("w")).localCheckpoint(eager=False)
+    has_out = w_edges.select("src").distinct()
+    # Dangling-ness is a property of the GRAPH, not the iteration: resolve
+    # it once into a boolean carried on the rank state, so each round's
+    # dangling mass is a filter+agg over the checkpointed state instead of
+    # a fresh anti-join (one join per iteration saved — measured ~20% off
+    # the 10-round sf0.1 wall time), and the update joins the prior state
+    # rather than rescanning the vertex table.
+    ranks = (vertices
+             .join(has_out.select(C("src").alias("id"),
+                                  F.lit(True).alias("__has")),
+                   "id", "left")
+             .select("id", F.lit(1.0 / n).alias("rank"),
+                     F.coalesce(C("__has"), F.lit(False)).alias("has_out"))
+             .localCheckpoint(eager=False))
+    for _ in range(iters):
+        dang = (ranks.filter(~C("has_out"))
+                .agg(F.coalesce(F.sum("rank"), F.lit(0.0)).alias("__dang")))
+        contribs = (w_edges.join(ranks.select("id", "rank"),
+                                 C("src") == C("id"))
+                    .groupBy("dst")
+                    .agg(F.sum(C("rank") * C("w")).alias("contrib")))
+        # base = (1-d)/n + d*dang/n, evaluated in the same left-to-right
+        # double arithmetic as the oracle's recursive step.
+        base = (F.lit((1.0 - damping) / n)
+                + F.lit(damping) * C("__dang") / F.lit(float(n)))
+        ranks = (ranks.select("id", "has_out")
+                 .join(contribs, C("id") == C("dst"), "left")
+                 .crossJoin(F.broadcast(dang))
+                 .select("id",
+                         (base
+                          + F.lit(damping) * F.coalesce(C("contrib"),
+                                                        F.lit(0.0)))
+                         .alias("rank"),
+                         "has_out")
+                 .localCheckpoint(eager=False))
+    return ranks.select("id", "rank")
 
 
 # The oracle replays the SAME fixed-count power iteration as a bounded
@@ -193,13 +154,10 @@ def ext_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
              .select(C("vec_id").alias("src"), C("neighbor_id").alias("dst")))
     verts = (load_table(spark, sf_dir, "embeddings")
              .select(C("vec_id").alias("id")))
-    # eager_cuts=False: identical plan barriers, ~1 driver-synced job per
-    # round fewer (blocks materialize inside the next round's AQE stages).
-    # Interleaved 2x2 A/B incl. AQE on/off, ranks checked identical:
-    # scripts/probe_pagerank_lazy.py — lazy+AQE floors 2.31 s vs eager's
-    # 2.62 s at sf0.1; AQE-off loses badly (32 uncoalesced tasks/stage).
-    return (pagerank(verts, edges, damping=0.85, iters=10,
-                     eager_cuts=False)
+    # Lazy cuts + AQE (pagerank's fixed policy) floor 2.31 s vs eager's
+    # 2.62 s at sf0.1; AQE-off loses badly (32 uncoalesced tasks/stage):
+    # OPTIMIZATION_r11.md "ext_pagerank — lazy per-round lineage cuts".
+    return (pagerank(verts, edges, damping=0.85, iters=10)
             .select("id", (F.floor(C("rank") * 1e9 + 1e-3) / 1e9)
                     .alias("rank")))
 

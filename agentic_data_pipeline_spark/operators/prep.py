@@ -344,9 +344,9 @@ def _curation_q_batches(it):
 
 
 def _curation_q_jvm(docs: DataFrame) -> DataFrame:
-    """The pure-Catalyst quality branch — the r11 shipped form, kept as
-    the Arrow form's equality reference (tests/test_curation_q_arrow.py)
-    and the fallback outside the ASCII regime."""
+    """The pure-Catalyst quality branch — the r11 shipped form, kept only
+    as the equality reference that tests/test_curation_q_arrow.py compares
+    the Arrow form against; no operator routes to it."""
     from .text import quality_expr, tokens
 
     fp = F.md5(F.encode(F.lower(F.regexp_replace(C("text"), r"\s+", " ")),
@@ -542,7 +542,7 @@ def _prep_kept_batches(it):
       execution, never across runs.
     - score = (sum_bigint.as_double / n - 500.0) / 500.0 in the same
       left-to-right IEEE order as the Catalyst tree → bit-identical.
-    - fp = md5(lower(\\s+→' ' collapse)) for survivors only.
+    - fp = md5(lower(Java-\\s runs → ' ')) for survivors only.
 
     Bit-identity is pinned by tests/test_prep_arrow.py (full kept-set
     equality vs _prep_kept_jvm) and was asserted at sf0.1 AND sf10
@@ -605,8 +605,9 @@ def _prep_kept_batches(it):
         if not len(keep):
             continue
         take = pa.array(keep)
+        # Java's \s includes \x0b; RE2's does not — spell the class out.
         collapsed = pc.replace_substring_regex(
-            text.take(take), pattern=r"\s+", replacement=" ")
+            text.take(take), pattern="[ \t\n\x0b\f\r]+", replacement=" ")
         lowered = pc.utf8_lower(collapsed)
         fps = [hashlib.md5(s.encode()).hexdigest()
                for s in lowered.to_pylist()]
@@ -619,9 +620,9 @@ def _prep_kept_batches(it):
 
 def _prep_kept_jvm(docs: DataFrame) -> DataFrame:
     """The pure-Catalyst scored→kept twin of _prep_kept_batches — the r11
-    shipped form, kept as the equality reference (tests/test_prep_arrow.py
-    pins row-for-row identity every run) and as the fallback if the lake
-    ever leaves the printable-ASCII regime the Arrow form is pinned to."""
+    shipped form, kept only as the equality reference that
+    tests/test_prep_arrow.py compares the Arrow form against row for row;
+    no operator routes to it."""
     norm = F.trim(F.regexp_replace(F.lower(C("text")), "[^a-z0-9]+", " "))
     words = F.filter(F.split(norm, r"\s+"), lambda t: t != "")
     bucket = lambda t: (F.conv(F.substring(F.md5(t), 1, 8), 16, 10)  # noqa: E731

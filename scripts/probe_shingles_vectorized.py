@@ -42,7 +42,7 @@ SF_DIR = f"/root/repo/.tmp/{TIER}" if TIER not in ("sf0.1",) \
 PASSES = int(os.environ.get("SPARK_GRAFT_PASSES", "3"))
 
 
-def _shingle_batches_pyloop(n: int):
+def _shingle_batches_pyloop(n: int, id_col: str):
     """The d006892 body, verbatim — the before-variant."""
     def gen(it):
         import pyarrow as pa

@@ -329,9 +329,10 @@ def test_curation_pipeline_shape_r3(spark):
     # entirely (plans/r12/ext_curation_pipeline_*; probe_shingles_arrow.py)
     assert p.count("Window (") == 0
     assert "MapInArrow" in p
-    # row-at-a-time Python never allowed; MapInArrow is the only
-    # sanctioned Python boundary (guide §4.2)
+    # row-at-a-time Python never allowed, nor vectorized pandas UDFs;
+    # MapInArrow is the only sanctioned Python boundary (guide §4.2)
     assert "BatchEvalPython" not in p
+    assert "ArrowEvalPython" not in p
 
 
 def test_skew_report_is_two_phase_agg(spark):

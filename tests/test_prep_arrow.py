@@ -17,16 +17,24 @@ from agentic_data_pipeline_spark.catalog import load_table
 
 
 def test_prep_arrow_kept_set_matches_catalyst(spark):
-    for sf in (SF_SMOKE, SF_CORRECT):
-        if not os.path.exists(os.path.join(sf, "documents.parquet")):
-            continue
-        docs = load_table(spark, sf, "documents")
+    inputs = [(sf, load_table(spark, sf, "documents"))
+              for sf in (SF_SMOKE, SF_CORRECT)
+              if os.path.exists(os.path.join(sf, "documents.parquet"))]
+    # A 12-word survivor and its copy with three spaces as \x0b: Java's
+    # \s (the Catalyst fp) collapses \x0b like a space, so the Arrow fp
+    # must too, or the two exact duplicates get different fps.
+    doc = ("seven fox brown data every training over lazy corpus starts "
+           "before night")
+    inputs.append(("vt-whitespace", spark.createDataFrame(
+        [(1, doc), (2, doc.replace(" ", "\x0b", 3))],
+        "doc_id bigint, text string")))
+    for name, docs in inputs:
         arrow = docs.select("doc_id", "text").mapInArrow(
             _prep_kept_batches, "doc_id bigint, n_tokens bigint, fp string")
         a = sorted(map(tuple, arrow.collect()))
         j = sorted(map(tuple, _prep_kept_jvm(docs).collect()))
-        assert a, f"{sf}: empty kept set — the filter check is vacuous"
-        assert a == j, f"{sf}: Arrow kept set diverges from Catalyst"
+        assert a, f"{name}: empty kept set — the filter check is vacuous"
+        assert a == j, f"{name}: Arrow kept set diverges from Catalyst"
 
 
 def test_prep_pipeline_emits_all_16_shards(spark):

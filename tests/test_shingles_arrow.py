@@ -4,6 +4,8 @@ distinct (id, s) set the r8→r11 window form produces, for both the
 n=3 (minhash family) and n=8 (decontamination/curation) geometries —
 including the short-document (< n tokens) and zero-token corners."""
 
+import pytest
+from pyspark.errors import PythonException
 from pyspark.sql import functions as F
 
 from tests.conftest import SF_SMOKE
@@ -61,3 +63,11 @@ def test_shingles_non_bigint_id_falls_back(spark):
     df = spark.createDataFrame([("k1", "a b c d")], "k string, text string")
     out = sorted(map(tuple, shingles_exploded(df, "k", "text", 3).collect()))
     assert out == [("k1", "a b c"), ("k1", "b c d")]
+
+
+def test_shingles_null_id_is_rejected_with_clear_error(spark):
+    df = spark.createDataFrame([(1, "a b c d"), (None, "e f g h")],
+                               "doc_id long, text string")
+    with pytest.raises(PythonException,
+                       match=r"ValueError: .*id column 'doc_id'.*nulls"):
+        shingles_exploded(df, "doc_id", "text", 3).collect()
