@@ -11,7 +11,7 @@ Four strategies, all shaped for 100 TB:
   shuffle is the band-bucket self-join, which is how the pair space stays
   sub-quadratic at scale.
 - SimHash: token-hash bit-vote fingerprint; near-dup candidates share a
-  16-bit band (4 bands ⇒ finds all pairs within Hamming distance 3).
+  band (4 bands ⇒ finds all pairs within Hamming distance 3).
 - n-gram Jaccard: the exact verifier, exposed as its own operator.
 
 Exact/ngram ops are DuckDB-oracle-checked. The production minhash/simhash
@@ -21,6 +21,20 @@ LSH construction over an md5 hash family both engines share, hash-green
 end-to-end including candidate generation (reference has no dedup at all;
 design follows the standard MinHash-LSH construction from Broder '97 /
 MMDS ch.3).
+
+Each hash family builds only its own signatures and band keys; everything
+after that has one implementation shared by both families:
+
+- ``_minhash_verify``: band collide → distinct pairs → shingle-set
+  verify joins → Jaccard threshold (minhash_candidates,
+  minhash_candidates_md5, and the admission ops through ``_admit``);
+- ``_admit``: incoming-vs-existing admission decisions
+  (ext_dedup_incremental_fuzzy and streaming_ops.stream_dedup_fuzzy);
+- ``_simhash_table`` / ``_simhash_pairs``: bit-vote band table and
+  band collide → Hamming verify (64-bit xxhash64 in 4×16, 60-bit md5
+  in 4×15);
+- ``_clusters``: verified pairs → connected components → one survivor
+  row per cluster.
 """
 
 from __future__ import annotations
@@ -36,6 +50,12 @@ C = F.col
 NUM_HASHES = 32          # minhash signature length
 BANDS = 8                # 8 bands × 4 rows: catches pairs from J≈0.5 up
 ROWS_PER_BAND = NUM_HASHES // BANDS
+
+# Entry cap for the per-task hash memo dicts in the Arrow passes
+# (_md5_sig_batches here, _prep_kept_batches in prep.py): a full memo is
+# cleared and refilled, so per-task memory stays bounded on any
+# vocabulary while a Zipfian stream's hot strings keep hitting.
+MEMO_CAP = 65_536
 
 
 def normalized_tokens(text: Column) -> Column:
@@ -231,23 +251,48 @@ def _shingles_exploded_jvm(df: DataFrame, id_col: str, text_col: str,
             .distinct())
 
 
-def minhash_signature(shingles: Column, num_hashes: int = NUM_HASHES) -> Column:
-    """k independent minhashes: min over shingles of xxhash64(shingle, seed).
-
-    xxhash64 is a Spark built-in (JVM, codegen) — the whole signature is one
-    projection, no UDF, no shuffle.
-    """
-    return F.array(*[
-        F.array_min(F.transform(shingles, lambda s: F.xxhash64(s, F.lit(i))))
-        for i in range(num_hashes)
-    ])
-
-
 def jaccard(a: Column, b: Column) -> Column:
     """Exact Jaccard over distinct-element arrays."""
     inter = F.size(F.array_intersect(a, b)).cast("double")
     union = F.size(a) + F.size(b) - F.size(F.array_intersect(a, b))
     return inter / union
+
+
+def _minhash_verify(bands: DataFrame, sets: DataFrame, threshold: float,
+                    against: tuple[DataFrame, DataFrame] | None = None
+                    ) -> DataFrame:
+    """The MinHash-LSH tail both hash families and both admission paths
+    share: band-collide on ``(band, bh)``, keep distinct ``(a_id, b_id)``,
+    join both sides' shingle sets onto the survivors only (no shingle
+    array ever rides a band join), keep ``jaccard ≥ threshold``.
+
+    ``bands`` are ``(id, band, bh)`` rows and ``sets`` ``(id, sh)`` rows.
+    With ``against=None`` the side collides with itself and keeps
+    ``a_id < b_id``; otherwise ``against`` is the other side's
+    ``(bands, sets)`` and supplies ``b_id``. Returns ``(a_id, b_id,
+    jaccard)`` unrounded — each caller applies its own output rounding.
+    """
+    b_bands, b_sets = against or (bands, sets)
+    key = ["band", "bh"]
+    cand = (bands.select(C("id").alias("a_id"), *key)
+            .join(b_bands.select(C("id").alias("b_id"), *key), key))
+    if against is None:
+        cand = cand.filter(C("a_id") < C("b_id"))
+    cand = cand.select("a_id", "b_id").dropDuplicates(["a_id", "b_id"])
+
+    # The verify sets are CORPUS-sized (one shingle array per doc) and
+    # their post-aggregate size estimate is unreliable — Spark picked a
+    # broadcast at the 1M-doc probe tier and OOM'd the driver. Pin both
+    # verify joins to shuffle joins on the id (the 100 TB shape: the
+    # candidate stream and the sets co-partition by doc id).
+    def side(df: DataFrame, p: str) -> DataFrame:
+        return df.hint("shuffle_hash").select(C("id").alias(f"{p}_id"),
+                                              C("sh").alias(f"{p}_sh"))
+
+    pairs = cand.join(side(sets, "a"), "a_id").join(side(b_sets, "b"), "b_id")
+    j = jaccard(C("a_sh"), C("b_sh"))
+    return (pairs.filter(j >= threshold)
+            .select("a_id", "b_id", j.alias("jaccard")))
 
 
 def minhash_candidates(df: DataFrame, id_col: str, text_col: str,
@@ -285,67 +330,9 @@ def minhash_candidates(df: DataFrame, id_col: str, text_col: str,
             for b in range(BANDS)
         ])).alias("bb"),
     ).select("id", "bb.band", "bb.bh")
-    a = bands.select(C("id").alias("a_id"), "band", "bh")
-    b = bands.select(C("id").alias("b_id"), "band", "bh")
-    cand = (
-        a.join(b, ["band", "bh"])
-        .filter(C("a_id") < C("b_id"))
-        .select("a_id", "b_id")
-        .dropDuplicates(["a_id", "b_id"])
-    )
-    # The verify sets are CORPUS-sized (one shingle array per doc) and
-    # their post-aggregate size estimate is unreliable — Spark picked a
-    # broadcast at the 1M-doc probe tier and OOM'd the driver. Pin both
-    # verify joins to shuffle joins on the id (the 100 TB shape: the
-    # candidate stream and the sets co-partition by doc id).
-    sets = (sh.groupBy("id").agg(F.collect_set("s").alias("sh"))
-            .hint("shuffle_hash"))
-    pairs = (
-        cand.join(sets.select(C("id").alias("a_id"), C("sh").alias("a_sh")),
-                  "a_id")
-        .join(sets.select(C("id").alias("b_id"), C("sh").alias("b_sh")),
-              "b_id")
-    )
-    j = jaccard(C("a_sh"), C("b_sh"))
-    return (
-        pairs.filter(j >= jaccard_threshold)
-        .select("a_id", "b_id", F.round(j, 6).alias("jaccard"))
-    )
-
-
-def simhash_bands(text: Column) -> Column:
-    """SimHash as 4×16-bit band values (array<bigint> of length 4).
-
-    Per-token xxhash64 → per-bit ±1 votes folded in one JVM aggregate over
-    the token array (no explode, no shuffle — a pure per-row projection);
-    positive vote → bit set. Kept as 16-bit bands rather than one int64:
-    bands are exactly what LSH blocking joins on, and assembling the high
-    bit of an int64 would overflow under ANSI mode.
-    """
-    toks = normalized_tokens(text)
-    # votes[i] ∈ [-|toks|, |toks|]: +1 when bit i of the token hash is set.
-    def bit_votes(t: Column) -> Column:
-        h = F.xxhash64(t)
-        return F.array(*[
-            F.when(F.shiftright(h, i).bitwiseAND(F.lit(1)) == 1, 1).otherwise(-1)
-            for i in range(64)
-        ])
-
-    votes = F.aggregate(
-        toks,
-        F.array_repeat(F.lit(0), 64),
-        lambda acc, t: F.zip_with(acc, bit_votes(t), lambda a, v: a + v),
-    )
-    pow2 = F.array(*[F.lit(1 << j).cast("bigint") for j in range(16)])
-    return F.array(*[
-        F.aggregate(
-            F.zip_with(F.slice(votes, b * 16 + 1, 16), pow2,
-                       lambda v, p: F.when(v > 0, p).otherwise(F.lit(0).cast("bigint"))),
-            F.lit(0).cast("bigint"),
-            lambda acc, x: acc + x,
-        )
-        for b in range(4)
-    ])
+    sets = sh.groupBy("id").agg(F.collect_set("s").alias("sh"))
+    return (_minhash_verify(bands, sets, jaccard_threshold)
+            .select("a_id", "b_id", F.round("jaccard", 6).alias("jaccard")))
 
 
 def hamming_bands(a: Column, b: Column) -> Column:
@@ -357,60 +344,80 @@ def hamming_bands(a: Column, b: Column) -> Column:
     )
 
 
-def simhash_band_table(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
+def _simhash_table(df: DataFrame, id_col: str, text_col: str, h: Column,
+                   bits: int, nbands: int) -> DataFrame:
     """``(id, sh)`` SimHash band table from the EXPLODED token stream.
 
-    Semantics identical to simhash_bands, but the 64 per-bit ±1 votes are
-    64 plain SUM aggregates over exploded tokens — all codegen, map-side
-    partial sums, one ≈1-row/doc shuffle. The per-row HOF fold
-    (aggregate + zip_with, interpreted per token × 64 bits) measured 24 s
-    at sf0.1; this plan runs it in ~1 s. simhash_bands remains for
-    single-row/driver use. Zero-token docs are absent here (the HOF form
-    gives them all-zero bands) — none exist in the fixtures, and a doc
-    with no alnum tokens has no meaningful simhash anyway.
+    ``h`` is the token-hash expression over the exploded token column
+    ``t``; its low ``bits`` bits each get a ±1 vote per token, summed as
+    ``bits`` plain SUM aggregates — all codegen, map-side partial sums,
+    one ≈1-row/doc shuffle (the per-row HOF fold, aggregate + zip_with
+    interpreted per token × 64 bits, measured 24 s at sf0.1; this plan
+    runs it in ~1 s). A positive vote sets the bit; ``sh`` holds
+    ``nbands`` bigint bands of ``bits // nbands`` bits each — bands are
+    exactly what LSH blocking joins on, and assembling the high bit of an
+    int64 would overflow under ANSI mode. Zero-token docs are absent (a
+    doc with no alnum tokens has no meaningful simhash).
     """
     toks = normalized_tokens(C(text_col))
     ex = df.select(C(id_col).alias("id"), F.explode(toks).alias("t"))
-    h = F.xxhash64("t")
     votes = [
         F.sum(F.when(F.shiftright(h, i).bitwiseAND(F.lit(1)) == 1, 1)
               .otherwise(-1)).alias(f"v{i}")
-        for i in range(64)
+        for i in range(bits)
     ]
     v = ex.groupBy("id").agg(*votes)
+    width = bits // nbands
     band_cols = []
-    for b in range(4):
+    for b in range(nbands):
         acc = F.lit(0).cast("bigint")
-        for j in range(16):
-            acc = acc + F.when(C(f"v{b * 16 + j}") > 0,
+        for j in range(width):
+            acc = acc + F.when(C(f"v{b * width + j}") > 0,
                                F.lit(1 << j).cast("bigint")) \
                          .otherwise(F.lit(0).cast("bigint"))
         band_cols.append(acc.alias(f"bh{b}"))
     return v.select("id", F.array(*band_cols).alias("sh"))
 
 
-def simhash_candidates(df: DataFrame, id_col: str, text_col: str,
-                       max_hamming: int = 3) -> DataFrame:
-    """SimHash near-dup pairs: 4×16-bit band join guarantees recall for
-    Hamming ≤ 3 (pigeonhole), then exact Hamming verify."""
-    sh = simhash_band_table(df, id_col, text_col)
+def _simhash_pairs(sh: DataFrame, nbands: int,
+                   max_hamming: int) -> DataFrame:
+    """SimHash tail for both hash families: explode each ``(id, sh)`` row
+    into its ``nbands`` band rows, band-collide on ``(band, bh)`` (with
+    4 bands, pigeonhole guarantees recall for Hamming ≤ 3), then exact
+    Hamming verify on the distinct surviving pairs only — no all-pairs
+    anywhere. Returns ``(a_id, b_id, hamming)`` with an int distance."""
+    key = ["band", "bh"]
     bands = sh.select(
         "id", "sh",
         F.explode(F.array(*[
             F.struct(F.lit(b).alias("band"), C("sh").getItem(b).alias("bh"))
-            for b in range(4)
+            for b in range(nbands)
         ])).alias("bb"),
     ).select("id", "sh", "bb.band", "bb.bh")
-    a = bands.select(C("id").alias("a_id"), C("sh").alias("a_sh"), "band", "bh")
-    b = bands.select(C("id").alias("b_id"), C("sh").alias("b_sh"), "band", "bh")
+    a = bands.select(C("id").alias("a_id"), C("sh").alias("a_sh"), *key)
+    b = bands.select(C("id").alias("b_id"), C("sh").alias("b_sh"), *key)
     return (
-        a.join(b, ["band", "bh"])
+        a.join(b, key)
         .filter(C("a_id") < C("b_id"))
         .dropDuplicates(["a_id", "b_id"])
         .withColumn("hamming", hamming_bands(C("a_sh"), C("b_sh")))
         .filter(C("hamming") <= max_hamming)
         .select("a_id", "b_id", "hamming")
     )
+
+
+def simhash_band_table(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
+    """``(id, sh)`` SimHash table over xxhash64 token hashes: 4×16-bit
+    bands of the full 64-bit hash."""
+    return _simhash_table(df, id_col, text_col, F.xxhash64("t"), 64, 4)
+
+
+def simhash_candidates(df: DataFrame, id_col: str, text_col: str,
+                       max_hamming: int = 3) -> DataFrame:
+    """SimHash near-dup pairs: 4×16-bit band join guarantees recall for
+    Hamming ≤ 3 (pigeonhole), then exact Hamming verify."""
+    return _simhash_pairs(simhash_band_table(df, id_col, text_col), 4,
+                          max_hamming)
 
 
 # ------------------------------------------------------------ registrations
@@ -470,8 +477,9 @@ def _md5_sig_batches(it):
     (dictionary_encode), and a per-TASK cache carries the 32-vector
     across batches (md5 is pure; on a Zipfian shingle stream the task
     dictionary ≪ the row stream — within-execution memoization, never
-    cross-run). Per-id minima come from one reduceat over the id-sorted
-    gather — no per-row Python."""
+    cross-run; cleared when it reaches MEMO_CAP entries). Per-id minima
+    come from one reduceat over the id-sorted gather — no per-row
+    Python."""
     import hashlib
 
     import numpy as np
@@ -483,6 +491,8 @@ def _md5_sig_batches(it):
     def hvec(s: str) -> np.ndarray:
         v = cache.get(s)
         if v is None:
+            if len(cache) >= MEMO_CAP:
+                cache.clear()
             b = s.encode()
             v = np.array(
                 [int(hashlib.md5(p + b).hexdigest()[:15], 16)
@@ -587,33 +597,18 @@ def minhash_candidates_md5(df: DataFrame, id_col: str, text_col: str,
 
     h_i(s) = int(md5(f"{i}:{s}")[:15 hex]) — 60 bits, fits signed 64 on
     both engines; band key = md5 of the comma-joined 4-row slice. Same
-    plan as the xxhash64 path (checkpointed exploded-shingle stream,
-    partial mins, band-bucket self-join, verify-join on survivors only);
-    the md5 family costs ~4× the whole-op time of xxhash64 (measured,
-    BASELINE.md), which is exactly why the PRODUCTION op keeps the
-    engine hash and this variant exists for cross-engine audit.
+    tail as the xxhash64 path (_minhash_verify: band-bucket self-join,
+    verify-join on survivors only); only the signature pass differs — a
+    checkpointed exploded-shingle stream feeding Arrow partial mins
+    (_md5_bands_and_sets). The md5 family costs ~4× the whole-op time of
+    xxhash64 (measured, BASELINE.md), which is exactly why the
+    PRODUCTION op keeps the engine hash and this variant exists for
+    cross-engine audit.
     """
     bands, sets = _md5_bands_and_sets(df, id_col, text_col)
-    a = bands.select(C("id").alias("a_id"), "band", "bh")
-    b = bands.select(C("id").alias("b_id"), "band", "bh")
-    cand = (
-        a.join(b, ["band", "bh"])
-        .filter(C("a_id") < C("b_id"))
-        .select("a_id", "b_id")
-        .dropDuplicates(["a_id", "b_id"])
-    )
-    pairs = (
-        cand.join(sets.select(C("id").alias("a_id"), C("sh").alias("a_sh")),
-                  "a_id")
-        .join(sets.select(C("id").alias("b_id"), C("sh").alias("b_sh")),
-              "b_id")
-    )
-    j = jaccard(C("a_sh"), C("b_sh"))
-    return (
-        pairs.filter(j >= jaccard_threshold)
-        .select("a_id", "b_id",
-                (F.floor(j * 1e6) / 1e6).alias("jaccard"))
-    )
+    return (_minhash_verify(bands, sets, jaccard_threshold)
+            .select("a_id", "b_id",
+                    (F.floor(C("jaccard") * 1e6) / 1e6).alias("jaccard")))
 
 
 _GRAMS_SQL = r"""
@@ -672,7 +667,8 @@ def ext_dedup_minhash_md5(spark: SparkSession, sf_dir: str) -> DataFrame:
     including which true pairs banding probabilistically misses — not
     just the verifier arithmetic (the previous limit of the adjuncts).
     The production op (ext_dedup_minhash) keeps JVM xxhash64 for ~10×
-    cheaper signatures; the plans are identical."""
+    cheaper signatures; both share the candidate → verify tail
+    (_minhash_verify)."""
     docs = load_table(spark, sf_dir, "documents")
     return minhash_candidates_md5(docs, "doc_id", "text",
                                   jaccard_threshold=0.5) \
@@ -682,60 +678,6 @@ def ext_dedup_minhash_md5(spark: SparkSession, sf_dir: str) -> DataFrame:
 _SIMHASH_MD5_BITS = 60       # 15 hex digits of md5 → fits signed 64 both engines
 _SIMHASH_MD5_BANDS = 4       # 4×15-bit bands ⇒ recall guaranteed for Hamming ≤ 3
 _SIMHASH_MD5_BAND_BITS = _SIMHASH_MD5_BITS // _SIMHASH_MD5_BANDS
-
-
-def simhash_md5_band_table(df: DataFrame, id_col: str,
-                           text_col: str) -> DataFrame:
-    """``(id, sh)`` SimHash band table over an md5-derived 60-bit token
-    hash — the AUDITABLE twin of simhash_band_table: both engines md5 the
-    identical token strings, so fingerprints, band keys, candidates and
-    Hamming distances are cross-engine exact. Same plan as the xxhash64
-    path: 60 plain SUM vote aggregates over exploded tokens (codegen,
-    map-side partial sums, one ≈1-row/doc shuffle)."""
-    toks = normalized_tokens(C(text_col))
-    ex = df.select(C(id_col).alias("id"), F.explode(toks).alias("t"))
-    h = F.conv(F.substring(F.md5(C("t")), 1, 15), 16, 10).cast("bigint")
-    votes = [
-        F.sum(F.when(F.shiftright(h, i).bitwiseAND(F.lit(1)) == 1, 1)
-              .otherwise(-1)).alias(f"v{i}")
-        for i in range(_SIMHASH_MD5_BITS)
-    ]
-    v = ex.groupBy("id").agg(*votes)
-    band_cols = []
-    for b in range(_SIMHASH_MD5_BANDS):
-        acc = F.lit(0).cast("bigint")
-        for j in range(_SIMHASH_MD5_BAND_BITS):
-            acc = acc + F.when(C(f"v{b * _SIMHASH_MD5_BAND_BITS + j}") > 0,
-                               F.lit(1 << j).cast("bigint")) \
-                         .otherwise(F.lit(0).cast("bigint"))
-        band_cols.append(acc.alias(f"bh{b}"))
-    return v.select("id", F.array(*band_cols).alias("sh"))
-
-
-def simhash_candidates_md5(df: DataFrame, id_col: str, text_col: str,
-                           max_hamming: int = 3) -> DataFrame:
-    """simhash_candidates with the md5 hash family: band-bucket self-join
-    (pigeonhole recall for Hamming ≤ 3 over 4×15-bit bands), exact
-    Hamming verify on survivors only — no all-pairs anywhere."""
-    sh = simhash_md5_band_table(df, id_col, text_col)
-    bands = sh.select(
-        "id", "sh",
-        F.explode(F.array(*[
-            F.struct(F.lit(b).alias("band"), C("sh").getItem(b).alias("bh"))
-            for b in range(_SIMHASH_MD5_BANDS)
-        ])).alias("bb"),
-    ).select("id", "sh", "bb.band", "bb.bh")
-    a = bands.select(C("id").alias("a_id"), C("sh").alias("a_sh"), "band", "bh")
-    b = bands.select(C("id").alias("b_id"), C("sh").alias("b_sh"), "band", "bh")
-    return (
-        a.join(b, ["band", "bh"])
-        .filter(C("a_id") < C("b_id"))
-        .dropDuplicates(["a_id", "b_id"])
-        .withColumn("hamming", hamming_bands(C("a_sh"), C("b_sh"))
-                    .cast("bigint"))
-        .filter(C("hamming") <= max_hamming)
-        .select("a_id", "b_id", "hamming")
-    )
 
 
 _SIMHASH_TOK_SQL = r"""
@@ -795,10 +737,17 @@ def ext_dedup_simhash_md5(spark: SparkSession, sf_dir: str) -> DataFrame:
     the oracle pins candidate GENERATION — which pairs share a band —
     and the verified Hamming distances, not just plausible output. The
     production op (ext_dedup_simhash) keeps JVM xxhash64 for cheaper
-    fingerprints; the plans are identical."""
+    fingerprints; both run the same band-table builder (_simhash_table)
+    and Hamming tail (_simhash_pairs), differing only in the token hash —
+    both engines md5 the identical token strings, so fingerprints, band
+    keys, candidates and distances are cross-engine exact."""
     docs = load_table(spark, sf_dir, "documents")
-    return simhash_candidates_md5(docs, "doc_id", "text", max_hamming=3) \
-        .orderBy("a_id", "b_id")
+    h = F.conv(F.substring(F.md5(C("t")), 1, 15), 16, 10).cast("bigint")
+    sh = _simhash_table(docs, "doc_id", "text", h, _SIMHASH_MD5_BITS,
+                        _SIMHASH_MD5_BANDS)
+    return (_simhash_pairs(sh, _SIMHASH_MD5_BANDS, max_hamming=3)
+            .withColumn("hamming", C("hamming").cast("bigint"))
+            .orderBy("a_id", "b_id"))
 
 
 INC_FUZZY_ORACLE = f"""
@@ -846,6 +795,29 @@ INC_FUZZY_ORACLE = f"""
 """
 
 
+def _admit(incoming: DataFrame, inc: tuple[DataFrame, DataFrame],
+           existing: tuple[DataFrame, DataFrame]) -> DataFrame:
+    """Fuzzy-dedup admission decisions ``(doc_id, admitted, n_dup_of,
+    best_j)``, one row per ``incoming`` doc: a doc is rejected when any
+    band collision with the existing side verifies at Jaccard ≥ 0.5;
+    ``n_dup_of`` counts the distinct existing docs that verified and
+    ``best_j`` is the best Jaccard (null when admitted). ``inc`` and
+    ``existing`` are each side's md5 ``(bands, sets)``
+    (_md5_bands_and_sets). Shared by ext_dedup_incremental_fuzzy and the
+    streaming twin streaming_ops.stream_dedup_fuzzy."""
+    hits = (_minhash_verify(*inc, 0.5, against=existing)
+            .groupBy("a_id")
+            .agg(F.countDistinct("b_id").alias("__n"),
+                 F.max("jaccard").alias("__bj")))
+    return (incoming.select("doc_id")
+            .join(hits, C("doc_id") == C("a_id"), "left")
+            .select("doc_id",
+                    C("a_id").isNull().alias("admitted"),
+                    F.coalesce(C("__n"), F.lit(0).cast("bigint"))
+                    .alias("n_dup_of"),
+                    (F.floor(C("__bj") * 1e6) / 1e6).alias("best_j")))
+
+
 @op("ext_dedup_incremental_fuzzy", oracle=INC_FUZZY_ORACLE)
 def ext_dedup_incremental_fuzzy(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental FUZZY-dedup admission — the production shape for a
@@ -856,9 +828,10 @@ def ext_dedup_incremental_fuzzy(spark: SparkSession, sf_dir: str) -> DataFrame:
     family: ext_dedup_incremental (cdc.py) gates on exact fingerprints,
     this op gates on near-duplicates.
 
-    Uses the md5 hash family (_md5_bands_and_sets), so the whole decision
-    — band collisions, verification, admit/reject — is hash-green against
-    the DuckDB replay. Scale shape: the existing side's bands/sets are
+    Uses the md5 hash family (_md5_bands_and_sets) and the shared
+    admission tail (_admit), so the whole decision — band collisions,
+    verification, admit/reject — is hash-green against the DuckDB
+    replay. Scale shape: the existing side's bands/sets are
     exactly what a production run keeps PERSISTED between batches (write
     once, join per batch); the incoming batch is small, so the band join
     broadcasts it — per-batch cost is proportional to the batch, not the
@@ -871,30 +844,9 @@ def ext_dedup_incremental_fuzzy(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = docs.crossJoin(F.broadcast(mid))
     existing = d.filter(C("doc_id") < C("__mid"))
     incoming = d.filter(C("doc_id") >= C("__mid"))
-    eb, es = _md5_bands_and_sets(existing, "doc_id", "text")
-    ib, iset = _md5_bands_and_sets(incoming, "doc_id", "text")
-    cand = (ib.select(C("id").alias("inc_id"), "band", "bh")
-            .join(eb.select(C("id").alias("ex_id"), "band", "bh"),
-                  ["band", "bh"])
-            .select("inc_id", "ex_id")
-            .dropDuplicates(["inc_id", "ex_id"]))
-    pairs = (cand
-             .join(iset.select(C("id").alias("inc_id"),
-                               C("sh").alias("a_sh")), "inc_id")
-             .join(es.select(C("id").alias("ex_id"),
-                             C("sh").alias("b_sh")), "ex_id"))
-    j = jaccard(C("a_sh"), C("b_sh"))
-    agg = (pairs.filter(j >= 0.5)
-           .groupBy("inc_id")
-           .agg(F.countDistinct("ex_id").alias("__n"),
-                F.max(j).alias("__bj")))
-    return (incoming.select("doc_id")
-            .join(agg, C("doc_id") == C("inc_id"), "left")
-            .select("doc_id",
-                    C("inc_id").isNull().alias("admitted"),
-                    F.coalesce(C("__n"), F.lit(0).cast("bigint"))
-                    .alias("n_dup_of"),
-                    (F.floor(C("__bj") * 1e6) / 1e6).alias("best_j")))
+    ex = _md5_bands_and_sets(existing, "doc_id", "text")
+    return _admit(incoming, _md5_bands_and_sets(incoming, "doc_id", "text"),
+                  ex)
 
 
 @op("ext_dedup_ngram", oracle=r"""
@@ -1189,6 +1141,21 @@ def connected_components_star(vertices: DataFrame, edges: DataFrame,
                     .alias("component_id")))
 
 
+def _clusters(docs: DataFrame, pairs: DataFrame) -> DataFrame:
+    """Verified near-dup pairs ``(a_id, b_id)`` over the ``docs`` corpus
+    → connected components → one row per cluster: ``survivor_id`` (the
+    min doc_id), ``n_members`` and ``is_dup_cluster``. Singletons are
+    emitted too, so the output is a total partition of ``docs``."""
+    edges = pairs.select(C("a_id").alias("s"), C("b_id").alias("t"))
+    vertices = docs.select(C("doc_id").alias("id"))
+    comp = connected_components(vertices, edges)
+    return (comp.groupBy("component_id")
+            .agg(F.count(F.lit(1)).alias("n_members"))
+            .select(C("component_id").alias("survivor_id"),
+                    "n_members",
+                    (C("n_members") > 1).alias("is_dup_cluster")))
+
+
 @op("ext_dedup_components_star", oracle="""
     WITH RECURSIVE pairs AS (
         SELECT a.vec_id AS a_id, b.vec_id AS b_id
@@ -1359,15 +1326,7 @@ def ext_dedup_minhash_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     → CC → survivor composition on the md5 construction).
     """
     docs = load_table(spark, sf_dir, "documents")
-    pairs = minhash_candidates(docs, "doc_id", "text", 0.5)
-    edges = pairs.select(C("a_id").alias("s"), C("b_id").alias("t"))
-    vertices = docs.select(C("doc_id").alias("id"))
-    comp = connected_components(vertices, edges)
-    return (comp.groupBy("component_id")
-            .agg(F.count(F.lit(1)).alias("n_members"))
-            .select(C("component_id").alias("survivor_id"),
-                    "n_members",
-                    (C("n_members") > 1).alias("is_dup_cluster")))
+    return _clusters(docs, minhash_candidates(docs, "doc_id", "text", 0.5))
 
 
 @op("ext_dedup_clusters_bounded", oracle=r"""
@@ -1432,16 +1391,8 @@ def ext_dedup_clusters_bounded(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = (
         a.join(F.broadcast(b), C("b_id") > C("a_id"))
         .filter(jaccard(C("a_g"), C("b_g")) >= 0.5)
-        .select("a_id", "b_id")
     )
-    edges = pairs.select(C("a_id").alias("s"), C("b_id").alias("t"))
-    vertices = docs.select(C("doc_id").alias("id"))
-    comp = connected_components(vertices, edges)
-    return (comp.groupBy("component_id")
-            .agg(F.count(F.lit(1)).alias("n_members"))
-            .select(C("component_id").alias("survivor_id"),
-                    "n_members",
-                    (C("n_members") > 1).alias("is_dup_cluster")))
+    return _clusters(docs, pairs)
 
 
 # Exact-substring window geometry: 8-token windows (stride 1) are long

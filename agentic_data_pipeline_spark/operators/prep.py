@@ -538,8 +538,9 @@ def _prep_kept_batches(it):
       per token: md5 is pure, so hashing each distinct word once and
       fanning out through the dictionary indices is value-identical —
       and on any Zipfian corpus the per-batch dictionary is tiny
-      relative to the token stream. This is memoization inside one
-      execution, never across runs.
+      relative to the token stream. A per-task cache carries buckets
+      across batches (cleared at dedup.MEMO_CAP entries) — memoization
+      inside one execution, never across runs.
     - score = (sum_bigint.as_double / n - 500.0) / 500.0 in the same
       left-to-right IEEE order as the Catalyst tree → bit-identical.
     - fp = md5(lower(Java-\\s runs → ' ')) for survivors only.
@@ -553,11 +554,15 @@ def _prep_kept_batches(it):
     import pyarrow as pa
     import pyarrow.compute as pc
 
+    from .dedup import MEMO_CAP
+
     bucket_cache: dict[str, int] = {}
 
     def bucket(w: str) -> int:
         b = bucket_cache.get(w)
         if b is None:
+            if len(bucket_cache) >= MEMO_CAP:
+                bucket_cache.clear()
             b = int(hashlib.md5(w.encode()).hexdigest()[:8], 16) % 1001
             bucket_cache[w] = b
         return b

@@ -422,17 +422,18 @@ def stream_dedup_fuzzy_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: this is the real continuous-ingest topology — the band
     index is the state a production job persists (here: block-manager
     checkpoints; in production: a Delta/parquet table appended per
-    batch); per-batch cost tracks the batch (probe_incremental_fuzzy.py
-    measures it flat under 16× corpus growth).
+    batch); per-batch cost tracks the batch (BASELINE.md "Round-5 probe:
+    incremental fuzzy-dedup admission growth" measured it flat under 16×
+    corpus growth). Each batch's decisions come from the same admission
+    tail as the batch op (dedup._admit).
     """
     import uuid as _uuid
 
-    from ..operators.dedup import _md5_bands_and_sets, jaccard
+    from ..operators.dedup import _admit, _md5_bands_and_sets
     from ..operators.reference_ops import (
         _lake_fp, _materialize_once, _sf_scratch,
     )
 
-    C = F.col
     src = _sf_scratch(sf_dir, "stream_fuzzy_src")
 
     def write_src() -> None:
@@ -464,30 +465,8 @@ def stream_dedup_fuzzy_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         bands, sets = _md5_bands_and_sets(bdf, "doc_id", "text")
         bands, sets = bands.localCheckpoint(), sets.localCheckpoint()
         if "bands" in state:
-            eb, es = state["bands"], state["sets"]
-            cand = (bands.select(C("id").alias("inc_id"), "band", "bh")
-                    .join(eb.select(C("id").alias("ex_id"), "band", "bh"),
-                          ["band", "bh"])
-                    .select("inc_id", "ex_id")
-                    .dropDuplicates(["inc_id", "ex_id"]))
-            pairs = (cand
-                     .join(sets.select(C("id").alias("inc_id"),
-                                       C("sh").alias("a_sh")), "inc_id")
-                     .join(es.select(C("id").alias("ex_id"),
-                                     C("sh").alias("b_sh")), "ex_id"))
-            j = jaccard(C("a_sh"), C("b_sh"))
-            agg = (pairs.filter(j >= 0.5)
-                   .groupBy("inc_id")
-                   .agg(F.countDistinct("ex_id").alias("__n"),
-                        F.max(j).alias("__bj")))
             decisions.append(
-                bdf.select("doc_id")
-                .join(agg, C("doc_id") == C("inc_id"), "left")
-                .select("doc_id",
-                        C("inc_id").isNull().alias("admitted"),
-                        F.coalesce(C("__n"), F.lit(0).cast("bigint"))
-                        .alias("n_dup_of"),
-                        (F.floor(C("__bj") * 1e6) / 1e6).alias("best_j"))
+                _admit(bdf, (bands, sets), (state["bands"], state["sets"]))
                 .localCheckpoint())
             state["bands"] = state["bands"].unionByName(bands)
             state["sets"] = state["sets"].unionByName(sets)

@@ -12,6 +12,7 @@ from pyspark.sql import functions as F
 from tests.conftest import SF_SMOKE
 
 from agentic_data_pipeline_spark.catalog import load_table
+from agentic_data_pipeline_spark.operators import dedup
 from agentic_data_pipeline_spark.operators.dedup import (
     NUM_HASHES, _SIG_ARROW_SCHEMA, _md5_sig_batches, _md5_sig_jvm,
     shingles_exploded,
@@ -63,3 +64,26 @@ def test_md5_sig_partial_minima_merge_across_batches():
     assert merged7 == want7
     want8 = [_h(i, "x y z") for i in range(NUM_HASHES)]
     assert rows[8][0] == want8
+
+
+def _sig_rows(batches) -> list[tuple]:
+    return [tuple(r.values()) for out in _md5_sig_batches(batches)
+            for r in out.to_pylist()]
+
+
+def test_md5_sig_memo_cap_keeps_output_exact(monkeypatch):
+    """The per-task hash memo is cleared when it reaches MEMO_CAP: with
+    far more distinct shingles than a tiny cap (and repeats across
+    batches, so entries are evicted and re-hashed), the emitted partial
+    minima must equal an uncapped run's."""
+    schema = pa.schema([pa.field("id", pa.int64()),
+                        pa.field("s", pa.string())])
+    batches = [
+        pa.RecordBatch.from_arrays(
+            [pa.array([(b * 7 + k) % 13 for k in range(40)], type=pa.int64()),
+             pa.array([f"w{(b * 11 + k) % 57} x{k % 9} y" for k in range(40)])],
+            schema=schema)
+        for b in range(5)]
+    uncapped = _sig_rows(batches)
+    monkeypatch.setattr(dedup, "MEMO_CAP", 4)
+    assert _sig_rows(batches) == uncapped

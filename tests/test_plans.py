@@ -152,6 +152,14 @@ def test_q22_anti_join_and_scalar_broadcast(spark):
     assert "BroadcastNestedLoopJoin" in p
 
 
+def test_minhash_verify_joins_are_shuffle_hash_for_both_families(spark):
+    # Both hash families share one verify tail, which pins the corpus-sized
+    # shingle-set joins to shuffle-hash (a broadcast OOM'd the driver at
+    # the 1M-doc tier).
+    for op_id in ("ext_dedup_minhash", "ext_dedup_minhash_md5"):
+        assert "ShuffledHashJoin" in plan_of(spark, op_id), op_id
+
+
 def test_decontaminate_eval_side_broadcasts(spark):
     p = plan_of(spark, "ext_decontaminate")
     assert "BroadcastHashJoin" in p                     # eval shingles tiny
