@@ -60,11 +60,11 @@ def train_word2vec_vectors(spark: SparkSession, sf_dir: str,
         from pyspark.ml.functions import vector_to_array
 
         from ..catalog import load_table
+        from ..operators import textnorm
 
         docs = load_table(spark, sf_dir, "documents")
-        words = docs.select(F.split(
-            F.trim(F.regexp_replace(F.lower(C("text")), "[^a-z]+", " ")),
-            " ").alias("words"))
+        words = docs.select(
+            textnorm.words(C("text"), textnorm.ALPHA).alias("words"))
         model = Word2Vec(vectorSize=dim, minCount=1, seed=42,
                          numPartitions=1, maxIter=2,
                          inputCol="words", outputCol="v").fit(words)

@@ -18,6 +18,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import load_table, read_parquet, ts_us_long
 from ..registry import op
+from . import textnorm
 
 C = F.col
 
@@ -55,11 +56,6 @@ def ext_latest_by_key(spark: SparkSession, sf_dir: str) -> DataFrame:
 _FP_SQL = r"md5(lower(regexp_replace(text, '\s+', ' ', 'g')))"
 
 
-def _fp(text):
-    return F.md5(F.encode(F.lower(F.regexp_replace(text, r"\s+", " ")),
-                          "utf-8"))
-
-
 @op("ext_dedup_incremental", oracle=rf"""
     WITH fp AS (
         SELECT doc_id, source, {_FP_SQL} AS fp FROM documents
@@ -86,7 +82,8 @@ def ext_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-reads or re-hashes the historical corpus text per batch.
     """
     docs = load_table(spark, sf_dir, "documents")
-    fps = docs.select("doc_id", "source", _fp(C("text")).alias("fp"))
+    fps = docs.select("doc_id", "source",
+                      textnorm.fingerprint(C("text")).alias("fp"))
     w = Window.partitionBy("fp").orderBy("doc_id")
     batch = (fps.filter(C("source") == "src0")
              .withColumn("rn", F.row_number().over(w))

@@ -44,6 +44,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import load_table
 from ..registry import op
+from . import textnorm
 
 C = F.col
 
@@ -51,22 +52,10 @@ NUM_HASHES = 32          # minhash signature length
 BANDS = 8                # 8 bands × 4 rows: catches pairs from J≈0.5 up
 ROWS_PER_BAND = NUM_HASHES // BANDS
 
-# Entry cap for the per-task hash memo dicts in the Arrow passes
-# (_md5_sig_batches here, _prep_kept_batches in prep.py): a full memo is
-# cleared and refilled, so per-task memory stays bounded on any
-# vocabulary while a Zipfian stream's hot strings keep hitting.
-MEMO_CAP = 65_536
-
-
-def normalized_tokens(text: Column) -> Column:
-    """Lowercased alnum tokens (empty strings filtered)."""
-    toks = F.split(F.regexp_replace(F.lower(text), r"[^a-z0-9]+", " "), " ")
-    return F.filter(toks, lambda t: t != "")
-
 
 def word_shingles(text: Column, n: int = 3) -> Column:
     """Distinct n-word shingles, JVM-side (transform over an index range)."""
-    toks = normalized_tokens(text)
+    toks = textnorm.normalized_tokens(text)
     idx = F.sequence(F.lit(0), F.greatest(F.size(toks) - n, F.lit(0)))
     return F.array_distinct(
         F.transform(idx, lambda i: F.concat_ws(" ", F.slice(toks, i + 1, n)))
@@ -83,7 +72,8 @@ def _ensure_parallelism(df: DataFrame) -> DataFrame:
     r8→r11 window shingle form was accidentally providing the same
     redistribution via its partitionBy(id) exchange, which is why the
     r12 Arrow generator regressed the sf0.1 LSH ops until this was put
-    back deliberately (probe_shingles_arrow.py before/after)."""
+    back deliberately (OPTIMIZATION_r12.md "dedup.shingles_exploded —
+    Arrow per-doc shingle generator")."""
     from ..session import default_parallelism
 
     n = default_parallelism()
@@ -97,21 +87,19 @@ def _shingle_batches(n: int, id_col: str):
     in, distinct (id, s) shingle rows out — generated per DOC, inside
     one map pass, so neither the exploded token stream nor the shingle
     stream ever needs an exchange. Shingle strings are byte-identical to
-    the JVM form's (RE2 '[^a-z0-9]+'→' ' == java.util.regex on the
-    printable-ASCII corpus the lake-robustness test pins; the
-    element-wise ' ' join over the same token slices == concat_ws).
+    the JVM form's (textnorm.words_arrow == textnorm.words under the
+    ASCII contract stated in textnorm; the element-wise ' ' join over
+    the same token slices == concat_ws).
     Per-doc distinct is emitted sorted so task retries reproduce
     identical row order. A null id raises ValueError naming ``id_col``
     (the caller's column name, for the message only).
 
-    Fully vectorized (guide §4.3 — no per-row Python): the first Arrow
-    form looped docs in Python (to_pylist + set + ' '.join = one
-    PyString per token AND per window). This form touches no Python
-    string at all:
+    Fully vectorized (guide §4.3 — no per-row Python); no Python string
+    is built at all:
 
-    - tokens: RE2 normalize collapses every non-alnum run to ONE space,
-      so after a trim the plain space split IS the non-empty token list
-      (the loop form split untrimmed and filtered '' tokens — same set);
+    - tokens: textnorm.words_arrow collapses every non-alnum run to ONE
+      space, trims and splits on ' ', which IS the non-empty token list
+      (a zero-token doc splits to [''], handled below);
     - window strings: the n columns of each window are shifted slices
       of the FLAT token array, joined by binary_join_element_wise (C++);
       a window at flat position j belongs to one doc iff
@@ -143,11 +131,7 @@ def _shingle_batches(n: int, id_col: str):
             text = batch.column("text")
             if text.null_count:
                 text = pc.fill_null(text, "")  # null text → zero tokens
-            low = pc.utf8_lower(text)
-            norm = pc.replace_substring_regex(
-                low, pattern="[^a-z0-9]+", replacement=" ")
-            trimmed = pc.utf8_trim(norm, " ")
-            words = pc.split_pattern(trimmed, " ")
+            trimmed, words = textnorm.words_arrow(text)
             lens = (pc.list_value_length(words)
                     .to_numpy(zero_copy_only=False).astype(np.int64))
             # zero-token docs split as [''] (length 1): keep that slot in
@@ -210,7 +194,8 @@ def shingles_exploded(df: DataFrame, id_col: str, text_col: str,
     whole shingle stream — per-doc work that never needed to leave its
     scan task. The r11 curation decomposition charged 80% of that op to
     this generator; interleaved A/B on the v3 sf10 lake:
-    scripts/probe_shingles_arrow.py.
+    OPTIMIZATION_r12.md "dedup.shingles_exploded — Arrow per-doc
+    shingle generator" and "dedup._shingle_batches — vectorized".
 
     Docs with < n tokens yield their single short shingle, docs with ZERO
     alnum tokens yield no rows — the exact JVM-form corner semantics
@@ -239,7 +224,7 @@ def _shingles_exploded_jvm(df: DataFrame, id_col: str, text_col: str,
     fallback for non-BIGINT ids."""
     from pyspark.sql import Window
 
-    toks = normalized_tokens(C(text_col))
+    toks = textnorm.normalized_tokens(C(text_col))
     ex = df.select(C(id_col).alias("id"),
                    F.posexplode(toks).alias("pos", "w"))
     w = Window.partitionBy("id").orderBy("pos")
@@ -359,7 +344,7 @@ def _simhash_table(df: DataFrame, id_col: str, text_col: str, h: Column,
     int64 would overflow under ANSI mode. Zero-token docs are absent (a
     doc with no alnum tokens has no meaningful simhash).
     """
-    toks = normalized_tokens(C(text_col))
+    toks = textnorm.normalized_tokens(C(text_col))
     ex = df.select(C(id_col).alias("id"), F.explode(toks).alias("t"))
     votes = [
         F.sum(F.when(F.shiftright(h, i).bitwiseAND(F.lit(1)) == 1, 1)
@@ -433,7 +418,7 @@ def ext_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact dedup: hash-groupBy on the normalized-content fingerprint;
     survivor = min doc_id (deterministic canonical choice)."""
     docs = load_table(spark, sf_dir, "documents")
-    fp = F.md5(F.encode(F.lower(F.regexp_replace(C("text"), r"\s+", " ")), "utf-8"))
+    fp = textnorm.fingerprint(C("text"))
     return (
         docs.groupBy(fp.alias("fp"))
         .agg(F.min("doc_id").alias("keep_doc_id"),
@@ -471,34 +456,25 @@ def _md5_sig_batches(it):
     map-side combine, so splitting a doc's shingles across batches
     cannot change the signature (min is associative/commutative).
 
-    The hash family is h_i(s) = int(md5(f"{i}:{s}")[:15 hex], 16) — the
-    prep-Arrow dictionary trick (guide §4.2) applied at two levels:
-    within a batch each DISTINCT shingle is hashed once
-    (dictionary_encode), and a per-TASK cache carries the 32-vector
-    across batches (md5 is pure; on a Zipfian shingle stream the task
-    dictionary ≪ the row stream — within-execution memoization, never
-    cross-run; cleared when it reaches MEMO_CAP entries). Per-id minima
-    come from one reduceat over the id-sorted gather — no per-row
-    Python."""
-    import hashlib
-
+    The hash family is h_i(s) = textnorm.md5_int_py(f"{i}:{s}", 15) —
+    the Catalyst twin's textnorm.md5_int — hashed through
+    textnorm.per_distinct: within a batch each DISTINCT shingle is
+    hashed once (dictionary_encode), and the per-TASK memo carries the
+    32-vector across batches (md5 is pure; on a Zipfian shingle stream
+    the task dictionary ≪ the row stream; cleared at textnorm.MEMO_CAP
+    entries). Per-id minima come from one reduceat over the id-sorted
+    gather — no per-row Python."""
     import numpy as np
     import pyarrow as pa
 
-    cache: dict[str, np.ndarray] = {}
     prefixes = [f"{i}:".encode() for i in range(NUM_HASHES)]
 
     def hvec(s: str) -> np.ndarray:
-        v = cache.get(s)
-        if v is None:
-            if len(cache) >= MEMO_CAP:
-                cache.clear()
-            b = s.encode()
-            v = np.array(
-                [int(hashlib.md5(p + b).hexdigest()[:15], 16)
-                 for p in prefixes], dtype=np.int64)
-            cache[s] = v
-        return v
+        b = s.encode()
+        return np.array([textnorm.md5_int_py(p + b, 15) for p in prefixes],
+                        dtype=np.int64)
+
+    hash_distinct = textnorm.per_distinct(hvec)
 
     out_schema = pa.schema(
         [pa.field("id", pa.int64())]
@@ -507,10 +483,8 @@ def _md5_sig_batches(it):
         if batch.num_rows == 0:
             continue
         ids = batch.column("id").to_numpy(zero_copy_only=False)
-        enc = batch.column("s").dictionary_encode()
-        codes = (enc.indices.to_numpy(zero_copy_only=False)
-                 .astype(np.int64))
-        hdist = np.stack([hvec(s) for s in enc.dictionary.to_pylist()])
+        codes, hvecs = hash_distinct(batch.column("s"))
+        hdist = np.stack(hvecs)
         order = np.argsort(ids, kind="stable")
         sids = ids[order]
         starts = np.nonzero(
@@ -528,13 +502,9 @@ def _md5_sig_jvm(sh: DataFrame) -> DataFrame:
     kept as the Arrow form's equality reference
     (tests/test_md5_sig_arrow.py): 32 md5+conv expressions per shingle
     ROW (~832M JVM md5s at sf10, measured 36.6 s of the op)."""
-    def h(i: int) -> Column:
-        return F.conv(F.substring(
-            F.md5(F.concat(F.lit(f"{i}:"), C("s"))), 1, 15), 16, 10) \
-            .cast("bigint")
-
     return sh.groupBy("id").agg(*[
-        F.min(h(i)).alias(f"h{i}") for i in range(NUM_HASHES)
+        F.min(textnorm.md5_int(F.concat(F.lit(f"{i}:"), C("s")), 15))
+        .alias(f"h{i}") for i in range(NUM_HASHES)
     ])
 
 
@@ -564,8 +534,8 @@ def _md5_bands_and_sets(df: DataFrame, id_col: str,
     # pass emitting per-batch per-id partial minima (_md5_sig_batches —
     # md5 per distinct shingle per task, not per (row × 32)); the final
     # groupBy merges partials. Bit-identical (integers; min associative),
-    # pinned by tests/test_md5_sig_arrow.py, A/B in
-    # scripts/probe_md5_sig_arrow.py.
+    # pinned by tests/test_md5_sig_arrow.py, A/B in OPTIMIZATION_r12.md
+    # "md5-minhash signature — Arrow partial-minima pass".
     sig = (sh.mapInArrow(_md5_sig_batches, _SIG_ARROW_SCHEMA)
            .groupBy("id").agg(*[
                F.min(f"h{i}").alias(f"h{i}") for i in range(NUM_HASHES)
@@ -742,8 +712,8 @@ def ext_dedup_simhash_md5(spark: SparkSession, sf_dir: str) -> DataFrame:
     both engines md5 the identical token strings, so fingerprints, band
     keys, candidates and distances are cross-engine exact."""
     docs = load_table(spark, sf_dir, "documents")
-    h = F.conv(F.substring(F.md5(C("t")), 1, 15), 16, 10).cast("bigint")
-    sh = _simhash_table(docs, "doc_id", "text", h, _SIMHASH_MD5_BITS,
+    sh = _simhash_table(docs, "doc_id", "text",
+                        textnorm.md5_int(C("t"), 15), _SIMHASH_MD5_BITS,
                         _SIMHASH_MD5_BANDS)
     return (_simhash_pairs(sh, _SIMHASH_MD5_BANDS, max_hamming=3)
             .withColumn("hamming", C("hamming").cast("bigint"))
@@ -1289,7 +1259,7 @@ def ext_dedup_resolve(spark: SparkSession, sf_dir: str) -> DataFrame:
     by ext_dedup_components' component_id instead of the fingerprint.)
     """
     docs = load_table(spark, sf_dir, "documents")
-    fp = F.md5(F.encode(F.lower(F.regexp_replace(C("text"), r"\s+", " ")), "utf-8"))
+    fp = textnorm.fingerprint(C("text"))
     tagged = docs.withColumn("fp", fp)
     w_pick = Window.partitionBy("fp").orderBy(C("n_chars").desc(), "doc_id")
     w_size = Window.partitionBy("fp")
@@ -1461,7 +1431,7 @@ def ext_dedup_substring(spark: SparkSession, sf_dir: str) -> DataFrame:
     the exchange is corpus-linear with map-side combines throughout.
     """
     docs = load_table(spark, sf_dir, "documents")
-    t = normalized_tokens(C("text"))
+    t = textnorm.normalized_tokens(C("text"))
     n = F.size(t)
     idx = F.when(n >= _SUB_W, F.sequence(F.lit(1), n - _SUB_W + 1)) \
         .otherwise(F.array().cast("array<int>"))

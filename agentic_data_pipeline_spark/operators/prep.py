@@ -11,6 +11,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import load_table
 from ..registry import op
+from . import textnorm
 
 C = F.col
 
@@ -257,10 +258,10 @@ def _curation_q_batches(it):
     with the Catalyst twin (_curation_q_jvm), pinned by
     tests/test_curation_q_arrow.py incl. synthetic whitespace corners:
 
-    - whitespace classes are written out EXPLICITLY ("[ \\t\\n\\x0b\\f\\r]")
-      because RE2's \\s lacks \\x0b while java.util.regex's includes it —
-      the explicit class sidesteps the semantic gap on ANY input, not
-      just the ASCII-pinned fixture;
+    - whitespace classes are textnorm.JAVA_WS, written out because
+      RE2's \\s lacks \\x0b while java.util.regex's includes it — the
+      explicit class sidesteps the semantic gap on ANY input, not just
+      the ASCII-pinned fixture;
     - n_words = (whitespace runs in the space-trimmed text) + 1, which
       equals size(split(trim(text), \\s+)) for EVERY string including ''
       (Java split('') is ['']: 0 runs + 1 = 1) — so n_tokens IS n_words
@@ -271,16 +272,13 @@ def _curation_q_batches(it):
       order as quality_expr; the one divergence (0-char docs: 0/0 →
       Spark least(NaN, 1.0) = 1.0, numpy minimum = NaN) is patched
       explicitly — either way those docs score < 0.5 and drop;
-    - fp = md5(utf-8(lower(ws-runs → ' ' on the RAW text))), computed
-      for survivors only.
+    - fp = textnorm.fingerprint_arrow (the twin's textnorm.fingerprint)
+      on the RAW survivor text, so a null text keeps a null fp.
     """
-    import hashlib
-
     import numpy as np
     import pyarrow as pa
     import pyarrow.compute as pc
 
-    ws_run = "[ \t\n\x0b\f\r]+"
     out_schema = pa.schema([
         pa.field("doc_id", pa.int64()),
         pa.field("lang", pa.string()),
@@ -296,11 +294,11 @@ def _curation_q_batches(it):
         nchars = (pc.utf8_length(text)
                   .to_numpy(zero_copy_only=False).astype(np.float64))
         trimmed = pc.utf8_trim(text, " ")  # SQL trim: spaces only
-        runs = (pc.count_substring_regex(trimmed, ws_run)
+        runs = (pc.count_substring_regex(trimmed, textnorm.JAVA_WS_RUN)
                 .to_numpy(zero_copy_only=False).astype(np.int64))
         nw = runs + 1
         npunct = (pc.utf8_length(pc.replace_substring_regex(
-            text, pattern="[A-Za-z0-9 \t\n\x0b\f\r]+", replacement=""))
+            text, pattern=f"[A-Za-z0-9{textnorm.JAVA_WS}]+", replacement=""))
             .to_numpy(zero_copy_only=False).astype(np.float64))
         nwd = nw.astype(np.float64)
         with np.errstate(divide="ignore", invalid="ignore"):
@@ -322,23 +320,13 @@ def _curation_q_batches(it):
         if not len(keep):
             continue
         take = pa.array(keep)
-        kept_null = isnull[keep] if isnull is not None else None
-        collapsed = pc.replace_substring_regex(
-            text.take(take), pattern=ws_run, replacement=" ")
-        lowered = pc.utf8_lower(collapsed)
-        if kept_null is None:
-            fps = [hashlib.md5(s.encode()).hexdigest()
-                   for s in lowered.to_pylist()]
-            ntok = pa.array(nw[keep], type=pa.int64())
-        else:
-            fps = [None if kn else hashlib.md5(s.encode()).hexdigest()
-                   for s, kn in zip(lowered.to_pylist(), kept_null)]
-            ntok = pa.array(nw[keep], type=pa.int64(), mask=kept_null)
+        ntok = pa.array(nw[keep], type=pa.int64(),
+                        mask=None if isnull is None else isnull[keep])
         yield pa.RecordBatch.from_arrays(
             [batch.column("doc_id").take(take).cast(pa.int64()),
              batch.column("lang").take(take),
              batch.column("source").take(take),
-             pa.array(fps, type=pa.string()),
+             textnorm.fingerprint_arrow(raw.take(take)),
              ntok],
             schema=out_schema)
 
@@ -349,8 +337,7 @@ def _curation_q_jvm(docs: DataFrame) -> DataFrame:
     the Arrow form against; no operator routes to it."""
     from .text import quality_expr, tokens
 
-    fp = F.md5(F.encode(F.lower(F.regexp_replace(C("text"), r"\s+", " ")),
-                        "utf-8"))
+    fp = textnorm.fingerprint(C("text"))
     return (docs.filter((C("doc_id") % 50 != 0)
                         & (quality_expr(C("text")) >= 0.5))
             .select("doc_id", "lang", "source", fp.alias("fp"),
@@ -390,7 +377,8 @@ def ext_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ONE mapInArrow pass (r12 session 2, guide §4.2 — the prep-Arrow
     # mechanism applied to the quality branch; bit-identical to
     # _curation_q_jvm, see _curation_q_batches for the step-by-step
-    # equivalence and scripts/probe_curation_q_arrow.py for the A/B).
+    # equivalence and OPTIMIZATION_r12.md "ext_curation_pipeline quality
+    # branch — one mapInArrow pass" for the A/B).
     q = (docs.filter(C("doc_id") % 50 != 0)
          .select("doc_id", "lang", "source", "text")
          .mapInArrow(_curation_q_batches,
@@ -529,44 +517,31 @@ def _prep_kept_batches(it):
     of the quality survivors out. Value-identity with the Catalyst form
     (_prep_kept_jvm), step by step:
 
-    - normalize: utf8_lower → RE2 '[^a-z0-9]+'→' ' → trim → split. RE2
+    - normalize: textnorm.words_arrow (the twin's textnorm.words). RE2
       is the SAME regex engine the DuckDB oracle runs (regexp_replace
-      'g'), and the corpus is pure printable ASCII
-      (tests/test_lake_robustness.py pins it), so Java/RE2 lower() and
-      \\s agree by construction.
-    - md5 bucket per DISTINCT word per batch (dictionary_encode), not
-      per token: md5 is pure, so hashing each distinct word once and
-      fanning out through the dictionary indices is value-identical —
-      and on any Zipfian corpus the per-batch dictionary is tiny
-      relative to the token stream. A per-task cache carries buckets
-      across batches (cleared at dedup.MEMO_CAP entries) — memoization
-      inside one execution, never across runs.
+      'g'), and the forms agree under textnorm's ASCII contract.
+    - word bucket (textnorm.word_bucket_py) per DISTINCT word through
+      textnorm.per_distinct, not per token: md5 is pure, so hashing each
+      distinct word once and fanning out through the dictionary indices
+      is value-identical — and on any Zipfian corpus the per-batch
+      dictionary is tiny relative to the token stream. The per-task
+      memo carries buckets across batches (cleared at
+      textnorm.MEMO_CAP entries).
     - score = (sum_bigint.as_double / n - 500.0) / 500.0 in the same
-      left-to-right IEEE order as the Catalyst tree → bit-identical.
-    - fp = md5(lower(Java-\\s runs → ' ')) for survivors only.
+      left-to-right IEEE order as textnorm.hashed_word_score →
+      bit-identical.
+    - fp = textnorm.fingerprint_arrow (the twin's textnorm.fingerprint)
+      for survivors only.
 
     Bit-identity is pinned by tests/test_prep_arrow.py (full kept-set
     equality vs _prep_kept_jvm) and was asserted at sf0.1 AND sf10
-    (472,100 rows) by scripts/probe_prep_arrow.py before shipping."""
-    import hashlib
-
+    (472,100 rows) before shipping (OPTIMIZATION_r12.md
+    "ext_training_prep_pipeline — Arrow scored→kept front-end")."""
     import numpy as np
     import pyarrow as pa
     import pyarrow.compute as pc
 
-    from .dedup import MEMO_CAP
-
-    bucket_cache: dict[str, int] = {}
-
-    def bucket(w: str) -> int:
-        b = bucket_cache.get(w)
-        if b is None:
-            if len(bucket_cache) >= MEMO_CAP:
-                bucket_cache.clear()
-            b = int(hashlib.md5(w.encode()).hexdigest()[:8], 16) % 1001
-            bucket_cache[w] = b
-        return b
-
+    hash_distinct = textnorm.per_distinct(textnorm.word_bucket_py)
     out_schema = pa.schema([
         pa.field("doc_id", pa.int64()),
         pa.field("n_tokens", pa.int64()),
@@ -579,21 +554,12 @@ def _prep_kept_batches(it):
             # Spark: size(split(null)) is null → dropped by the filter;
             # '' gives n=0 → dropped here the same way.
             text = pc.fill_null(text, "")
-        low = pc.utf8_lower(text)
-        norm = pc.replace_substring_regex(
-            low, pattern="[^a-z0-9]+", replacement=" ")
-        trimmed = pc.utf8_trim(norm, " ")
-        # Post-replace the string is [a-z0-9 ]* with single spaces (the +
-        # collapses runs), so a plain space split IS the \s+ split.
-        words = pc.split_pattern(trimmed, " ")
+        trimmed, words = textnorm.words_arrow(text)
         lengths = pc.list_value_length(words).to_numpy(
             zero_copy_only=False).astype(np.int64)
         flat = pc.list_flatten(words)
-        enc = flat.dictionary_encode()
-        idx = enc.indices.to_numpy(zero_copy_only=False).astype(np.int64)
-        dwords = enc.dictionary.to_pylist()
-        dbuck = np.fromiter((bucket(w) for w in dwords), dtype=np.int64,
-                            count=len(dwords))
+        idx, buckets = hash_distinct(flat)
+        dbuck = np.array(buckets, dtype=np.int64)
         tok = dbuck[idx] if len(idx) else np.zeros(0, dtype=np.int64)
         cs = np.concatenate(([0], np.cumsum(tok)))
         ends = np.cumsum(lengths)
@@ -610,16 +576,10 @@ def _prep_kept_batches(it):
         if not len(keep):
             continue
         take = pa.array(keep)
-        # Java's \s includes \x0b; RE2's does not — spell the class out.
-        collapsed = pc.replace_substring_regex(
-            text.take(take), pattern="[ \t\n\x0b\f\r]+", replacement=" ")
-        lowered = pc.utf8_lower(collapsed)
-        fps = [hashlib.md5(s.encode()).hexdigest()
-               for s in lowered.to_pylist()]
         yield pa.RecordBatch.from_arrays(
             [doc_id.take(take).cast(pa.int64()),
              pa.array(n[keep], type=pa.int64()),
-             pa.array(fps, type=pa.string())],
+             textnorm.fingerprint_arrow(text.take(take))],
             schema=out_schema)
 
 
@@ -628,17 +588,8 @@ def _prep_kept_jvm(docs: DataFrame) -> DataFrame:
     shipped form, kept only as the equality reference that
     tests/test_prep_arrow.py compares the Arrow form against row for row;
     no operator routes to it."""
-    norm = F.trim(F.regexp_replace(F.lower(C("text")), "[^a-z0-9]+", " "))
-    words = F.filter(F.split(norm, r"\s+"), lambda t: t != "")
-    bucket = lambda t: (F.conv(F.substring(F.md5(t), 1, 8), 16, 10)  # noqa: E731
-                        .cast("bigint") % 1001)
-    n = F.size(words).cast("bigint")
-    score = (F.aggregate(F.transform(words, bucket),
-                         F.lit(0).cast("bigint"), lambda a, x: a + x)
-             .cast("double") / F.nullif(n, F.lit(0)) - F.lit(500.0)) \
-        / F.lit(500.0)
-    fp = F.md5(F.encode(F.lower(F.regexp_replace(C("text"), r"\s+", " ")),
-                        "utf-8"))
+    n, score = textnorm.hashed_word_score(C("text"))
+    fp = textnorm.fingerprint(C("text"))
     return (docs.select("doc_id", n.alias("n_tokens"), score.alias("score"),
                         fp.alias("fp"))
             .filter((C("score") >= -0.04) & (C("n_tokens") >= 10))
@@ -698,7 +649,7 @@ def ext_training_prep_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     regexes run through RE2 — the same engine the oracle itself uses.
     Output stays bit-identical to the Catalyst form (_prep_kept_jvm;
     row-for-row equality pinned by tests/test_prep_arrow.py and asserted
-    on 472,100 sf10 rows in scripts/probe_prep_arrow.py — interleaved
+    on 472,100 sf10 rows (OPTIMIZATION_r12.md) — interleaved
     A/B: sf10 32.2 → 7.31 s, sf0.1 0.64 → 0.39 s; this supersedes the
     r11 unmeasured guide-§4.2 assumption that Python dispatch would eat
     the win). Only (doc_id, text) crosses into Python and only
@@ -936,8 +887,8 @@ def ext_dp_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the oracle's || would propagate NULL into the whole draw.
     key = F.concat_ws("|", F.coalesce(C("lang"), F.lit("")),
                       F.coalesce(C("source"), F.lit("")))
-    uu = ((F.conv(F.substring(F.md5(key), 1, 12), 16, 10)
-           .cast("bigint") + F.lit(0.5)) / F.lit(_DP_DENOM) - F.lit(0.5))
+    uu = ((textnorm.md5_int(key, 12) + F.lit(0.5)) / F.lit(_DP_DENOM)
+          - F.lit(0.5))
     noise = (F.lit(-1.0 / DP_EPSILON) * F.signum(uu)
              * F.log(F.lit(1.0) - F.lit(2.0) * F.abs(uu)))
     return g.select(
@@ -1003,9 +954,8 @@ def ext_dp_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
               .alias("sum_clipped")))
 
     def lap(prefix: str, scale: float):
-        u = ((F.conv(F.substring(
-                F.md5(F.concat(F.lit(prefix), C("o_orderpriority"))),
-                1, 12), 16, 10).cast("bigint") + F.lit(0.5))
+        u = ((textnorm.md5_int(F.concat(F.lit(prefix), C("o_orderpriority")),
+                               12) + F.lit(0.5))
              / F.lit(_DP_DENOM) - F.lit(0.5))
         return (F.lit(-scale) * F.signum(u)
                 * F.log(F.lit(1.0) - F.lit(2.0) * F.abs(u)))

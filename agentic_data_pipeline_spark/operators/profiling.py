@@ -14,6 +14,7 @@ from pyspark.sql import functions as F
 from ..catalog import load_table
 from ..functions.helpers import cents
 from ..registry import op
+from . import textnorm
 
 C = F.col
 
@@ -134,10 +135,7 @@ def ext_pmi_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     ranking, keeps the result set float-stable.
     """
     docs = load_table(spark, sf_dir, "documents")
-    words = F.split(
-        F.trim(F.regexp_replace(F.lower(C("text")), r"[^a-z0-9]+", " ")),
-        r"\s+")
-    toks = docs.select(words.alias("w"))
+    toks = docs.select(textnorm.words(C("text")).alias("w"))
     uni = (toks.select(F.explode("w").alias("word"))
            .groupBy("word").agg(F.count(F.lit(1)).alias("c")))
     pairs = F.expr(
@@ -208,12 +206,9 @@ def ext_rare_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     document-frequency side (text.py:208).
     """
     docs = load_table(spark, sf_dir, "documents")
-    words = F.split(
-        F.trim(F.regexp_replace(F.lower(C("text")), r"[^a-z0-9]+", " ")),
-        r"\s+")
     pairs = F.expr(
         "transform(slice(w, 1, size(w) - 1), (x, i) -> struct(x as w1, w[i + 1] as w2))")
-    big = (docs.select("doc_id", words.alias("w"))
+    big = (docs.select("doc_id", textnorm.words(C("text")).alias("w"))
            .filter(F.size("w") > 1)
            .select("doc_id", F.explode(pairs).alias("p"))
            .select("doc_id", C("p.w1").alias("w1"), C("p.w2").alias("w2")))
@@ -292,10 +287,7 @@ def ext_lm_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
     the dedup/quality pass consumes.
     """
     docs = load_table(spark, sf_dir, "documents")
-    words = F.split(
-        F.trim(F.regexp_replace(F.lower(C("text")), r"[^a-z0-9]+", " ")),
-        r"\s+")
-    toks = docs.select("doc_id", words.alias("w"))
+    toks = docs.select("doc_id", textnorm.words(C("text")).alias("w"))
     vocab = (toks.select(F.explode("w").alias("u")).distinct().count())
     pairs = F.expr(
         "transform(slice(w, 1, size(w) - 1), (x, i) -> struct(x as w1, w[i + 1] as w2))")
@@ -384,10 +376,7 @@ def ext_lm_score_holdout(spark: SparkSession, sf_dir: str) -> DataFrame:
     again.
     """
     docs = load_table(spark, sf_dir, "documents")
-    words = F.split(
-        F.trim(F.regexp_replace(F.lower(C("text")), r"[^a-z0-9]+", " ")),
-        r"\s+")
-    toks = docs.select("doc_id", words.alias("w"))
+    toks = docs.select("doc_id", textnorm.words(C("text")).alias("w"))
     train = toks.filter(C("doc_id") % 50 != 0)
     vocab = train.select(F.explode("w").alias("u")).distinct().count()
     pairs = F.expr(

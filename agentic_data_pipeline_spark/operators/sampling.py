@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import load_table
 from ..registry import op
+from . import textnorm
 
 C = F.col
 
@@ -22,8 +23,7 @@ C = F.col
 def hash_bucket(key: Column, buckets: int = 100) -> Column:
     """Stable bucket in [0, buckets) from the first 8 md5 hex chars of the
     key — uniform, engine-portable (Spark conv == DuckDB from_hex path)."""
-    h8 = F.substring(F.md5(key.cast("string")), 1, 8)
-    return (F.conv(h8, 16, 10).cast("bigint") % buckets).cast("int")
+    return (textnorm.md5_int(key.cast("string"), 8) % buckets).cast("int")
 
 
 def deterministic_sample(df: DataFrame, key: str, rate_pct: int) -> DataFrame:
@@ -118,7 +118,7 @@ def ext_corpus_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     fingerprints), token totals — the dashboard numbers a data-curation
     run ends with. One partial+final aggregate pass."""
     docs = load_table(spark, sf_dir, "documents")
-    fp = F.md5(F.encode(F.lower(F.regexp_replace(C("text"), r"\s+", " ")), "utf-8"))
+    fp = textnorm.fingerprint(C("text"))
     toks = F.size(F.split(F.trim(C("text")), r"\s+"))
     return docs.groupBy("source").agg(
         F.count(F.lit(1)).alias("n_docs"),

@@ -1,7 +1,11 @@
 """Text analysis for training-data pipelines (SURVEY.md §2.5 / task brief):
-language-ID, quality scoring, token counting, fingerprinting — all pure
-Catalyst expressions (no Python UDFs): at 100 TB these run inside
-whole-stage codegen right on top of the parquet scan, shuffle-free.
+language-ID, quality scoring, token counting, fingerprinting — Catalyst
+expressions (no Python UDFs): at 100 TB these run inside whole-stage
+codegen right on top of the parquet scan, shuffle-free.
+
+The word normalization, content fingerprint and md5 hashing rules come
+from textnorm, which owns their Catalyst forms (used here) and the Arrow
+forms the mapInArrow passes in prep.py and dedup.py use.
 
 Every op here is a per-row map — the cheapest possible shape at scale — and
 each is oracle-checked against DuckDB computing the identical formula.
@@ -14,6 +18,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import load_table
 from ..registry import op
+from . import textnorm
 
 C = F.col
 
@@ -38,7 +43,7 @@ _PUNCT_RE = r"[^A-Za-z0-9\s]"
 import string as _string
 
 _ALNUM_WS = (_string.ascii_uppercase + _string.ascii_lowercase
-             + _string.digits + " \t\n\x0b\x0c\r")
+             + _string.digits + textnorm.JAVA_WS)
 _DUCK_ALNUM_WS = ("'" + _string.ascii_uppercase + _string.ascii_lowercase
                   + _string.digits + " '"
                   + " || chr(9) || chr(10) || chr(11) || chr(12) || chr(13)")
@@ -275,15 +280,7 @@ def ext_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     double only in the final identical two-operation expression.
     """
     docs = load_table(spark, sf_dir, "documents")
-    norm = F.trim(F.regexp_replace(F.lower(C("text")), "[^a-z0-9]+", " "))
-    words = F.filter(F.split(norm, r"\s+"), lambda t: t != "")
-    bucket = lambda t: (F.conv(F.substring(F.md5(t), 1, 8), 16, 10)  # noqa: E731
-                        .cast("bigint") % 1001)
-    sum_w = F.aggregate(F.transform(words, bucket),
-                        F.lit(0).cast("bigint"), lambda acc, x: acc + x)
-    n = F.size(words).cast("bigint")
-    score = (sum_w.cast("double") / F.nullif(n, F.lit(0)) - F.lit(500.0)) \
-        / F.lit(500.0)
+    n, score = textnorm.hashed_word_score(C("text"))
     # FLOOR-truncate, not ROUND: Spark rounds doubles via the shortest
     # DECIMAL repr (HALF_UP on Double.toString) while DuckDB rounds
     # numerically, so a rational score whose repr ends in "...5" can split
@@ -310,8 +307,7 @@ def ext_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     8-hex-char prefix doubles as a well-distributed shard/bucket key.
     """
     docs = load_table(spark, sf_dir, "documents")
-    normalized = F.lower(F.regexp_replace(C("text"), r"\s+", " "))
-    fp = F.md5(F.encode(normalized, "utf-8"))
+    fp = textnorm.fingerprint(C("text"))
     return docs.select(
         "doc_id",
         fp.alias("fingerprint"),
@@ -354,9 +350,8 @@ def ext_tfidf(spark: SparkSession, sf_dir: str) -> DataFrame:
     both engines cut the same top-5.
     """
     docs = load_table(spark, sf_dir, "documents")
-    norm = F.trim(F.regexp_replace(F.lower(C("text")), "[^a-z0-9]+", " "))
     words = docs.select(
-        "doc_id", F.explode(F.split(norm, r"\s+")).alias("word")
+        "doc_id", F.explode(textnorm.words(C("text"))).alias("word")
     ).filter(C("word") != "")
     tf = words.groupBy("doc_id", "word").agg(F.count(F.lit(1)).alias("tf"))
     dfreq = tf.groupBy("word").agg(F.count(F.lit(1)).alias("df"))
@@ -405,8 +400,7 @@ def ext_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     this runs at scan speed next to the other per-doc scores.
     """
     docs = load_table(spark, sf_dir, "documents")
-    norm = F.trim(F.regexp_replace(F.lower(C("text")), "[^a-z0-9]+", " "))
-    ws = F.split(norm, r"\s+")
+    ws = textnorm.words(C("text"))
     n = F.size(ws)
     idx = F.sequence(F.lit(0), F.greatest(n - 2, F.lit(0)))
     bigrams = F.transform(
@@ -451,9 +445,8 @@ def ext_inverted_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     no retrieval value precisely when their lists blow up).
     """
     docs = load_table(spark, sf_dir, "documents")
-    norm = F.trim(F.regexp_replace(F.lower(C("text")), "[^a-z0-9]+", " "))
     w = (docs.select("doc_id",
-                     F.explode(F.split(norm, r"\s+")).alias("term"))
+                     F.explode(textnorm.words(C("text"))).alias("term"))
          .filter(C("term") != "")
          .distinct())
     return (w.groupBy("term")
@@ -492,8 +485,7 @@ def ext_ngram_freq(spark: SparkSession, sf_dir: str) -> DataFrame:
     (unlimited) table is what a vocab build would write back to parquet.
     """
     docs = load_table(spark, sf_dir, "documents")
-    norm = F.trim(F.regexp_replace(F.lower(C("text")), "[^a-z0-9]+", " "))
-    ws = F.split(norm, r"\s+")
+    ws = textnorm.words(C("text"))
     idx = F.sequence(F.lit(0), F.greatest(F.size(ws) - 2, F.lit(0)))
     bigrams = F.when(
         F.size(ws) >= 2,
@@ -627,8 +619,8 @@ def bpe_merges(docs: DataFrame, text_col: str = "text",
     import re as _re
 
     F_ = F
-    norm = F_.trim(F_.regexp_replace(F_.lower(C(text_col)), "[^a-z]+", " "))
-    wf = (docs.select(F_.explode(F_.split(norm, r"\s+")).alias("w"))
+    wf = (docs.select(F_.explode(textnorm.words(C(text_col), textnorm.ALPHA))
+                      .alias("w"))
           .filter(C("w") != "")
           .groupBy("w").agg(F_.count(F_.lit(1)).alias("freq"))
           # word → space-joined character symbols: "low" → "l o w"
@@ -681,8 +673,8 @@ def bpe_encode(docs: DataFrame, merges: list[tuple[int, str, int]],
     """
     import re as _re
 
-    norm = F.trim(F.regexp_replace(F.lower(C(text_col)), "[^a-z]+", " "))
-    wf = (docs.select(F.explode(F.split(norm, r"\s+")).alias("w"))
+    wf = (docs.select(F.explode(textnorm.words(C(text_col), textnorm.ALPHA))
+                      .alias("w"))
           .filter(C("w") != "")
           .groupBy("w").agg(F.count(F.lit(1)).alias("freq")))
     sym: Column = F.array_join(F.split(C("w"), ""), " ")
@@ -904,9 +896,8 @@ def _word2vec_fit(spark: SparkSession, sf_dir: str):
     from pyspark.ml.feature import Word2Vec
 
     docs = load_table(spark, sf_dir, "documents")
-    words = docs.select(F.split(
-        F.trim(F.regexp_replace(F.lower(C("text")), "[^a-z]+", " ")),
-        " ").alias("words"))
+    words = docs.select(
+        textnorm.words(C("text"), textnorm.ALPHA).alias("words"))
     return Word2Vec(vectorSize=32, minCount=5, seed=42, numPartitions=1,
                     maxIter=2, inputCol="words", outputCol="v").fit(words)
 
@@ -957,9 +948,8 @@ def ext_word2vec_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     vecs = model.getVectors().select(
         "word", F.size(arr).alias("__d"), norm2.alias("__n2"))
     docs = load_table(spark, sf_dir, "documents")
-    toks = docs.select(F.split(
-        F.trim(F.regexp_replace(F.lower(C("text")), "[^a-z]+", " ")),
-        " ").alias("words"))
+    toks = docs.select(
+        textnorm.words(C("text"), textnorm.ALPHA).alias("words"))
     expected = (toks.select(F.explode(C("words")).alias("word"))
                 .groupBy("word").agg(F.count(F.lit(1)).alias("__c"))
                 .filter(C("__c") >= 5).select("word"))
@@ -1015,6 +1005,44 @@ def _bm25_sql_parts() -> tuple[str, str]:
     return cte, score
 
 
+def _bm25_scores(docs: DataFrame) -> DataFrame:
+    """``(doc_id, __s)``: each doc's BM25 score for BM25_TERMS — the
+    Spark twin of _bm25_sql_parts, shared by ext_bm25_search and
+    ext_hybrid_search. Corpus stats are one 1-row broadcast; the term
+    scores add in the oracle's fixed left-to-right order."""
+    toks = textnorm.words(C("text"), textnorm.ALPHA)
+
+    def tf_col(t: str):
+        # factory closure: a 2-arg lambda would hit Spark's (element,
+        # index) HOF signature and compare strings to indices
+        return F.size(F.filter(toks, lambda x: x == F.lit(t)))
+
+    d = docs.select(
+        "doc_id", F.size(toks).alias("dl"),
+        *[tf_col(t).alias(f"tf_{t}") for t in BM25_TERMS])
+    st = d.agg(
+        F.count(F.lit(1)).alias("n"), F.sum("dl").alias("sdl"),
+        *[F.sum(F.when(C(f"tf_{t}") > 0, 1).otherwise(0)).alias(f"df_{t}")
+          for t in BM25_TERMS])
+
+    def s(t: str):
+        idf = F.log(((C("n") - C(f"df_{t}")) + 0.5)
+                    / (C(f"df_{t}") + 0.5) + 1.0)
+        norm = BM25_B * (C("dl").cast("double")
+                         / (C("sdl").cast("double") / C("n")))
+        denom = (C(f"tf_{t}").cast("double")
+                 + BM25_K1 * (F.lit(0.25) + norm))
+        return F.when(
+            C(f"tf_{t}") > 0,
+            idf * ((C(f"tf_{t}").cast("double") * F.lit(BM25_K1 + 1.0))
+                   / denom)).otherwise(F.lit(0.0))
+
+    score = s(BM25_TERMS[0])
+    for t in BM25_TERMS[1:]:
+        score = score + s(t)
+    return d.crossJoin(F.broadcast(st)).select("doc_id", score.alias("__s"))
+
+
 def _bm25_oracle() -> str:
     cte, score = _bm25_sql_parts()
     return f"""
@@ -1048,38 +1076,7 @@ def ext_bm25_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     instead of a rescan — the scoring arithmetic is unchanged.
     """
     docs = load_table(spark, sf_dir, "documents")
-    toks = F.split(F.trim(F.regexp_replace(F.lower(C("text")),
-                                           "[^a-z]+", " ")), " ")
-    def tf_col(t: str):
-        # factory closure: a 2-arg lambda would hit Spark's (element,
-        # index) HOF signature and compare strings to indices
-        return F.size(F.filter(toks, lambda x: x == F.lit(t)))
-
-    d = docs.select(
-        "doc_id", F.size(toks).alias("dl"),
-        *[tf_col(t).alias(f"tf_{t}") for t in BM25_TERMS])
-    st = d.agg(
-        F.count(F.lit(1)).alias("n"), F.sum("dl").alias("sdl"),
-        *[F.sum(F.when(C(f"tf_{t}") > 0, 1).otherwise(0)).alias(f"df_{t}")
-          for t in BM25_TERMS])
-
-    def s(t: str):
-        idf = F.log(((C("n") - C(f"df_{t}")) + 0.5)
-                    / (C(f"df_{t}") + 0.5) + 1.0)
-        norm = BM25_B * (C("dl").cast("double")
-                         / (C("sdl").cast("double") / C("n")))
-        denom = (C(f"tf_{t}").cast("double")
-                 + BM25_K1 * (F.lit(0.25) + norm))
-        return F.when(
-            C(f"tf_{t}") > 0,
-            idf * ((C(f"tf_{t}").cast("double") * F.lit(BM25_K1 + 1.0))
-                   / denom)).otherwise(F.lit(0.0))
-
-    score = s(BM25_TERMS[0])
-    for t in BM25_TERMS[1:]:
-        score = score + s(t)
-    return (d.crossJoin(F.broadcast(st))
-            .select("doc_id", score.alias("__s"))
+    return (_bm25_scores(docs)
             .orderBy(C("__s").desc(), "doc_id")
             .limit(10)
             .select("doc_id", (F.floor(C("__s") * 1e6) / 1e6).alias("bm25")))
@@ -1143,37 +1140,7 @@ def ext_hybrid_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions.vector import dot, l2_norm
 
     docs = load_table(spark, sf_dir, "documents")
-    toks = F.split(F.trim(F.regexp_replace(F.lower(C("text")),
-                                           "[^a-z]+", " ")), " ")
-
-    def tf_col(t: str):
-        return F.size(F.filter(toks, lambda x: x == F.lit(t)))
-
-    d = docs.select(
-        "doc_id", F.size(toks).alias("dl"),
-        *[tf_col(t).alias(f"tf_{t}") for t in BM25_TERMS])
-    st = d.agg(
-        F.count(F.lit(1)).alias("n"), F.sum("dl").alias("sdl"),
-        *[F.sum(F.when(C(f"tf_{t}") > 0, 1).otherwise(0)).alias(f"df_{t}")
-          for t in BM25_TERMS])
-
-    def s(t: str):
-        idf = F.log(((C("n") - C(f"df_{t}")) + 0.5)
-                    / (C(f"df_{t}") + 0.5) + 1.0)
-        norm = BM25_B * (C("dl").cast("double")
-                         / (C("sdl").cast("double") / C("n")))
-        denom = (C(f"tf_{t}").cast("double")
-                 + BM25_K1 * (F.lit(0.25) + norm))
-        return F.when(
-            C(f"tf_{t}") > 0,
-            idf * ((C(f"tf_{t}").cast("double") * F.lit(BM25_K1 + 1.0))
-                   / denom)).otherwise(F.lit(0.0))
-
-    score = s(BM25_TERMS[0])
-    for t in BM25_TERMS[1:]:
-        score = score + s(t)
-    br = (d.crossJoin(F.broadcast(st))
-          .select("doc_id", score.alias("__s"))
+    br = (_bm25_scores(docs)
           .withColumn("r_bm25", F.row_number().over(
               Window.orderBy(C("__s").desc(), C("doc_id"))).cast("bigint"))
           .select(C("doc_id").alias("id"), "r_bm25"))
@@ -1236,11 +1203,9 @@ def ext_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     BPE-token corpora cap it at vocab size, so exact is the right
     default, and the sketch path would reuse this op as its verifier.
     """
-    from .dedup import normalized_tokens
-
     docs = load_table(spark, sf_dir, "documents")
     toks = docs.select(
-        F.explode(normalized_tokens(C("text"))).alias("token"))
+        F.explode(textnorm.normalized_tokens(C("text"))).alias("token"))
     cnt = toks.groupBy("token").agg(F.count(F.lit(1)).alias("cnt"))
     tot = cnt.agg(F.sum("cnt").alias("n"))
     return (
@@ -1296,9 +1261,8 @@ def ext_vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     one IEEE division of exact integer counts, bit-identical on both
     engines."""
     docs = load_table(spark, sf_dir, "documents")
-    norm = F.trim(F.regexp_replace(F.lower(C("text")), "[^a-z0-9]+", " "))
     toks = (docs.select("doc_id",
-                        F.explode(F.split(norm, r"\s+")).alias("term"))
+                        F.explode(textnorm.words(C("text"))).alias("term"))
             .filter(C("term") != ""))
     vocab = (toks.groupBy("term").agg(F.count(F.lit(1)).alias("cnt"))
              .orderBy(F.desc("cnt"), F.asc("term")).limit(VOCAB_TOP_K)

@@ -120,7 +120,8 @@ SET_VERSION = "v2"
 PERF_EPOCH = "r12c"  # r12c: curation quality branch through one
                      # mapInArrow pass (explicit java-\s classes in RE2,
                      # identical IEEE double tree, survivor-only md5;
-                     # probe_curation_q_arrow.py, 490k survivors checksum-
+                     # OPTIMIZATION_r12.md "ext_curation_pipeline quality
+                     # branch", 490k survivors checksum-
                      # identical: sf10 branch 1.46->0.96 / full op
                      # 10.4->8.8 interleaved; sf0.1 0.44->0.33 / 1.13->1.07).
                      # Supersedes:
@@ -129,14 +130,16 @@ PERF_EPOCH = "r12c"  # r12c: curation quality branch through one
                      # (binary_join_element_wise over shifted flat-token
                      # slices) and does per-doc distinct+sort via
                      # dictionary rank + np.unique, zero per-row Python
-                     # (probe_shingles_vectorized.py, checksums identical:
+                     # (OPTIMIZATION_r12.md "dedup._shingle_batches —
+                     # vectorized", checksums identical:
                      # sf10 curation 6.60->4.70, decontaminate 7.55->4.74;
                      # sf0.1 curation 1.51->1.21, minhash_md5 3.06->2.60).
                      # Supersedes:
                      # r12a: Arrow front-end for the training-prep
                      # scored→kept pass (md5 per DISTINCT word per batch
                      # via dictionary_encode + RE2 normalize; bit-identical,
-                     # probe_prep_arrow.py: sf10 32.2->7.31 s, sf0.1
+                     # OPTIMIZATION_r12.md "ext_training_prep_pipeline —
+                     # Arrow scored→kept front-end": sf10 32.2->7.31 s, sf0.1
                      # 0.644->0.386) and the volume-gated scan-split
                      # open-cost floor + v3 tier-lake row-group layout
                      # (probe_scan_parallelism.py: corpus scans were

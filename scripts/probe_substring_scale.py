@@ -51,7 +51,9 @@ def corpus(spark, mult: int):
 
 def main() -> None:
     from agentic_data_pipeline_spark.operators.dedup import (
-        _SUB_MAXB, _SUB_W, normalized_tokens)
+        _SUB_MAXB, _SUB_W)
+    from agentic_data_pipeline_spark.operators.textnorm import (
+        normalized_tokens)
     from agentic_data_pipeline_spark.session import get_spark
 
     spark = get_spark(app_name="substring-scale-probe")

@@ -12,7 +12,7 @@ from pyspark.sql import functions as F
 from tests.conftest import SF_SMOKE
 
 from agentic_data_pipeline_spark.catalog import load_table
-from agentic_data_pipeline_spark.operators import dedup
+from agentic_data_pipeline_spark.operators import textnorm
 from agentic_data_pipeline_spark.operators.dedup import (
     NUM_HASHES, _SIG_ARROW_SCHEMA, _md5_sig_batches, _md5_sig_jvm,
     shingles_exploded,
@@ -85,5 +85,5 @@ def test_md5_sig_memo_cap_keeps_output_exact(monkeypatch):
             schema=schema)
         for b in range(5)]
     uncapped = _sig_rows(batches)
-    monkeypatch.setattr(dedup, "MEMO_CAP", 4)
+    monkeypatch.setattr(textnorm, "MEMO_CAP", 4)
     assert _sig_rows(batches) == uncapped

@@ -334,7 +334,8 @@ def test_curation_pipeline_shape_r3(spark):
     assert "min_by" in p and "partial_min_by" in p
     # r12: the shingle constructions are per-doc Arrow generators inside
     # the scan task — the two Window(+exchange) subtrees are gone
-    # entirely (plans/r12/ext_curation_pipeline_*; probe_shingles_arrow.py)
+    # entirely (plans/r12/ext_curation_pipeline_*; OPTIMIZATION_r12.md
+    # "dedup.shingles_exploded — Arrow per-doc shingle generator")
     assert p.count("Window (") == 0
     assert "MapInArrow" in p
     # row-at-a-time Python never allowed, nor vectorized pandas UDFs;

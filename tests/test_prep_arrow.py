@@ -2,8 +2,9 @@
 Catalyst twin: the mapInArrow scored→kept pass (_prep_kept_batches) must
 produce the EXACT (doc_id, n_tokens, fp) set the pure-Catalyst form
 (_prep_kept_jvm) produces — the bit-identity contract the rewrite
-shipped under (scripts/probe_prep_arrow.py asserted it on 472,100 sf10
-rows; this test keeps it pinned on the driver tiers every run)."""
+shipped under (asserted on 472,100 sf10 rows, OPTIMIZATION_r12.md
+"ext_training_prep_pipeline — Arrow scored→kept front-end"; this test
+keeps it pinned on the driver tiers every run)."""
 
 import os
 
