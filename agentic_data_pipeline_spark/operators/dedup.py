@@ -43,6 +43,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
+from ..functions.vector import near_dup_pairs
 from ..registry import op
 from . import textnorm
 
@@ -1126,7 +1127,9 @@ def _clusters(docs: DataFrame, pairs: DataFrame) -> DataFrame:
                     (C("n_members") > 1).alias("is_dup_cluster")))
 
 
-@op("ext_dedup_components_star", oracle="""
+# Shared by both connected-components ops: the same min-reachable label
+# over the same near-dup graph, computed by DuckDB's recursive CTE.
+_EMB_DUP_COMPONENTS_ORACLE = """
     WITH RECURSIVE pairs AS (
         SELECT a.vec_id AS a_id, b.vec_id AS b_id
         FROM embeddings a
@@ -1152,7 +1155,19 @@ def _clusters(docs: DataFrame, pairs: DataFrame) -> DataFrame:
     SELECT e.vec_id,
            CAST(COALESCE(c.component_id, e.vec_id) AS BIGINT) AS component_id
     FROM embeddings e LEFT JOIN comp c USING (vec_id)
-""")
+"""
+
+
+def _emb_dup_graph(spark: SparkSession, sf_dir: str):
+    """``(vertices, edges)`` of the embedding near-dup graph: label-blocked
+    pairs with cosine > 0.35 (near-random fixture vectors), as ``(s, t)``."""
+    emb = load_table(spark, sf_dir, "embeddings")
+    edges = (near_dup_pairs(emb, "label", 0.35)
+             .select(C("a_id").alias("s"), C("b_id").alias("t")))
+    return emb.select(C("vec_id").alias("id")), edges
+
+
+@op("ext_dedup_components_star", oracle=_EMB_DUP_COMPONENTS_ORACLE)
 def ext_dedup_components_star(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ext_dedup_components' graph solved by the O(log n)-round
     large-star/small-star algorithm instead of diameter-bound min-label
@@ -1162,77 +1177,19 @@ def ext_dedup_components_star(spark: SparkSession, sf_dir: str) -> DataFrame:
     algorithms agree with the ground truth independently. The round
     separation that motivates it is pinned by scripts/probe_cc_star.py
     (a diameter-d chain: min-label needs d rounds, star O(log d))."""
-    from ..functions.vector import dot, l2_norm
-    from ..catalog import load_table as _lt
-
-    emb = _lt(spark, sf_dir, "embeddings")
-    a = emb.select(C("vec_id").alias("a_id"), C("label").alias("a_label"),
-                   C("embedding").alias("a_vec"),
-                   l2_norm(C("embedding")).alias("a_n"))
-    b = emb.select(C("vec_id").alias("b_id"), C("label").alias("b_label"),
-                   C("embedding").alias("b_vec"),
-                   l2_norm(C("embedding")).alias("b_n"))
-    sim = dot(C("a_vec"), C("b_vec")) / (C("a_n") * C("b_n"))
-    edges = (
-        a.join(b, (C("a_label") == C("b_label")) & (C("a_id") < C("b_id")))
-        .filter(sim > 0.35)
-        .select(C("a_id").alias("s"), C("b_id").alias("t"))
-    )
-    vertices = emb.select(C("vec_id").alias("id"))
+    vertices, edges = _emb_dup_graph(spark, sf_dir)
     return connected_components_star(vertices, edges) \
         .select(C("id").alias("vec_id"), "component_id")
 
 
-@op("ext_dedup_components", oracle="""
-    WITH RECURSIVE pairs AS (
-        SELECT a.vec_id AS a_id, b.vec_id AS b_id
-        FROM embeddings a
-        JOIN embeddings b ON a.label = b.label AND a.vec_id < b.vec_id
-        WHERE list_dot_product(CAST(a.embedding AS DOUBLE[]),
-                               CAST(b.embedding AS DOUBLE[]))
-              / (SQRT(list_dot_product(CAST(a.embedding AS DOUBLE[]),
-                                       CAST(a.embedding AS DOUBLE[])))
-                 * SQRT(list_dot_product(CAST(b.embedding AS DOUBLE[]),
-                                         CAST(b.embedding AS DOUBLE[]))))
-              > 0.35
-    ), edges AS (
-        SELECT a_id AS s, b_id AS t FROM pairs
-        UNION SELECT b_id, a_id FROM pairs
-    ), reach(s, t) AS (
-        SELECT s, t FROM edges
-        UNION
-        SELECT r.s, e.t FROM reach r JOIN edges e ON r.t = e.s
-    ), comp AS (
-        SELECT s AS vec_id, LEAST(s, MIN(t)) AS component_id
-        FROM reach GROUP BY s
-    )
-    SELECT e.vec_id,
-           CAST(COALESCE(c.component_id, e.vec_id) AS BIGINT) AS component_id
-    FROM embeddings e LEFT JOIN comp c USING (vec_id)
-""")
+@op("ext_dedup_components", oracle=_EMB_DUP_COMPONENTS_ORACLE)
 def ext_dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-duplicate clustering: connected components over the
     embedding-cosine near-dup graph (label-blocked pairs, cos > 0.35 on the
     near-random fixture vectors). component_id = min member id — the
     canonical-survivor rule dedup keeps one document per cluster with.
     Oracle: DuckDB recursive CTE computing the same min-reachable label."""
-    from ..functions.vector import dot, l2_norm
-    from ..catalog import load_table as _lt
-
-    emb = _lt(spark, sf_dir, "embeddings")
-    a = emb.select(C("vec_id").alias("a_id"), C("label").alias("a_label"),
-                   C("embedding").alias("a_vec"),
-                   l2_norm(C("embedding")).alias("a_n"))
-    b = emb.select(C("vec_id").alias("b_id"), C("label").alias("b_label"),
-                   C("embedding").alias("b_vec"),
-                   l2_norm(C("embedding")).alias("b_n"))
-    sim = dot(C("a_vec"), C("b_vec")) / (C("a_n") * C("b_n"))
-    edges = (
-        a.join(b, (C("a_label") == C("b_label")) & (C("a_id") < C("b_id")))
-        .filter(sim > 0.35)
-        .select(C("a_id").alias("s"), C("b_id").alias("t"))
-    )
-    vertices = emb.select(C("vec_id").alias("id"))
+    vertices, edges = _emb_dup_graph(spark, sf_dir)
     return connected_components(vertices, edges) \
         .select(C("id").alias("vec_id"), "component_id")
 

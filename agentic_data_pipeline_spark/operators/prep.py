@@ -10,6 +10,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
+from ..functions.vector import trunc6
 from ..registry import op
 from . import textnorm
 
@@ -873,7 +874,7 @@ def ext_dp_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     recomputes the identical draw and the release values hash-check
     end-to-end (the +0.5 on the integer keeps u strictly inside
     (−0.5, 0.5), so ln never sees 0). Values are display-truncated to
-    6dp (_trunc6 arithmetic) to absorb last-ulp libm ln() differences.
+    6dp (functions.vector trunc6) to absorb last-ulp libm ln() differences.
 
     Scale shape: ONE map-side-combined hash aggregate; the noise is a
     per-group scalar expression on the (bounded, group-count-sized)
@@ -893,7 +894,7 @@ def ext_dp_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
              * F.log(F.lit(1.0) - F.lit(2.0) * F.abs(uu)))
     return g.select(
         "lang", "source", "n_true",
-        (F.floor((C("n_true") + noise) * 1e6 + 1e-3) / 1e6).alias("n_noisy"))
+        trunc6(C("n_true") + noise).alias("n_noisy"))
 
 
 # DP numeric release: the clipped-sum mechanism. Clipping each order's
@@ -965,5 +966,4 @@ def ext_dp_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
                            C("n_true") + lap("cnt|", 2.0 / DP_EPSILON))
     return g.select(
         "o_orderpriority", "n_true", "sum_clipped",
-        (F.floor((noisy_sum / noisy_cnt) * 1e6 + 1e-3) / 1e6)
-        .alias("dp_mean"))
+        trunc6(noisy_sum / noisy_cnt).alias("dp_mean"))

@@ -13,6 +13,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import load_table
 from ..functions.helpers import cents
+from ..functions.vector import trunc6
 from ..registry import op
 from . import textnorm
 
@@ -499,8 +500,8 @@ def ext_drift_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
     bin) keeps empty bins finite. Determinism: bin assignment and the
     smoothed shares are exact IEEE ops; the single LN per bin is the
     one transcendental — engines may differ in its last ulp, which the
-    6dp floor-truncation's scaled epsilon absorbs (same construction as
-    _trunc6 in similarity.py)."""
+    6dp floor-truncation's scaled epsilon absorbs (functions.vector
+    trunc6)."""
     orders = load_table(spark, sf_dir, "orders")
     bin_col = F.least(
         F.greatest(F.floor((C("o_totalprice") - PSI_LO) / PSI_WIDTH)
@@ -521,5 +522,5 @@ def ext_drift_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
     psi = (p_cur - p_ref) * F.log(p_cur / p_ref)
     return (cnt.crossJoin(F.broadcast(tot))
             .select("bin", "n_ref", "n_cur",
-                    (F.floor(psi * 1e6 + 1e-3) / 1e6).alias("psi_term"))
+                    trunc6(psi).alias("psi_term"))
             .orderBy("bin"))

@@ -10,8 +10,12 @@ model, batched adds of 100, engine.py:86-93). Spark-first equivalents:
   (no Python in the hot path) + ORDER BY/LIMIT → TakeOrderedAndProject:
   per-partition top-k heaps, only k rows per partition reach the driver.
   That is the correct *baseline* even at 100 TB (one scan, no index build).
-- `ann_lsh`: the scale path — MLlib BucketedRandomProjectionLSH; candidates
-  come from hash buckets so the join touches a small fraction of the corpus.
+- `ann_lsh_neighbors` / `ext_ann_lsh`: the scale path — MLlib
+  BucketedRandomProjectionLSH; candidates come from hash buckets so the
+  join touches a small fraction of the corpus.
+
+The cosine, truncation and squared-L2 rules come from functions/vector.py,
+which owns their Catalyst, numpy and DuckDB forms.
 
 The embedding model is an optional dependency (SURVEY.md §7 risk 3): without
 sentence-transformers a deterministic hash-based embedder stands in, keeping
@@ -31,32 +35,16 @@ from pyspark.sql import Window
 from pyspark.sql.types import ArrayType, FloatType
 
 from ..catalog import load_table
-from ..functions.vector import cosine_sim  # noqa: F401 (re-exported for callers)
+from ..functions.vector import (
+    as_matrix, cosine_sim, cosine_sql, dist2_sql, dist2_to, l2_norm,
+    near_dup_pairs, normed_side, side_cosine, sq_norm, topk_trunc6_np,
+    trunc6, trunc6_np, trunc6_sql, vec_lit,
+)
 from ..registry import op
 
 C = F.col
 
 EMBED_DIM = 64
-
-
-def _trunc6(col):
-    """Display-truncate a double to 6dp: floor(x*1e6 + 1e-3)/1e6, the
-    same arithmetic DuckDB's FLOOR((x)*1e6 + 1e-3)/1e6 performs on the
-    identical double. Spark's ROUND goes through the shortest decimal
-    repr with HALF_UP, which can split from DuckDB's numeric rounding
-    when the repr ends in '5' at the boundary digit (observed live
-    2-in-50k on classifier scores) — truncation has no repr dependence.
-    The scaled epsilon (1e-9 on the value) absorbs last-ulp algorithm
-    differences at EXACT bucket boundaries: a self-similarity of 1.0
-    lands at 1.0 - 1ulp under numpy's norm but exactly 1.0 under the
-    sequential fold, and bare floor would split those a whole bucket
-    apart while round agreed by luck of the digit."""
-    return F.floor(col * 1e6 + 1e-3) / 1e6
-
-
-def _duck_trunc6(expr: str) -> str:
-    """The DuckDB twin of _trunc6 (see there)."""
-    return f"FLOOR(({expr}) * 1e6 + 1e-3) / 1e6"
 
 
 def _hash_embed_batch(texts: pd.Series, dim: int = EMBED_DIM) -> pd.Series:
@@ -124,25 +112,14 @@ def vector_search(index: DataFrame, query_vec: list[float], k: int = 5,
     """
     import math
 
-    q = F.array(*[F.lit(float(x)) for x in query_vec]).cast("array<float>")
+    q = np.asarray(query_vec, dtype=np.float32)
     # Query norm is a constant — fold it once on the driver instead of per
-    # row (bit-identical: float32→float64 is exact, python sums doubles in
+    # row (bit-identical: float32→float64 is exact, sq_norm sums doubles in
     # the same left-to-right order as the JVM fold).
-    qd = [float(np.float32(x)) for x in query_vec]
-    acc = 0.0
-    for x in qd:
-        acc += x * x
-    qn = math.sqrt(acc)
-    return _cosine_topk(index, q, F.lit(qn), k, id_col, vec_col)
-
-
-def _cosine_topk(index: DataFrame, q, qn, k: int, id_col: str,
-                 vec_col: str) -> DataFrame:
-    from ..functions.vector import dot, l2_norm
-
-    sim = dot(C(vec_col), q) / (l2_norm(C(vec_col)) * qn)
+    qn = F.lit(math.sqrt(sq_norm(q)))
+    sim = cosine_sim(C(vec_col), vec_lit(q), b_n=qn)
     return (
-        index.select(C(id_col), _trunc6(sim).alias("sim"))
+        index.select(C(id_col), trunc6(sim).alias("sim"))
         .orderBy(C("sim").desc(), C(id_col))
         .limit(k)
     )
@@ -156,9 +133,10 @@ def vector_search_batch(index: DataFrame, query_vec: list[float], k: int = 5,
     The big-corpus twin of vector_search: each Arrow batch is scored as one
     BLAS matrix-vector product and reduced to a per-batch top-k, so only
     k rows per batch reach the final TakeOrderedAndProject. Measured on a
-    2M x 64 synthetic corpus (scripts/probe_vector_scale.py, local[32]):
-    0.84 s vs 1.46 s for the JVM HOF fold — and the BLAS advantage grows
-    with dimension (real embedding models emit 384-1536 dims). Sims agree
+    2M x 64 synthetic corpus (BASELINE.md "Vector-search scale probe",
+    local[32]): 0.84 s vs 1.46 s for the JVM HOF fold — and the BLAS
+    advantage grows with dimension (real embedding models emit 384-1536
+    dims). Sims agree
     with the fold to 6dp (both computed in float64; summation order differs
     only in the last ulp), which is why the *oracle-checked* vector_search
     stays on the bit-exact fold while this is the scale path.
@@ -170,15 +148,10 @@ def vector_search_batch(index: DataFrame, query_vec: list[float], k: int = 5,
         for pdf in batches:
             if not len(pdf):
                 continue
-            m = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
+            m = as_matrix(pdf[vec_col])
             sims = (m @ q) / (np.linalg.norm(m, axis=1) * qn)
-            # Select on the TRUNCATED sim with id tiebreak — the exact
-            # ordering the final global sort ranks by; selecting on raw
-            # floats could drop a truncated-tie candidate at the k edge.
-            s6 = np.floor(sims * 1e6 + 1e-3) / 1e6
-            ids = pdf[id_col].to_numpy()
-            top = np.lexsort((ids, -s6))[:k]
-            yield pd.DataFrame({id_col: ids[top], "sim": s6[top]})
+            ids, s6 = topk_trunc6_np(pdf[id_col].to_numpy(), sims, k)
+            yield pd.DataFrame({id_col: ids, "sim": s6})
 
     scored = index.select(id_col, vec_col).mapInPandas(
         score, schema=f"{id_col} bigint, sim double")
@@ -191,16 +164,14 @@ def vector_search_by_id(index: DataFrame, query_id: int, k: int = 5,
     """Top-k neighbors of a vector already in the index — single job: the
     1-row query side broadcasts into a join instead of a driver round-trip
     (collect-then-literal costs an extra Spark job per query)."""
-    from ..functions.vector import dot, l2_norm
-
     # Query norm computed once on the 1-row broadcast side — not per
     # candidate row (same double either way; ~1/3 less per-row work).
-    q = index.filter(C(id_col) == query_id).select(
-        C(vec_col).alias("__qv"), l2_norm(C(vec_col)).alias("__qn"))
-    sim = dot(C(vec_col), C("__qv")) / (l2_norm(C(vec_col)) * C("__qn"))
+    q = normed_side(index.filter(C(id_col) == query_id), "__q",
+                    id_col=id_col, vec_col=vec_col)
+    sim = cosine_sim(C(vec_col), C("__q_vec"), b_n=C("__q_n"))
     return (
         index.crossJoin(F.broadcast(q))
-        .select(C(id_col), _trunc6(sim).alias("sim"))
+        .select(C(id_col), trunc6(sim).alias("sim"))
         .orderBy(C("sim").desc(), C(id_col))
         .limit(k)
     )
@@ -209,15 +180,6 @@ def vector_search_by_id(index: DataFrame, query_id: int, k: int = 5,
 def _query_vec(spark: SparkSession, sf_dir: str, vec_id: int) -> list[float]:
     emb = load_table(spark, sf_dir, "embeddings")
     return list(emb.filter(C("vec_id") == vec_id).head()["embedding"])
-
-
-# A DuckDB expression computing cosine with the *identical* formula/order as
-# functions.vector.cosine_sim (sequential double fold), so results are
-# bit-identical before the defensive ROUND.
-def _duck_cos(a: str, b: str) -> str:
-    return (f"list_dot_product(CAST({a} AS DOUBLE[]), CAST({b} AS DOUBLE[])) / "
-            f"(SQRT(list_dot_product(CAST({a} AS DOUBLE[]), CAST({a} AS DOUBLE[]))) * "
-            f"SQRT(list_dot_product(CAST({b} AS DOUBLE[]), CAST({b} AS DOUBLE[]))))")
 
 
 _EMBED_ORACLE = """
@@ -257,7 +219,6 @@ def ext_embed_word2vec(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions.embedder import (
         make_word2vec_embedder_udf, train_word2vec_vectors,
     )
-    from ..functions.vector import l2_norm
 
     docs = load_table(spark, sf_dir, "documents")
     embed = make_word2vec_embedder_udf(train_word2vec_vectors(spark, sf_dir))
@@ -272,7 +233,7 @@ def ext_embed_word2vec(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @op("vector_search", oracle=f"""
     WITH q AS (SELECT embedding AS qv FROM embeddings WHERE vec_id = 0)
-    SELECT vec_id, {_duck_trunc6(_duck_cos('embedding', 'qv'))} AS sim
+    SELECT vec_id, {trunc6_sql(cosine_sql('embedding', 'qv'))} AS sim
     FROM embeddings, q
     ORDER BY sim DESC, vec_id
     LIMIT 5
@@ -320,7 +281,7 @@ _SIM_TOPK_ORACLE = f"""
     -- semantics, JVM-fold vs BLAS path); r7: re-land the batch op's
     -- driver row, whose last sample (r3) predates this shared oracle.
     SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-           {_duck_trunc6(_duck_cos('c.embedding', 'q.embedding'))} AS sim
+           {trunc6_sql(cosine_sql('c.embedding', 'q.embedding'))} AS sim
     FROM embeddings q JOIN embeddings c ON c.vec_id <> q.vec_id
     WHERE q.vec_id IN (0, 1, 2)
     QUALIFY ROW_NUMBER() OVER (PARTITION BY q.vec_id
@@ -334,26 +295,19 @@ def ext_similarity_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     (SURVEY §2.5). Query side broadcasts; ranking is salted two-phase
     top-k (`batch_topk`) — the all-pairs matrix never materializes and no
     exchange partitions the full corpus by query_id alone."""
-    from ..functions.vector import dot, l2_norm
-
     emb = load_table(spark, sf_dir, "embeddings")
-    queries = emb.filter(C("vec_id").isin(0, 1, 2)).select(
-        C("vec_id").alias("query_id"), C("embedding").alias("qv"),
-        l2_norm(C("embedding")).alias("qn"),
-    )
+    queries = normed_side(emb.filter(C("vec_id").isin(0, 1, 2)), "q")
     # Corpus norm computed ONCE per vector below the join, not per
     # (vector, query) pair above it — with Q queries the post-join form
     # folds each embedding Q extra times for the same double (r11).
-    corpus = emb.select("vec_id", "embedding",
-                        l2_norm(C("embedding")).alias("en"))
-    sim = dot(C("embedding"), C("qv")) / (C("en") * C("qn"))
+    corpus = normed_side(emb, "c")
     scored = (
         corpus.crossJoin(F.broadcast(queries))
-        .filter(C("vec_id") != C("query_id"))
+        .filter(C("c_id") != C("q_id"))
         .select(
-            "query_id",
-            C("vec_id").alias("neighbor_id"),
-            _trunc6(sim).alias("sim"),
+            C("q_id").alias("query_id"),
+            C("c_id").alias("neighbor_id"),
+            trunc6(side_cosine("c", "q")).alias("sim"),
         )
     )
     return batch_topk(scored, k=5)
@@ -361,10 +315,10 @@ def ext_similarity_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @op("ext_dedup_embedding", oracle=f"""
     SELECT a.vec_id AS a_id, b.vec_id AS b_id,
-           {_duck_trunc6(_duck_cos('a.embedding', 'b.embedding'))} AS sim
+           {trunc6_sql(cosine_sql('a.embedding', 'b.embedding'))} AS sim
     FROM embeddings a
     JOIN embeddings b ON a.label = b.label AND a.vec_id < b.vec_id
-    WHERE {_duck_cos('a.embedding', 'b.embedding')} > 0.8
+    WHERE {cosine_sql('a.embedding', 'b.embedding')} > 0.8
 """)
 def ext_dedup_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding-cosine near-duplicate pairs, blocked by `label`.
@@ -373,22 +327,9 @@ def ext_dedup_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
     the same structure an LSH bucket join gives when no natural block key
     exists. Self-join shuffles once on the block key.
     """
-    from ..functions.vector import dot, l2_norm
-
     emb = load_table(spark, sf_dir, "embeddings")
-    # norms once per vector (each vector joins into many pairs)
-    a = emb.select(C("vec_id").alias("a_id"), C("label").alias("a_label"),
-                   C("embedding").alias("a_vec"),
-                   l2_norm(C("embedding")).alias("a_n"))
-    b = emb.select(C("vec_id").alias("b_id"), C("label").alias("b_label"),
-                   C("embedding").alias("b_vec"),
-                   l2_norm(C("embedding")).alias("b_n"))
-    sim = dot(C("a_vec"), C("b_vec")) / (C("a_n") * C("b_n"))
-    return (
-        a.join(b, (C("a_label") == C("b_label")) & (C("a_id") < C("b_id")))
-        .filter(sim > 0.8)
-        .select("a_id", "b_id", _trunc6(sim).alias("sim"))
-    )
+    return (near_dup_pairs(emb, "label", 0.8)
+            .select("a_id", "b_id", trunc6(side_cosine()).alias("sim")))
 
 
 def ivf_index(emb: DataFrame, k_cells: int = 16,
@@ -488,29 +429,11 @@ def _ann_contract_row(ann_ids: DataFrame, exact: DataFrame, kth,
     )
 
 
-_DUCK_L2_DIST2 = (
-    "list_dot_product(CAST(embedding AS DOUBLE[]), CAST(embedding AS DOUBLE[]))"
-    " - 2 * list_dot_product(CAST(embedding AS DOUBLE[]), CAST(qv AS DOUBLE[]))"
-    " + list_dot_product(CAST(qv AS DOUBLE[]), CAST(qv AS DOUBLE[]))"
-)
-
-
 def _l2_all_dist2(emb: DataFrame, qv: list[float]) -> DataFrame:
-    """(vec_id, dist2) for every row: squared L2 to the query, arithmetic
-    mirrored term-for-term by _DUCK_L2_DIST2 (‖x‖² − 2⟨x,q⟩ + ‖q‖², each
-    dot a left-to-right fold — the same cross-engine-exact shape the
-    cosine oracles rely on). Squared distance on BOTH sides: skipping the
-    sqrt avoids a rounding boundary and preserves the ordering."""
-    from ..functions.vector import dot
-
-    q = F.array(*[F.lit(float(x)) for x in qv]).cast("array<float>")
-    qd = [float(np.float32(x)) for x in qv]
-    qn2 = 0.0
-    for x in qd:
-        qn2 += x * x
-    e = C("embedding")
-    dist2 = dot(e, e) - 2 * dot(e, q) + F.lit(qn2)
-    return emb.select("vec_id", _trunc6(dist2).alias("dist2"))
+    """(vec_id, dist2) for every row: squared L2 to the (float32) query,
+    mirrored term for term by the oracles' dist2_sql."""
+    dist2 = dist2_to(C("embedding"), np.asarray(qv, dtype=np.float32))
+    return emb.select("vec_id", trunc6(dist2).alias("dist2"))
 
 
 def _l2_exact_topk(emb: DataFrame, qv: list[float], k: int = 5) -> DataFrame:
@@ -520,7 +443,7 @@ def _l2_exact_topk(emb: DataFrame, qv: list[float], k: int = 5) -> DataFrame:
 
 @op("ext_ann_ivf", oracle=f"""
     WITH q AS (SELECT embedding AS qv FROM embeddings WHERE vec_id = 0),
-    ex AS (SELECT vec_id, {_duck_trunc6(_duck_cos('embedding', 'qv'))} AS sim
+    ex AS (SELECT vec_id, {trunc6_sql(cosine_sql('embedding', 'qv'))} AS sim
            FROM embeddings, q
            WHERE vec_id <> 0
            ORDER BY sim DESC, vec_id LIMIT 5)
@@ -548,7 +471,7 @@ def ext_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @op("vector_search_batch", oracle=f"""
     WITH q AS (SELECT embedding AS qv FROM embeddings WHERE vec_id = 0)
-    SELECT vec_id, {_duck_trunc6(_duck_cos('embedding', 'qv'))} AS sim
+    SELECT vec_id, {trunc6_sql(cosine_sql('embedding', 'qv'))} AS sim
     FROM embeddings, q
     ORDER BY sim DESC, vec_id
     LIMIT 5
@@ -615,7 +538,7 @@ def pq_encode(emb: DataFrame, codebooks: "np.ndarray",
         for pdf in batches:
             if not len(pdf):
                 continue
-            mat = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
+            mat = as_matrix(pdf[vec_col])
             codes = np.empty((len(pdf), m), dtype=np.int32)
             for j in range(m):
                 seg = mat[:, j * sub:(j + 1) * sub]
@@ -674,7 +597,7 @@ def ann_pq_neighbors(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _ANN_L2_ORACLE = f"""
     WITH q AS (SELECT embedding AS qv FROM embeddings WHERE vec_id = 0),
-    ex AS (SELECT vec_id, {_duck_trunc6(_DUCK_L2_DIST2)} AS dist2
+    ex AS (SELECT vec_id, {trunc6_sql(dist2_sql('embedding', 'qv'))} AS dist2
            FROM embeddings, q
            WHERE vec_id <> 0
            ORDER BY dist2, vec_id LIMIT 5)
@@ -686,7 +609,7 @@ _ANN_L2_ORACLE = f"""
 
 @op("ext_ann_pq", oracle=f"""
     WITH q AS (SELECT embedding AS qv FROM embeddings WHERE vec_id = 0),
-    ex AS (SELECT vec_id, {_duck_trunc6(_DUCK_L2_DIST2)} AS dist2
+    ex AS (SELECT vec_id, {trunc6_sql(dist2_sql('embedding', 'qv'))} AS dist2
            FROM embeddings, q
            WHERE vec_id <> 0
            ORDER BY dist2, vec_id LIMIT 5)
@@ -835,8 +758,6 @@ def ext_kmeans_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.ml.clustering import KMeans
     from pyspark.ml.functions import array_to_vector
 
-    from ..functions.vector import dot
-
     emb = load_table(spark, sf_dir, "embeddings")
     vecs = emb.select("vec_id", "embedding",
                       array_to_vector(C("embedding").cast("array<double>"))
@@ -845,15 +766,7 @@ def ext_kmeans_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
                    predictionCol="cluster_id").fit(vecs)
     assigned = model.transform(vecs).drop("__f")
 
-    e = C("embedding")
-    dists = []
-    for center in model.clusterCenters():
-        cs = [float(x) for x in center]
-        cn2 = 0.0
-        for x in cs:
-            cn2 += x * x
-        carr = F.array(*[F.lit(x) for x in cs])
-        dists.append(dot(e, e) - 2 * dot(e, carr) + F.lit(cn2))
+    dists = [dist2_to(C("embedding"), c) for c in model.clusterCenters()]
     assigned_d2 = F.element_at(F.array(*dists), C("cluster_id") + 1)
     min_d2 = F.least(*dists)
     row_ok = assigned_d2 <= min_d2 * (1 + 1e-4) + F.lit(1e-6)
@@ -891,21 +804,16 @@ def similarity_topk_batch(index: DataFrame, queries: dict[int, list[float]],
         for pdf in batches:
             if not len(pdf):
                 continue
-            m = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
+            m = as_matrix(pdf[vec_col])
             sims = (m @ qm) / (np.linalg.norm(m, axis=1)[:, None] * qn[None, :])
             ids = pdf[id_col].to_numpy()
             out_q, out_id, out_s = [], [], []
             for j, qid in enumerate(qids):
-                col = sims[:, j]
                 mask = ids != qid                          # exclude self
-                cand_ids, cand = ids[mask], np.floor(col[mask] * 1e6 + 1e-3) / 1e6
-                # Select on the TRUNCATED sim with neighbor_id tiebreak — the
-                # exact ordering the final window ranks by; selecting on raw
-                # floats could drop a truncated-tie candidate at the k edge.
-                top = np.lexsort((cand_ids, -cand))[:k]
-                out_q += [qid] * len(top)
-                out_id += list(cand_ids[top])
-                out_s += list(cand[top])
+                top_ids, top_s = topk_trunc6_np(ids[mask], sims[mask, j], k)
+                out_q += [qid] * len(top_ids)
+                out_id += list(top_ids)
+                out_s += list(top_s)
             yield pd.DataFrame({"query_id": out_q, "neighbor_id": out_id,
                                 "sim": out_s})
 
@@ -937,8 +845,8 @@ def ext_similarity_topk_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
 # with the corpus to keep per-cluster rows (and therefore total pair count
 # ≈ n · TARGET) constant — the paper's setting. 64 rows/cluster keeps the
 # sf0.01 fixture at the historically-verified k=8 (500 // 64 = 7 → floor 8)
-# while sf0.1 gets k=78 and a 60M-vector tier k≈1M. Probed at 100× in
-# scripts/probe_semdedup_scale.py (BASELINE.md).
+# while sf0.1 gets k=78 and a 60M-vector tier k≈1M. Probed at 100×
+# (BASELINE.md "Round-6: semdedup unpinned + bounded-sample k-means fit").
 SEMDEDUP_TARGET_CLUSTER_ROWS = 64
 
 
@@ -987,8 +895,6 @@ def semdedup(emb: DataFrame, k_clusters: int | None = None,
     from pyspark.ml.clustering import KMeans
     from pyspark.ml.functions import array_to_vector
 
-    from ..functions.vector import dot, l2_norm
-
     n_vectors = None
     if k_clusters is None:
         n_vectors = emb.select(id_col).count()
@@ -1021,15 +927,8 @@ def semdedup(emb: DataFrame, k_clusters: int | None = None,
                         C(vec_col), l2_norm(C(vec_col)).alias("__n"))
                 .localCheckpoint(eager=False))  # pin: reused on both
                                                 # join sides (lazy, r11)
-    a = assigned.select(C("cluster_id"), C(id_col).alias("a_id"),
-                        C(vec_col).alias("a_vec"), C("__n").alias("a_n"))
-    b = assigned.select(C("cluster_id").alias("b_cluster"),
-                        C(id_col).alias("b_id"),
-                        C(vec_col).alias("b_vec"), C("__n").alias("b_n"))
-    sim = dot(C("a_vec"), C("b_vec")) / (C("a_n") * C("b_n"))
-    dropped = (a.join(b, (C("cluster_id") == C("b_cluster"))
-                     & (C("a_id") < C("b_id")))
-               .filter(sim > threshold)
+    dropped = (near_dup_pairs(assigned, "cluster_id", threshold, id_col,
+                              vec_col, norm_col="__n")
                .select(C("b_id").alias(id_col)).distinct()
                .withColumn("kept", F.lit(False)))
     return (assigned.select(id_col, "cluster_id")
@@ -1084,7 +983,7 @@ SEMDEDUP_ISOLATION_CEILING = 0.34
         JOIN embeddings b ON b.vec_id <> a.vec_id
         WHERE a.vec_id < {SEMDEDUP_CONTRACT_SAMPLE}
         GROUP BY a.vec_id
-        HAVING MAX({_duck_trunc6(_duck_cos('a.embedding', 'b.embedding'))})
+        HAVING MAX({trunc6_sql(cosine_sql('a.embedding', 'b.embedding'))})
                <= {SEMDEDUP_ISOLATION_CEILING}
     )
     SELECT CAST(COUNT(*) AS INT) AS n_vectors,
@@ -1111,8 +1010,6 @@ def ext_semdedup_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
     vectors in one cluster within the threshold — the representative-per-
     group guarantee). A k-means collapse, a broken semi-join, or a dropped
     isolated vector now fails the driver hash, not just pytest."""
-    from ..functions.vector import dot, l2_norm
-
     emb = load_table(spark, sf_dir, "embeddings")
     res = semdedup(emb, threshold=0.35).localCheckpoint(eager=False)
 
@@ -1121,14 +1018,10 @@ def ext_semdedup_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.greatest(F.lit(8), F.floor(F.count(F.lit(1)) / 64))
         .cast("int").alias("k_clusters"))
 
-    a = emb.filter(C("vec_id") < SEMDEDUP_CONTRACT_SAMPLE).select(
-        C("vec_id").alias("a_id"), C("embedding").alias("a_vec"),
-        l2_norm(C("embedding")).alias("a_n"))
-    b = emb.select(C("vec_id").alias("b_id"), C("embedding").alias("b_vec"),
-                   l2_norm(C("embedding")).alias("b_n"))
-    sim = _trunc6(dot(C("a_vec"), C("b_vec")) / (C("a_n") * C("b_n")))
+    a = normed_side(emb.filter(C("vec_id") < SEMDEDUP_CONTRACT_SAMPLE), "a")
+    b = normed_side(emb, "b")
     iso = (F.broadcast(a).join(b, C("a_id") != C("b_id"))
-           .groupBy("a_id").agg(F.max(sim).alias("__mx"))
+           .groupBy("a_id").agg(F.max(trunc6(side_cosine())).alias("__mx"))
            .filter(C("__mx") <= SEMDEDUP_ISOLATION_CEILING)
            .select(C("a_id").alias("vec_id")))
     iso_row = (iso.join(res.select("vec_id", "kept"), "vec_id", "left")
@@ -1142,17 +1035,7 @@ def ext_semdedup_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
                         C("__n_rows")))
 
     kept = res.filter("kept").join(emb.select("vec_id", "embedding"), "vec_id")
-    ka = kept.select(C("cluster_id"), C("vec_id").alias("a_id"),
-                     C("embedding").alias("a_vec"),
-                     l2_norm(C("embedding")).alias("a_n"))
-    kb = kept.select(C("cluster_id").alias("b_cluster"),
-                     C("vec_id").alias("b_id"),
-                     C("embedding").alias("b_vec"),
-                     l2_norm(C("embedding")).alias("b_n"))
-    ksim = dot(C("a_vec"), C("b_vec")) / (C("a_n") * C("b_n"))
-    dup_row = (ka.join(kb, (C("cluster_id") == C("b_cluster"))
-                       & (C("a_id") < C("b_id")))
-               .filter(ksim > 0.35)
+    dup_row = (near_dup_pairs(kept, "cluster_id", 0.35)
                .agg(F.count(F.lit(1)).alias("__n_dup")))
 
     return (n_df
@@ -1171,10 +1054,10 @@ def ext_semdedup_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
 _KNN_GRAPH_ORACLE = f"""
     SELECT vec_id, neighbor_id, sim, rank FROM (
         SELECT a.vec_id AS vec_id, b.vec_id AS neighbor_id,
-               {_duck_trunc6(_duck_cos('a.embedding', 'b.embedding'))} AS sim,
+               {trunc6_sql(cosine_sql('a.embedding', 'b.embedding'))} AS sim,
                CAST(ROW_NUMBER() OVER (
                    PARTITION BY a.vec_id
-                   ORDER BY {_duck_cos('a.embedding', 'b.embedding')} DESC,
+                   ORDER BY {cosine_sql('a.embedding', 'b.embedding')} DESC,
                             b.vec_id) AS BIGINT) AS rank
         FROM embeddings a
         JOIN embeddings b
@@ -1198,25 +1081,17 @@ def ext_knn_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     product left-to-right over the array, so the unrounded sim that
     orders the window is bit-identical and the graph is oracle-exact.
     """
-    from ..functions.vector import dot, l2_norm
-
     emb = load_table(spark, sf_dir, "embeddings")
-    a = emb.select(C("vec_id"), C("label"),
-                   C("embedding").alias("a_vec"),
-                   l2_norm(C("embedding")).alias("a_n"))
-    b = emb.select(C("label").alias("b_label"),
-                   C("vec_id").alias("neighbor_id"),
-                   C("embedding").alias("b_vec"),
-                   l2_norm(C("embedding")).alias("b_n"))
-    sim = dot(C("a_vec"), C("b_vec")) / (C("a_n") * C("b_n"))
+    a, b = (normed_side(emb, s, "label") for s in "ab")
     w = Window.partitionBy("vec_id").orderBy(C("__sim").desc(), C("neighbor_id"))
-    return (a.join(b, (C("label") == C("b_label"))
-                   & (C("vec_id") != C("neighbor_id")))
-            .select("vec_id", "neighbor_id", sim.alias("__sim"))
+    return (a.join(b, (C("a_label") == C("b_label"))
+                   & (C("a_id") != C("b_id")))
+            .select(C("a_id").alias("vec_id"), C("b_id").alias("neighbor_id"),
+                    side_cosine().alias("__sim"))
             .withColumn("rank", F.row_number().over(w).cast("bigint"))
             .filter(C("rank") <= 3)
             .select("vec_id", "neighbor_id",
-                    _trunc6(C("__sim")).alias("sim"), "rank"))
+                    trunc6(C("__sim")).alias("sim"), "rank"))
 
 
 def knn_graph_batch(emb: DataFrame, k: int = 3, block_col: str = "label",
@@ -1240,8 +1115,7 @@ def knn_graph_batch(emb: DataFrame, k: int = 3, block_col: str = "label",
 
     def per_block(pdf: pd.DataFrame) -> pd.DataFrame:
         ids = pdf[id_col].to_numpy()
-        m = np.stack([np.asarray(v, dtype=np.float64)
-                      for v in pdf[vec_col]])
+        m = as_matrix(pdf[vec_col])
         norms = np.linalg.norm(m, axis=1)
         sims = (m @ m.T) / np.outer(norms, norms)
         np.fill_diagonal(sims, -np.inf)
@@ -1254,7 +1128,7 @@ def knn_graph_batch(emb: DataFrame, k: int = 3, block_col: str = "label",
             order = np.lexsort((ids, -sims[row]))[:kk]
             out_v += [ids[row]] * kk
             out_n += list(ids[order])
-            out_s += list(np.floor(sims[row][order] * 1e6 + 1e-3) / 1e6)
+            out_s += list(trunc6_np(sims[row][order]))
             out_r += list(range(1, kk + 1))
         return pd.DataFrame({"vec_id": out_v, "neighbor_id": out_n,
                              "sim": out_s, "rank": out_r})
@@ -1281,12 +1155,12 @@ def ext_knn_graph_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
 @op("ext_decontaminate_embedding", oracle=f"""
     SELECT c.vec_id,
            CAST(COUNT(*) AS BIGINT) AS n_eval_hits,
-           {_duck_trunc6(f"MAX({_duck_cos('c.embedding', 'e.embedding')})")}
+           {trunc6_sql(f"MAX({cosine_sql('c.embedding', 'e.embedding')})")}
                AS max_sim
     FROM embeddings c
     JOIN embeddings e
       ON e.vec_id % 50 = 0 AND c.vec_id % 50 <> 0
-    WHERE {_duck_cos('c.embedding', 'e.embedding')} > 0.3
+    WHERE {cosine_sql('c.embedding', 'e.embedding')} > 0.3
     GROUP BY c.vec_id
 """)
 def ext_decontaminate_embedding(spark: SparkSession,
@@ -1305,23 +1179,16 @@ def ext_decontaminate_embedding(spark: SparkSession,
     corpus-sized shuffle); the per-vector agg shuffles only the flagged
     pairs, which contamination keeps rare. Emits (vec_id, n_eval_hits,
     max_sim) per flagged vector, hash-exact against the DuckDB replay."""
-    from ..functions.vector import dot, l2_norm
-
     emb = load_table(spark, sf_dir, "embeddings")
-    corpus = (emb.filter(C("vec_id") % 50 != 0)
-              .select("vec_id", "embedding",
-                      l2_norm(C("embedding")).alias("__n")))
-    ev = (emb.filter(C("vec_id") % 50 == 0)
-          .select(C("vec_id").alias("eval_id"),
-                  C("embedding").alias("ev"),
-                  l2_norm(C("embedding")).alias("__en")))
-    sim = dot(C("embedding"), C("ev")) / (C("__n") * C("__en"))
+    corpus = normed_side(emb.filter(C("vec_id") % 50 != 0), "c")
+    ev = normed_side(emb.filter(C("vec_id") % 50 == 0), "e")
+    sim = side_cosine("c", "e")
     return (corpus.crossJoin(F.broadcast(ev))
             .filter(sim > 0.3)
-            .select("vec_id", sim.alias("__s"))
+            .select(C("c_id").alias("vec_id"), sim.alias("__s"))
             .groupBy("vec_id")
             .agg(F.count(F.lit(1)).cast("bigint").alias("n_eval_hits"),
-                 _trunc6(F.max("__s")).alias("max_sim")))
+                 trunc6(F.max("__s")).alias("max_sim")))
 
 
 @op("ext_contrastive_triplets", oracle=f"""
@@ -1345,7 +1212,7 @@ def ext_decontaminate_embedding(spark: SparkSession,
     )
     SELECT t.a_id AS anchor_id, t.pos_id AS positive_id, t.pos_sim,
            t.neg_id AS negative_id,
-           {_duck_trunc6(_duck_cos('a.embedding', 'b.embedding'))}
+           {trunc6_sql(cosine_sql('a.embedding', 'b.embedding'))}
                AS neg_sim
     FROM trip t
     JOIN embeddings a ON a.vec_id = t.a_id
@@ -1367,8 +1234,6 @@ def ext_contrastive_triplets(spark: SparkSession,
     computed id (no sampling shuffle, no RNG state); both similarity
     columns are the exact cosine fold. At 100 TB this is the standard
     one-pass mining topology: graph edges + computed-key join."""
-    from ..functions.vector import dot, l2_norm
-
     emb = load_table(spark, sf_dir, "embeddings")
     n = emb.count()
     pos = (knn_graph_batch(emb, k=1)
@@ -1386,18 +1251,13 @@ def ext_contrastive_triplets(spark: SparkSession,
         "a_id", "pos_id", "pos_sim",
         F.when(free(c0), c0).when(free(c1), c1).otherwise(c2)
         .alias("neg_id"))
-    a = emb.select(C("vec_id").alias("a_id"),
-                   C("embedding").alias("a_vec"),
-                   l2_norm(C("embedding")).alias("a_n"))
-    b = emb.select(C("vec_id").alias("neg_id"),
-                   C("embedding").alias("b_vec"),
-                   l2_norm(C("embedding")).alias("b_n"))
-    neg_sim = dot(C("a_vec"), C("b_vec")) / (C("a_n") * C("b_n"))
+    a = normed_side(emb, "a")
+    b = normed_side(emb, "b").withColumnRenamed("b_id", "neg_id")
     return (trip.join(a, "a_id").join(b, "neg_id")
             .select(C("a_id").alias("anchor_id"),
                     C("pos_id").alias("positive_id"), "pos_sim",
                     C("neg_id").alias("negative_id"),
-                    _trunc6(neg_sim).alias("neg_sim")))
+                    trunc6(side_cosine()).alias("neg_sim")))
 
 
 # --- derived-blocking kNN graph (r6 verdict item 4) ------------------
@@ -1499,8 +1359,6 @@ def ext_knn_graph_derived(spark: SparkSession, sf_dir: str) -> DataFrame:
                          fixtures; exact duplicates co-locate at 1.0) —
                          a shattered or degenerate clustering fails.
     """
-    from ..functions.vector import dot, l2_norm
-
     emb = load_table(spark, sf_dir, "embeddings")
     assigned, edges = knn_graph_derived(emb, k=3)
     edges = edges.localCheckpoint()  # eager — see knn_graph_derived
@@ -1534,15 +1392,11 @@ def ext_knn_graph_derived(spark: SparkSession, sf_dir: str) -> DataFrame:
                           & (C("__first") >= C("__last")))
                     .alias("sims_valid")))
 
-    a = emb.filter(C("vec_id") < KNN_DERIVED_SAMPLE).select(
-        C("vec_id").alias("a_id"), C("embedding").alias("a_vec"),
-        l2_norm(C("embedding")).alias("a_n"))
-    b = emb.select(C("vec_id").alias("b_id"), C("embedding").alias("b_vec"),
-                   l2_norm(C("embedding")).alias("b_n"))
-    sim = dot(C("a_vec"), C("b_vec")) / (C("a_n") * C("b_n"))
+    a = normed_side(emb.filter(C("vec_id") < KNN_DERIVED_SAMPLE), "a")
+    b = normed_side(emb, "b")
     top1 = (F.broadcast(a).join(b, C("a_id") != C("b_id"))
             .groupBy("a_id")
-            .agg(F.min_by(C("b_id"), F.struct((-sim).alias("s"),
+            .agg(F.min_by(C("b_id"), F.struct((-side_cosine()).alias("s"),
                                               C("b_id"))).alias("nn_id")))
     cells = assigned.select(C("vec_id"), C("__cell"))
     rec_row = (top1
@@ -1670,8 +1524,7 @@ def _semdedup_hier_fused(emb: DataFrame, threshold: float, id_col: str,
     def cluster_and_dedup(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values(id_col).reset_index(drop=True)
         coarse_id = int(pdf["__coarse"].iloc[0])
-        m = np.stack([np.asarray(v, dtype=np.float64)
-                      for v in pdf[vec_col]])
+        m = as_matrix(pdf[vec_col])
         lab = _sub_lloyd(m, coarse_id, target)
         norms = np.sqrt((m * m).sum(axis=1))
         kept = np.ones(len(pdf), dtype=bool)
@@ -1754,8 +1607,7 @@ def derive_cells(emb: DataFrame, id_col: str = "vec_id",
     def sub_cluster(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values(id_col).reset_index(drop=True)
         coarse_id = int(pdf["__coarse"].iloc[0])
-        m = np.stack([np.asarray(v, dtype=np.float64)
-                      for v in pdf[vec_col]])
+        m = as_matrix(pdf[vec_col])
         sub = _sub_lloyd(m, coarse_id, target)
         return pd.DataFrame({
             id_col: pdf[id_col],
@@ -1848,10 +1700,6 @@ def ext_diversity_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     distributed Catalyst expression matches the driver numpy fold
     (relative 1e-6 — the two sum doubles in different orders), tying
     the distributed assignment to the fit it claims to serve."""
-    import numpy as np
-
-    from ..functions.vector import dot
-
     emb = load_table(spark, sf_dir, "embeddings")
     ids, centers, r_hist, sample_max_id = kcenter_centers(emb)
     k = len(ids)
@@ -1863,16 +1711,7 @@ def ext_diversity_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     monotone_ok = bool(all(b <= a * (1 + 1e-12) + 1e-15
                            for a, b in zip(r_hist, r_hist[1:])))
 
-    e = C("embedding")
-    dists = []
-    for center in centers:
-        cs = [float(v) for v in center]
-        cn2 = 0.0
-        for v in cs:
-            cn2 += v * v
-        carr = F.array(*[F.lit(v) for v in cs])
-        dists.append(dot(e, e) - 2 * dot(e, carr) + F.lit(cn2))
-    min_d2 = F.least(*dists)
+    min_d2 = F.least(*[dist2_to(C("embedding"), c) for c in centers])
     # The fit sample is the DIVERSITY_SAMPLE_CAP smallest ids (vec_id is
     # unique), so vec_id ≤ max(sample id) identifies exactly that set;
     # n_sample re-counts it distributed as a cross-check.

@@ -17,6 +17,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
+from ..functions.vector import cosine_sim, cosine_sql, normed_side
 from ..registry import op
 from . import textnorm
 
@@ -1086,8 +1087,6 @@ RRF_K = 60  # the standard reciprocal-rank-fusion constant (Cormack '09)
 
 
 def _hybrid_oracle() -> str:
-    from .similarity import _duck_cos
-
     cte, score = _bm25_sql_parts()
     return f"""
     WITH {cte},
@@ -1100,7 +1099,7 @@ def _hybrid_oracle() -> str:
     vr AS (
         SELECT e.vec_id AS id,
                ROW_NUMBER() OVER (
-                   ORDER BY {_duck_cos('e.embedding', 'q.embedding')} DESC,
+                   ORDER BY {cosine_sql('e.embedding', 'q.embedding')} DESC,
                             e.vec_id) AS r_vec
         FROM embeddings e
         CROSS JOIN (SELECT embedding FROM embeddings WHERE vec_id = 0) q
@@ -1137,8 +1136,6 @@ def ext_hybrid_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from pyspark.sql import Window
 
-    from ..functions.vector import dot, l2_norm
-
     docs = load_table(spark, sf_dir, "documents")
     br = (_bm25_scores(docs)
           .withColumn("r_bm25", F.row_number().over(
@@ -1146,10 +1143,8 @@ def ext_hybrid_search(spark: SparkSession, sf_dir: str) -> DataFrame:
           .select(C("doc_id").alias("id"), "r_bm25"))
 
     emb = load_table(spark, sf_dir, "embeddings")
-    q = emb.filter(C("vec_id") == 0).select(
-        C("embedding").alias("__qv"), l2_norm(C("embedding")).alias("__qn"))
-    sim = dot(C("embedding"), C("__qv")) / (l2_norm(C("embedding"))
-                                            * C("__qn"))
+    q = normed_side(emb.filter(C("vec_id") == 0), "__q")
+    sim = cosine_sim(C("embedding"), C("__q_vec"), b_n=C("__q_n"))
     vr = (emb.crossJoin(F.broadcast(q))
           .select(C("vec_id").alias("id"), sim.alias("__sim"))
           .withColumn("r_vec", F.row_number().over(

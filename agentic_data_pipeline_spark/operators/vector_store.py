@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
+from ..functions.vector import normed_side, side_cosine, trunc6
 from ..registry import op
 
 C = F.col
@@ -155,20 +156,18 @@ def ext_ann_int8(spark: SparkSession, sf_dir: str) -> DataFrame:
     materializes). tests/test_expectations_topics_quantize.py pins the
     recall property (int8 preserves float rankings); this op pins the
     int8 arithmetic itself hash-exactly against DuckDB."""
-    from ..functions.vector import dot, l2_norm
-    from .similarity import _trunc6, batch_topk
+    from .similarity import batch_topk
 
     codes = (quantize_int8(load_table(spark, sf_dir, "embeddings"))
              .select("vec_id", "q"))
-    queries = codes.filter(C("vec_id").isin(0, 1, 2)).select(
-        C("vec_id").alias("query_id"), C("q").alias("qq"),
-        l2_norm(C("q")).alias("qn"))
+    queries = normed_side(codes.filter(C("vec_id").isin(0, 1, 2)), "q",
+                          vec_col="q")
     # Corpus norm once per vector below the join (not per pair) — same
     # double, Q× less fold work (r11; mirrors ext_similarity_topk).
-    corpus = codes.select("vec_id", "q", l2_norm(C("q")).alias("en"))
-    sim = dot(C("q"), C("qq")) / (C("en") * C("qn"))
+    corpus = normed_side(codes, "c", vec_col="q")
     scored = (corpus.crossJoin(F.broadcast(queries))
-              .filter(C("vec_id") != C("query_id"))
-              .select("query_id", C("vec_id").alias("neighbor_id"),
-                      _trunc6(sim).alias("sim")))
+              .filter(C("c_id") != C("q_id"))
+              .select(C("q_id").alias("query_id"),
+                      C("c_id").alias("neighbor_id"),
+                      trunc6(side_cosine("c", "q")).alias("sim")))
     return batch_topk(scored, k=5)

@@ -147,7 +147,7 @@ PERF_EPOCH = "r12c"  # r12c: curation quality branch through one
                      # Supersedes:
                      # r11e: corpus norm below the batch-query joins
                      # (ext_similarity_topk sf10 5.26->3.86, ext_ann_int8
-                     # 5.69->4.46; probe_simtopk_norm.py) and q14's
+                     # 5.69->4.46; OPTIMIZATION_r11.md) and q14's
                      # promo-subset broadcast flag join (sf10 1.83->0.84;
                      # probe_q14_promo.py). Supersedes:
                      # r11d: narrow-exchange pass on q3/q5/q7/q8/q9/q10/
