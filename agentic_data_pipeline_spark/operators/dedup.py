@@ -188,12 +188,12 @@ def shingles_exploded(df: DataFrame, id_col: str, text_col: str,
 
     r12 (guide §4.2, the prep-Arrow mechanism extended): generated in ONE
     mapInArrow pass, per document — zero exchanges. The r8→r11 JVM form
-    (kept below as _shingles_exploded_jvm, equality-pinned by
-    tests/test_shingles_arrow.py) posexploded tokens through a
-    partitionBy(id) WINDOW and then took a global ``.distinct()``: one
-    exchange+sort of the whole token stream plus one exchange of the
-    whole shingle stream — per-doc work that never needed to leave its
-    scan task. The r11 curation decomposition charged 80% of that op to
+    (kept as _shingles_exploded_jvm in tests/catalyst_twins.py,
+    equality-pinned by tests/test_shingles_arrow.py) posexploded tokens
+    through a partitionBy(id) WINDOW and then took a global
+    ``.distinct()``: one exchange+sort of the whole token stream plus one
+    exchange of the whole shingle stream — per-doc work that never needed
+    to leave its scan task. The r11 curation decomposition charged 80% of that op to
     this generator; interleaved A/B on the v3 sf10 lake:
     OPTIMIZATION_r12.md "dedup.shingles_exploded — Arrow per-doc
     shingle generator" and "dedup._shingle_batches — vectorized".
@@ -202,39 +202,23 @@ def shingles_exploded(df: DataFrame, id_col: str, text_col: str,
     alnum tokens yield no rows — the exact JVM-form corner semantics
     (the array form yields one empty-string shingle on empty docs;
     callers that must match that corner pre-filter them explicitly).
-    Falls back to the JVM form for non-BIGINT id columns.
 
-    Precondition (both forms): ``id_col`` is unique per input row — the
-    window form would interleave two same-id rows' tokens into one
-    garbage document, the Arrow form would emit per-row (not per-id)
-    distinct shingles. Every caller passes a primary-keyed corpus table.
+    Preconditions: ``id_col`` is BIGINT (a ValueError names any other
+    type) and unique per input row — the window form would interleave
+    two same-id rows' tokens into one garbage document, the Arrow form
+    would emit per-row (not per-id) distinct shingles. Every caller
+    passes a primary-keyed corpus table's int64 ``doc_id``.
     """
     from pyspark.sql.types import LongType
 
-    if not isinstance(df.schema[id_col].dataType, LongType):
-        return _shingles_exploded_jvm(df, id_col, text_col, n)
+    id_type = df.schema[id_col].dataType
+    if not isinstance(id_type, LongType):
+        raise ValueError(
+            f"shingles_exploded: id column {id_col!r} is "
+            f"{id_type.simpleString()}; the Arrow shingle pass takes "
+            "BIGINT ids")
     return (df.select(C(id_col).alias("id"), C(text_col).alias("text"))
             .mapInArrow(_shingle_batches(n, id_col), "id bigint, s string"))
-
-
-def _shingles_exploded_jvm(df: DataFrame, id_col: str, text_col: str,
-                           n: int = 3) -> DataFrame:
-    """The pure-Catalyst r8→r11 form: posexplode + lead() windows +
-    global distinct (one token-stream exchange+sort, one shingle-stream
-    exchange). Kept as the Arrow form's equality reference and as the
-    fallback for non-BIGINT ids."""
-    from pyspark.sql import Window
-
-    toks = textnorm.normalized_tokens(C(text_col))
-    ex = df.select(C(id_col).alias("id"),
-                   F.posexplode(toks).alias("pos", "w"))
-    w = Window.partitionBy("id").orderBy("pos")
-    sh = F.concat_ws(" ", C("w"),
-                     *[F.lead("w", k).over(w) for k in range(1, n)])
-    full = F.lead("w", n - 1).over(w).isNotNull()
-    return (ex.select("id", F.when(full | (C("pos") == 0), sh).alias("s"))
-            .filter(C("s").isNotNull())
-            .distinct())
 
 
 def jaccard(a: Column, b: Column) -> Column:
@@ -458,7 +442,8 @@ def _md5_sig_batches(it):
     cannot change the signature (min is associative/commutative).
 
     The hash family is h_i(s) = textnorm.md5_int_py(f"{i}:{s}", 15) —
-    the Catalyst twin's textnorm.md5_int — hashed through
+    the Catalyst twin's (_md5_sig_jvm in tests/catalyst_twins.py)
+    textnorm.md5_int — hashed through
     textnorm.per_distinct: within a batch each DISTINCT shingle is
     hashed once (dictionary_encode), and the per-TASK memo carries the
     32-vector across batches (md5 is pure; on a Zipfian shingle stream
@@ -496,17 +481,6 @@ def _md5_sig_batches(it):
             + [pa.array(mins[:, i], type=pa.int64())
                for i in range(NUM_HASHES)],
             schema=out_schema)
-
-
-def _md5_sig_jvm(sh: DataFrame) -> DataFrame:
-    """The pure-Catalyst signature aggregate — the r8→r12a shipped form,
-    kept as the Arrow form's equality reference
-    (tests/test_md5_sig_arrow.py): 32 md5+conv expressions per shingle
-    ROW (~832M JVM md5s at sf10, measured 36.6 s of the op)."""
-    return sh.groupBy("id").agg(*[
-        F.min(textnorm.md5_int(F.concat(F.lit(f"{i}:"), C("s")), 15))
-        .alias(f"h{i}") for i in range(NUM_HASHES)
-    ])
 
 
 _SIG_ARROW_SCHEMA = "id bigint, " + ", ".join(

@@ -256,8 +256,9 @@ def _curation_q_batches(it):
     (doc_id, lang, source, text) batches in (eval holdout already cut in
     Catalyst, so the modulo filter stays on the scan side), quality
     survivors (doc_id, lang, source, fp, n_tokens) out. Value-identity
-    with the Catalyst twin (_curation_q_jvm), pinned by
-    tests/test_curation_q_arrow.py incl. synthetic whitespace corners:
+    with the Catalyst twin (_curation_q_jvm in tests/catalyst_twins.py),
+    pinned by tests/test_curation_q_arrow.py incl. synthetic whitespace
+    corners:
 
     - whitespace classes are textnorm.JAVA_WS, written out because
       RE2's \\s lacks \\x0b while java.util.regex's includes it — the
@@ -330,20 +331,6 @@ def _curation_q_batches(it):
              textnorm.fingerprint_arrow(raw.take(take)),
              ntok],
             schema=out_schema)
-
-
-def _curation_q_jvm(docs: DataFrame) -> DataFrame:
-    """The pure-Catalyst quality branch — the r11 shipped form, kept only
-    as the equality reference that tests/test_curation_q_arrow.py compares
-    the Arrow form against; no operator routes to it."""
-    from .text import quality_expr, tokens
-
-    fp = textnorm.fingerprint(C("text"))
-    return (docs.filter((C("doc_id") % 50 != 0)
-                        & (quality_expr(C("text")) >= 0.5))
-            .select("doc_id", "lang", "source", fp.alias("fp"),
-                    F.size(tokens(C("text"))).cast("bigint")
-                    .alias("n_tokens")))
 
 
 @op("ext_curation_pipeline", oracle=_CURATION_ORACLE)
@@ -516,7 +503,7 @@ def _prep_kept_batches(it):
     """mapInArrow body for ext_training_prep_pipeline's scored→kept
     front-end: (doc_id, text) batches in, (doc_id, n_tokens, fp) batches
     of the quality survivors out. Value-identity with the Catalyst form
-    (_prep_kept_jvm), step by step:
+    (_prep_kept_jvm in tests/catalyst_twins.py), step by step:
 
     - normalize: textnorm.words_arrow (the twin's textnorm.words). RE2
       is the SAME regex engine the DuckDB oracle runs (regexp_replace
@@ -582,19 +569,6 @@ def _prep_kept_batches(it):
              pa.array(n[keep], type=pa.int64()),
              textnorm.fingerprint_arrow(text.take(take))],
             schema=out_schema)
-
-
-def _prep_kept_jvm(docs: DataFrame) -> DataFrame:
-    """The pure-Catalyst scored→kept twin of _prep_kept_batches — the r11
-    shipped form, kept only as the equality reference that
-    tests/test_prep_arrow.py compares the Arrow form against row for row;
-    no operator routes to it."""
-    n, score = textnorm.hashed_word_score(C("text"))
-    fp = textnorm.fingerprint(C("text"))
-    return (docs.select("doc_id", n.alias("n_tokens"), score.alias("score"),
-                        fp.alias("fp"))
-            .filter((C("score") >= -0.04) & (C("n_tokens") >= 10))
-            .select("doc_id", "n_tokens", "fp"))
 
 
 @op("ext_training_prep_pipeline", oracle=r"""

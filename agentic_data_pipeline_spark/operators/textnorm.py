@@ -20,11 +20,12 @@ SQL keeps its own spelling as the independent reference.
 
 ASCII contract: the Arrow forms equal the Catalyst forms on ASCII text,
 which every lake holds (tests/test_lake_robustness.py pins printable
-ASCII). Case mapping differs outside it: ``pc.utf8_lower("İstanbul")``
-is "istanbul" but Spark's ``lower`` gives "i̇stanbul" (U+0307 combining
-dot), so ``words_arrow`` yields one token where ``words`` yields
-["i", "stanbul"]. ``pc.utf8_length`` and Spark ``length`` agree on
-astral characters.
+ASCII), and ``words_arrow`` / ``fingerprint_arrow`` raise a ValueError
+on any batch that holds other text. Case mapping differs outside it:
+``pc.utf8_lower("İstanbul")`` is "istanbul" but Spark's ``lower`` gives
+"i̇stanbul" (U+0307 combining dot), so the Arrow split would yield one
+token where ``words`` yields ["i", "stanbul"]. ``pc.utf8_length`` and
+Spark ``length`` agree on astral characters.
 """
 
 from __future__ import annotations
@@ -74,10 +75,22 @@ def hashed_word_score(text: Column) -> tuple[Column, Column]:
     return n, score
 
 
+def _require_ascii(text) -> None:
+    """Raise unless every non-null string of the Arrow array is ASCII."""
+    import pyarrow.compute as pc
+
+    if not pc.all(pc.string_is_ascii(text), min_count=0).as_py():
+        raise ValueError(
+            "textnorm: non-ASCII text in an Arrow text pass; the Arrow "
+            "forms equal the Catalyst forms only on ASCII text (ASCII "
+            "contract, textnorm.py)")
+
+
 def words_arrow(text, alphabet: str = ALNUM):
     """``(joined, words)``: the normalized strings and their split."""
     import pyarrow.compute as pc
 
+    _require_ascii(text)
     joined = pc.utf8_trim(pc.replace_substring_regex(
         pc.utf8_lower(text), pattern=f"[^{alphabet}]+", replacement=" "), " ")
     return joined, pc.split_pattern(joined, " ")
@@ -87,6 +100,7 @@ def fingerprint_arrow(text):
     import pyarrow as pa
     import pyarrow.compute as pc
 
+    _require_ascii(text)
     lowered = pc.utf8_lower(pc.replace_substring_regex(
         text, pattern=JAVA_WS_RUN, replacement=" "))
     return pa.array([None if s is None

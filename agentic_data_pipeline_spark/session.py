@@ -76,14 +76,6 @@ def tune(spark: SparkSession) -> SparkSession:
             spark.conf.set(k, v)
         except Exception:
             pass
-    if os.environ.get("SPARK_GRAFT_NO_BLOOM"):
-        # diagnostic escape hatch: Spark 4 defaults the runtime bloom
-        # filter ON, so "off" must be set explicitly
-        try:
-            spark.conf.set(
-                "spark.sql.optimizer.runtime.bloomFilter.enabled", "false")
-        except Exception:
-            pass
     try:
         if spark.conf.get("spark.sql.shuffle.partitions") == "200":
             spark.conf.set("spark.sql.shuffle.partitions",
@@ -164,8 +156,7 @@ def apply_scaled_shuffle(spark: SparkSession, est_rows: int) -> int:
     # count, a heavy op's corpus size) turns bloom on for the session; a
     # later small-n op-local call must not flip it back off under the
     # tier's other queries.
-    if (est_rows >= BLOOM_MIN_FACT_ROWS
-            and not os.environ.get("SPARK_GRAFT_NO_BLOOM")):
+    if est_rows >= BLOOM_MIN_FACT_ROWS:
         global _BLOOM_RATCHETED
         try:
             spark.conf.set(

@@ -12,17 +12,17 @@ per-block size stays bounded — exactly the invariant blocking exists to
 maintain at scale. documents.text is NOT perturbed, so the dedup family
 sees a 10%-unique corpus — a realistic dup rate for a crawl.
 
-Methodology mirrors bench.py (prepared plans, warm-up passes, best-of-3,
-paired DuckDB twin in the same invocation, loadavg embedded). Prints ONE
-JSON line; results are transcribed into BASELINE.md.
+Timing, the DuckDB twin, the history row and the of-record floor are
+bench.py's own (`spark_runs`, `duckdb_twin`, `paired_artifact`,
+`publish`); this script only builds the lake and scales the shuffle
+partition count to it. Prints ONE JSON line; results are transcribed into
+BASELINE.md.
 """
 
 from __future__ import annotations
 
-import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -57,20 +57,15 @@ KEYS = {
 # ops, with the same iterative-op REBUILD semantics), so the sf1 tier
 # answers the exact question the sf0.1 artifact raises: does the widened
 # set's ratio drop out of the scheduling floor at 10x the data?
-from bench import CLASSIC, HEADLINE as _V2, REBUILD  # noqa: E402
+import bench  # noqa: E402
 
-# Since r6 ext_semdedup derives k from the corpus (semdedup_k_for:
-# ~N/64), so the r5 exclusion is gone: the op runs at this tier with
-# within-cluster pair work held flat by construction. Rows-only op, so it
-# contributes a timing but no twin-ratio term.
-SKIPPED: dict[str, str] = {}
-HEADLINE = [n for n in _V2 if n not in SKIPPED]
+HEADLINE = list(bench.HEADLINE)
 
 # SPARK_GRAFT_ONLY="q16_part_supplier_counts,q22_dormant_customers" runs a
 # SUBSET tier probe (r8 verdict item 4: the weak-mark growth rows at sf10
 # don't need the other ~38 queries). Subset runs record set_version
 # "v2sub" so their partial totals can never merge into the full-set
-# medians of record.
+# floor of record.
 _ONLY = [s for s in os.environ.get("SPARK_GRAFT_ONLY", "").split(",") if s]
 SET_VERSION = "v2"
 if _ONLY:
@@ -140,109 +135,37 @@ def build_lake() -> None:
 
 def main() -> None:
     build_lake()
-    from agentic_data_pipeline_spark.registry import OPS, _ensure_loaded
-    from agentic_data_pipeline_spark.session import get_spark
-    from tests.parity_util import duck_connect
+    import pyarrow.parquet as pq
 
-    _ensure_loaded()
+    from agentic_data_pipeline_spark.session import (
+        apply_scaled_shuffle, get_spark,
+    )
+
     spark = get_spark(app_name=f"adps-bench-{_TIER_TAG}")
     spark.sparkContext.setLogLevel("ERROR")
+    cpus = spark.sparkContext.defaultParallelism
     # Shuffle-partition count follows the tier's data volume (the engine
     # rule, session.scaled_shuffle_partitions — r7 verdict item 8). Sized
     # by the biggest fact table's row count from parquet footer metadata
     # (no scan): sf1 lineitem ~6M rows → 60 partitions on 32 cores.
-    import pyarrow.parquet as pq
-
-    from agentic_data_pipeline_spark.session import apply_scaled_shuffle
     n_fact = pq.ParquetFile(
         os.path.join(DST, "lineitem.parquet")).metadata.num_rows
     n_parts = apply_scaled_shuffle(spark, n_fact)
-    dfs = {n: OPS[n].fn(spark, DST) for n in HEADLINE if n not in REBUILD}
+    runs, starts, start = bench.spark_runs(spark, DST, HEADLINE)
 
-    def run(name: str) -> float:
-        t0 = time.perf_counter()
-        df = OPS[name].fn(spark, DST) if name in REBUILD else dfs[name]
-        df.write.mode("overwrite").format("noop").save()
-        return time.perf_counter() - t0
-
-    for _ in range(2):
-        for n in HEADLINE:
-            run(n)
-    timings = {n: round(min(run(n) for _ in range(3)), 3) for n in HEADLINE}
-
-    # SPARK_GRAFT_SKIP_DUCK=1 skips the paired twin: for conf A/B pairs
-    # (e.g. bloom on/off) only the SPARK side differs, and at sf10 the
-    # heavy iterative twins (recursive-CTE pagerank, cluster fixpoint)
-    # cost ~an hour — engine-code-independent time the floor metric
-    # already merges across invocations. A skipped run records no ratio,
-    # so it can never masquerade as a paired invocation.
-    duck = {}
-    if not os.environ.get("SPARK_GRAFT_SKIP_DUCK"):
-        con = duck_connect(DST)
-        for n in HEADLINE:
-            o = OPS[n].oracle
-            if not o:
-                continue
-
-            def one() -> float:
-                t0 = time.perf_counter()
-                con.execute(o).fetchall()
-                return time.perf_counter() - t0
-
-            one()
-            duck[n] = round(min(one(), one(), one()), 3)
-
-    cov = [n for n in HEADLINE if n in duck]
-    s, d = sum(timings[n] for n in cov), sum(duck[n] for n in cov)
-    ccov = [n for n in CLASSIC if n in duck]
-    cs, cd = sum(timings[n] for n in ccov), sum(duck[n] for n in ccov)
-    artifact = {
-        "metric": f"{_TIER_TAG}_headline_total_sec",
-        "value": round(sum(timings.values()), 3),
-        "unit": "sec", "sf": TIER_SF, "replicas_of_sf0.1": REPLICAS,
-        "set_version": SET_VERSION, "n_queries": len(HEADLINE),
-        "queries": timings, "duckdb_twin_sec": duck,
-        "spark_cov_sec": round(s, 3), "duck_cov_sec": round(d, 3),
-        "spark_over_duckdb_ratio": round(s / d, 3) if d else None,
-        "classic15_ratio": round(cs / cd, 3) if cd else None,
-        "skipped": SKIPPED,
-        "shuffle_partitions": n_parts,
-        "invocation_unix": round(time.time(), 1),
-        "load_avg": [round(x, 2) for x in os.getloadavg()],
-    }
-    # Same-file history as bench.py (entries distinguished by sf):
-    # of-record = the min-merged per-query floor over same-epoch
-    # invocations (bench.py header, r10), with the raw invocation band
-    # kept in the history summary. Same git-SHA / perf-epoch provenance
-    # and the same committed un-truncated detail artifact as bench.py.
-    from bench import (
-        PERF_EPOCH, _git_sha, _record_history, compact_line, write_detail,
-    )
-    artifact["git_sha"] = _git_sha()
-    artifact["perf_epoch"] = PERF_EPOCH
-    artifact["value_live"] = artifact["value"]
-    artifact["ratio_live"] = artifact["spark_over_duckdb_ratio"]
-    hist_artifact = dict(artifact,
-                         duckdb_twin_total_sec=round(sum(duck.values()), 3))
-    hist = _record_history(hist_artifact)
-    artifact["history_same_sf"] = hist or {}
-    rec, window = None, "none"
-    if (hist or {}).get("ratio_floor_epoch") is not None:
-        artifact["ratio_of_record"] = hist["ratio_floor_epoch"]
-        window = ("epoch_floor(n="
-                  f"{hist.get('n_epoch_floor_rows', hist.get('n_epoch_invocations'))})")
-    else:
-        if (hist or {}).get("n_epoch_invocations", 0) >= 3:
-            rec, window = hist.get("epoch_median_invocation"), "perf_epoch"
-        if rec is None and (hist or {}).get("median_invocation"):
-            rec, window = hist["median_invocation"], "all_history"
-        artifact["ratio_of_record"] = (
-            rec["spark_over_duckdb_ratio"] if rec
-            else artifact["spark_over_duckdb_ratio"])
-    artifact["of_record_provenance"] = {"window": window}
-    detail = write_detail(artifact, f"{_TIER_TAG}_{SET_VERSION}")
-    print(json.dumps(compact_line(artifact, detail),
-                     separators=(",", ":")))
+    # SPARK_GRAFT_SKIP_DUCK=1 skips the paired twin: at sf10 the heavy
+    # iterative twins (recursive-CTE pagerank, cluster fixpoint) cost ~an
+    # hour of engine-code-independent time the floor already merges
+    # across same-cpus invocations. A skipped run records no ratio, so it
+    # can never masquerade as a paired invocation.
+    duck = ({} if os.environ.get("SPARK_GRAFT_SKIP_DUCK")
+            else bench.duckdb_twin(DST, HEADLINE, cpus))
+    artifact = bench.paired_artifact(runs, starts, start, duck, sf=TIER_SF,
+                                     set_version=SET_VERSION, cpus=cpus)
+    artifact.update({"metric": f"{_TIER_TAG}_headline_total_sec",
+                     "replicas_of_sf0.1": REPLICAS,
+                     "shuffle_partitions": n_parts})
+    bench.publish(artifact, f"{_TIER_TAG}_{SET_VERSION}")
 
 
 if __name__ == "__main__":

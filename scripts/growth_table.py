@@ -1,8 +1,9 @@
 #!/usr/bin/env python3
 """Three-tier growth table (r7 verdict item 5): per-query
 {spark, duck, ratio} at sf0.1 / sf1 / sf3 from the committed bench
-detail artifacts, so the "dispatch floor amortizes with scale" defense
-for the sub-second watch queries is a measured curve, not an argument.
+detail artifacts and bench.py's of-record floor, so the "dispatch floor
+amortizes with scale" defense for the sub-second watch queries is a
+measured curve, not an argument.
 
 Usage: python scripts/growth_table.py [--all]
   default: the VERDICT r7 watch queries + the tier totals
@@ -15,6 +16,10 @@ import os
 import sys
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
+
+import bench  # noqa: E402
+
 TIERS = ["0.1", "1", "3", "10"]  # sf10 is the r9 WATCH-SUBSET tier
 # (SPARK_GRAFT_ONLY, set_version v2sub): its artifact carries only the 8
 # watch queries, so its "twin-covered total" covers just those.
@@ -26,60 +31,20 @@ WATCH = [
 
 
 def load(tier: str) -> dict:
-    """Detail artifact for the tier, with per-query times merged down to
-    the min across every SAME-SHA invocation recorded in
-    BENCH_HISTORY.jsonl (each invocation is itself best-of-3; the min
-    over invocations is the least-contended measurement of the SAME
-    code). History rows carry per-query maps since r8; older rows — and
-    the detail file itself — still contribute."""
+    """Detail artifact for the tier, its per-query Spark and DuckDB times
+    replaced by bench.floor over BENCH_HISTORY.jsonl (the of-record rule:
+    same sf, set_version, perf_epoch and cpus). An artifact recorded
+    without ``cpus`` merges nothing and is shown as recorded."""
     path = os.path.join(REPO, "bench_artifacts", f"detail_sf{tier}_v2.json")
     if not os.path.isfile(path):  # subset tier (sf10): v2sub artifact
         path = os.path.join(REPO, "bench_artifacts",
                             f"detail_sf{tier}_v2sub.json")
     art = json.load(open(path))
-    sha, sf = art.get("git_sha"), art.get("sf")
-    n_inv = 1
-    hist_path = os.path.join(REPO, "BENCH_HISTORY.jsonl")
-    if os.path.isfile(hist_path):
-        for line in open(hist_path):
-            e = json.loads(line)
-            if e.get("sf") != sf or e.get("set_version") != art.get(
-                    "set_version"):
-                continue
-            if e.get("invocation_unix") == art.get("invocation_unix"):
-                continue  # the artifact's own run also logs a history row
-                # — counting it would overstate n_inv by one (r8 ADVICE)
-            e_sha = e.get("git_sha") or ""
-            # compact bench lines truncate the sha to 12 chars; match on
-            # the common prefix — but BOTH shas must be non-empty, or a
-            # row recorded outside a git checkout (git_sha=None → "")
-            # would prefix-match everything (r8 ADVICE). Spark times only
-            # merge across the SAME sha (the engine changed otherwise)...
-            # ...and never across a conf-A/B diagnostic row (bloom
-            # forced off — same sha, different engine conf); its duck
-            # times below are still valid (twin is conf-independent).
-            if sha and e_sha and e_sha.startswith(sha[:len(e_sha)]) \
-                    and e.get("queries") and not e.get("no_bloom"):
-                n_inv += 1
-                for k, v in e["queries"].items():
-                    if k in art["queries"]:
-                        art["queries"][k] = min(art["queries"][k], v)
-            # ...but the DuckDB twin runs oracle SQL, which is pinned by
-            # set_version — its minima merge across every invocation of
-            # the set (the twin's time is engine-code-independent).
-            # Seed-or-merge (r10): a SPARK_GRAFT_SKIP_DUCK invocation
-            # overwrites the detail artifact with an EMPTY twin map, so
-            # history is the only surviving twin evidence for the tier.
-            # Only keys the artifact's own `queries` covers (r10 ADVICE):
-            # SPARK_GRAFT_ONLY subsets all share set_version 'v2sub', so
-            # an unguarded merge could seed twin keys from a DIFFERENT
-            # subset, deflating the twin-covered ratio in Spark's favor.
-            for k, v in (e.get("duckdb_twin_sec") or {}).items():
-                if k not in art["queries"]:
-                    continue
-                cur = art["duckdb_twin_sec"].get(k)
-                art["duckdb_twin_sec"][k] = v if cur is None else min(cur, v)
-    art["n_merged_invocations"] = n_inv
+    fl = bench.floor(bench.read_history(), art)
+    if fl["n_epoch_floor_rows"]:
+        art["queries"] = fl["queries"]
+        art["duckdb_twin_sec"] = fl["duckdb_twin_sec"]
+    art["n_merged_invocations"] = max(1, fl["n_epoch_floor_rows"])
     return art
 
 
@@ -112,10 +77,12 @@ def main() -> None:
         # key absent from `queries` must not inflate d_tot.
         s_tot = sum(v for k, v in a["queries"].items() if k in twin)
         d_tot = sum(v for k, v in twin.items() if k in a["queries"])
-        total.append(f" {s_tot:.1f} | {d_tot:.1f} | {s_tot / d_tot:.2f}x |")
+        r = f"{s_tot / d_tot:.2f}x" if d_tot else "—"
+        total.append(f" {s_tot:.1f} | {d_tot:.1f} | {r} |")
     print("| **twin-covered total** |" + "".join(total))
     shas = {t: f"{arts[t].get('git_sha', '?')[:7]}"
-               f"(n={arts[t]['n_merged_invocations']})" for t in TIERS}
+               f"(n={arts[t]['n_merged_invocations']},"
+               f"cpus={arts[t].get('cpus')})" for t in TIERS}
     print(f"\nartifact shas: {shas}")
 
 

@@ -1,18 +1,20 @@
 """The of-record floor metric (r9 verdict item 6, r10): min-merged
-per-query Spark minima over SAME-EPOCH invocations ÷ DuckDB-twin minima
-over ALL same-set invocations. Pure-JSON logic in bench._record_history —
+per-query Spark minima over same-(sf, set_version, perf_epoch, cpus)
+invocations ÷ DuckDB-twin minima over same-(sf, set_version, cpus)
+invocations. Pure-JSON logic in bench._record_history / bench.floor —
 no Spark session needed."""
 
 import json
 
 
-def _art(unix, epoch, queries, duck, ratio=2.0):
+def _art(unix, epoch, queries, duck, ratio=2.0, cpus=4):
     return {
         "sf": 0.1, "set_version": "v2", "invocation_unix": unix,
         "load_avg": [1.0, 1.0, 1.0], "duckdb_twin_total_sec": 1.0,
         "spark_over_duckdb_ratio": ratio, "value_live": sum(
             queries.values()), "git_sha": "deadbeef",
         "perf_epoch": epoch, "queries": queries, "duckdb_twin_sec": duck,
+        "cpus": cpus,
     }
 
 
@@ -39,9 +41,8 @@ def test_floor_merges_spark_same_epoch_duck_all_set(tmp_path):
     assert out["floor_duck_cov_sec"] == 0.1
     assert out["ratio_floor_epoch"] == 4.0
     assert out["value_floor_epoch"] == 0.4
-    assert out["n_epoch_invocations"] == 2
-    # the raw band still reflects every invocation
-    assert out["n_invocations"] == 3
+    assert out["n_epoch_floor_rows"] == 2
+    assert out["n_duck_floor_rows"] == 3
     assert len(json.loads(open(hist).readlines()[-1])["queries"]) == 2
 
 
@@ -59,8 +60,7 @@ def test_floor_covers_only_twin_covered_queries(tmp_path):
 def test_skip_duck_row_enters_spark_floor(tmp_path):
     """r10 ADVICE (medium): a SPARK_GRAFT_SKIP_DUCK invocation records
     ratio=None — it must still contribute its per-query Spark minima to
-    the floor (default conf, same epoch), while staying out of the
-    median/band statistics (no paired ratio exists for it)."""
+    the floor (default conf, same epoch); it adds no twin minima."""
     import bench
 
     hist = str(tmp_path / "h.jsonl")
@@ -69,25 +69,46 @@ def test_skip_duck_row_enters_spark_floor(tmp_path):
     out = bench._record_history(
         _art(2.0, "rX", {"q1": 0.20}, {}, ratio=None), hist_path=hist)
     assert out["ratio_floor_epoch"] == 2.0      # spark min 0.20 / duck 0.10
-    assert out["n_invocations"] == 1            # median window: paired only
     assert out["n_epoch_floor_rows"] == 2
+    assert out["n_duck_floor_rows"] == 1
 
 
-def test_no_bloom_row_duck_merges_spark_does_not(tmp_path, monkeypatch):
-    """r10 ADVICE (low): a no_bloom conf-A/B row's Spark times must stay
-    out of the floor (different engine conf) but its DuckDB twin times are
-    conf-independent evidence and merge into duck_min."""
+def test_floor_merges_only_same_cpus_rows(tmp_path):
+    """Numbers taken at different core counts never merge: a local[4]
+    floor takes its Spark and DuckDB minima from cpus=4 rows only, and a
+    row recorded without cpus merges into no floor, not even its own."""
     import bench
 
     hist = str(tmp_path / "h.jsonl")
-    monkeypatch.setenv("SPARK_GRAFT_NO_BLOOM", "1")
     bench._record_history(
-        _art(1.0, "rX", {"q1": 0.05}, {"q1": 0.02}), hist_path=hist)
-    monkeypatch.delenv("SPARK_GRAFT_NO_BLOOM")
+        _art(1.0, "rX", {"q1": 0.05}, {"q1": 0.01}, cpus=32), hist_path=hist)
+    legacy = _art(2.0, "rX", {"q1": 0.06}, {"q1": 0.015})
+    del legacy["cpus"]
+    assert bench._record_history(legacy, hist_path=hist)[
+        "n_epoch_floor_rows"] == 0
+    bench._record_history(
+        _art(3.0, "rX", {"q1": 0.50}, {"q1": 0.20}), hist_path=hist)
     out = bench._record_history(
-        _art(2.0, "rX", {"q1": 0.40}, {"q1": 0.10}), hist_path=hist)
-    # spark floor ignores the no_bloom 0.05; duck floor takes its 0.02
+        _art(4.0, "rX", {"q1": 0.40}, {"q1": 0.25}), hist_path=hist)
     assert out["floor_spark_cov_sec"] == 0.4
-    assert out["floor_duck_cov_sec"] == 0.02
-    assert out["ratio_floor_epoch"] == 20.0
-    assert out["n_epoch_floor_rows"] == 1
+    assert out["floor_duck_cov_sec"] == 0.2
+    assert out["ratio_floor_epoch"] == 2.0
+    assert out["value_floor_epoch"] == 0.4
+    assert out["n_epoch_floor_rows"] == 2
+    assert out["n_duck_floor_rows"] == 2
+    assert json.loads(open(hist).readlines()[-1])["cpus"] == 4
+
+
+def test_floor_counts_only_this_invocations_queries(tmp_path):
+    """Subset runs share a set_version; one subset's floor must not add
+    the queries another subset ran."""
+    import bench
+
+    hist = str(tmp_path / "h.jsonl")
+    bench._record_history(
+        _art(1.0, "rX", {"q1": 0.30, "q2": 0.70}, {"q1": 0.1, "q2": 0.2}),
+        hist_path=hist)
+    out = bench._record_history(
+        _art(2.0, "rX", {"q1": 0.20}, {"q1": 0.1}), hist_path=hist)
+    assert out["value_floor_epoch"] == 0.2
+    assert out["ratio_floor_epoch"] == 2.0

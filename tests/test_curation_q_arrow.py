@@ -11,9 +11,8 @@ from pyspark.sql import functions as F
 from tests.conftest import SF_SMOKE
 
 from agentic_data_pipeline_spark.catalog import load_table
-from agentic_data_pipeline_spark.operators.prep import (
-    _curation_q_batches, _curation_q_jvm,
-)
+from agentic_data_pipeline_spark.operators.prep import _curation_q_batches
+from tests.catalyst_twins import _curation_q_jvm
 
 _ARROW_SCHEMA = ("doc_id bigint, lang string, source string, "
                  "fp string, n_tokens bigint")

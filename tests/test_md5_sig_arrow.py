@@ -14,9 +14,9 @@ from tests.conftest import SF_SMOKE
 from agentic_data_pipeline_spark.catalog import load_table
 from agentic_data_pipeline_spark.operators import textnorm
 from agentic_data_pipeline_spark.operators.dedup import (
-    NUM_HASHES, _SIG_ARROW_SCHEMA, _md5_sig_batches, _md5_sig_jvm,
-    shingles_exploded,
+    NUM_HASHES, _SIG_ARROW_SCHEMA, _md5_sig_batches, shingles_exploded,
 )
+from tests.catalyst_twins import _md5_sig_jvm
 
 
 def _arrow_sig(sh):

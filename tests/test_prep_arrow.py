@@ -11,10 +11,10 @@ import os
 from tests.conftest import SF_CORRECT, SF_SMOKE
 
 from agentic_data_pipeline_spark.operators.prep import (
-    _prep_kept_jvm, ext_training_prep_pipeline,
+    _prep_kept_batches, ext_training_prep_pipeline,
 )
-from agentic_data_pipeline_spark.operators.prep import _prep_kept_batches
 from agentic_data_pipeline_spark.catalog import load_table
+from tests.catalyst_twins import _prep_kept_jvm
 
 
 def test_prep_arrow_kept_set_matches_catalyst(spark):

@@ -11,9 +11,8 @@ from pyspark.sql import functions as F
 from tests.conftest import SF_SMOKE
 
 from agentic_data_pipeline_spark.catalog import load_table
-from agentic_data_pipeline_spark.operators.dedup import (
-    _shingles_exploded_jvm, shingles_exploded,
-)
+from agentic_data_pipeline_spark.operators.dedup import shingles_exploded
+from tests.catalyst_twins import _shingles_exploded_jvm
 
 
 def test_shingles_arrow_matches_jvm_on_fixture(spark):
@@ -59,10 +58,10 @@ def test_shingles_arrow_corner_semantics(spark):
     assert [r for r in got8 if r[0] == 5] == [(5, "x x x x x x x x")]
 
 
-def test_shingles_non_bigint_id_falls_back(spark):
+def test_shingles_non_bigint_id_is_rejected_with_clear_error(spark):
     df = spark.createDataFrame([("k1", "a b c d")], "k string, text string")
-    out = sorted(map(tuple, shingles_exploded(df, "k", "text", 3).collect()))
-    assert out == [("k1", "a b c"), ("k1", "b c d")]
+    with pytest.raises(ValueError, match=r"id column 'k' is string.*BIGINT"):
+        shingles_exploded(df, "k", "text", 3)
 
 
 def test_shingles_null_id_is_rejected_with_clear_error(spark):

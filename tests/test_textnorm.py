@@ -106,12 +106,48 @@ def test_per_distinct_hashes_each_string_once_per_task(monkeypatch):
 
 def test_ascii_contract_example_holds(spark):
     """The module docstring's non-ASCII example: the engines' lower()
-    differ on 'İ', so the forms only agree on ASCII; lengths agree."""
+    differ on 'İ', so the forms only agree on ASCII and the Arrow forms
+    refuse other text; lengths agree."""
     df = spark.createDataFrame([("İstanbul",), ("a\U0001F600b",)], "t string")
     arr = pa.array(["İstanbul", "a\U0001F600b"])
     assert _collect(df, textnorm.words(F.col("t")))[0] == ["i", "stanbul"]
-    assert textnorm.words_arrow(arr)[1].to_pylist()[0] == ["istanbul"]
+    assert pc.utf8_lower(arr).to_pylist()[0] == "istanbul"
+    for arrow_form in (textnorm.words_arrow, textnorm.fingerprint_arrow):
+        with pytest.raises(ValueError, match=ASCII_ERROR):
+            arrow_form(arr)
     assert _collect(df, F.length("t")) == pc.utf8_length(arr).to_pylist()
+
+
+ASCII_ERROR = r"non-ASCII text in an Arrow text pass.*only on ASCII text"
+_LONG = ("İstanbul keeps eleven hundred ancient buildings standing along "
+         "narrow winding streets beside the famous harbour waterfront")
+
+
+def test_arrow_text_passes_reject_non_ascii_text(spark):
+    """The shingle, curation and prep Arrow passes each stop on a batch
+    holding 'İstanbul' with the ASCII-contract error instead of emitting
+    rows the Catalyst forms would not. The text is long and plain enough
+    to pass both quality filters, so the fingerprint check is reached."""
+    from pyspark.errors import PythonException
+
+    from agentic_data_pipeline_spark.operators.dedup import shingles_exploded
+    from agentic_data_pipeline_spark.operators.prep import (
+        _curation_q_batches, _prep_kept_batches,
+    )
+
+    docs = spark.createDataFrame(
+        [(1, "en", "web", _LONG), (2, "en", "web", "plain ascii text")],
+        "doc_id bigint, lang string, source string, text string")
+    passes = [
+        shingles_exploded(docs, "doc_id", "text", 3),
+        docs.mapInArrow(_curation_q_batches, "doc_id bigint, lang string, "
+                        "source string, fp string, n_tokens bigint"),
+        docs.select("doc_id", "text").mapInArrow(
+            _prep_kept_batches, "doc_id bigint, n_tokens bigint, fp string"),
+    ]
+    for df in passes:
+        with pytest.raises(PythonException, match=ASCII_ERROR):
+            df.collect()
 
 
 FORBIDDEN = {"[^a-z0-9]+", "[^a-z]+"}
