@@ -45,6 +45,7 @@ from pyspark.sql import functions as F
 from ..catalog import load_table
 from ..functions.vector import near_dup_pairs
 from ..registry import op
+from ..session import pin
 from . import textnorm
 
 C = F.col
@@ -490,20 +491,11 @@ _SIG_ARROW_SCHEMA = "id bigint, " + ", ".join(
 def _md5_bands_and_sets(df: DataFrame, id_col: str,
                         text_col: str) -> tuple[DataFrame, DataFrame]:
     """Shared md5-family LSH construction: per-doc (band, band-hash) rows
-    and distinct-shingle sets, off ONE checkpointed exploded-shingle
-    stream (the md5 hashes dominate this variant's cost — A/B in
-    BASELINE.md — so the stream is materialized once and feeds both the
-    signature aggregate and the verify sets)."""
-    sh = _ensure_parallelism(
-        shingles_exploded(df, id_col, text_col, 3)).localCheckpoint()
-    # ^ stays EAGER (r11): the lazy form materializes only under the
-    # bands/sets consumers, by which point this builder scope is gone and
-    # the ContextCleaner has dropped the subtree's SQL-metric accumulators
-    # — every task completion then logs "ERROR DAGScheduler: Failed to
-    # update accumulator" (results unaffected, but 47 ERROR lines per
-    # execution measured in the r11 lazy-pin sweep; probe log kept in
-    # OPTIMIZATION_r11.md). The other lazy pins materialize while their
-    # builder is alive and stay quiet.
+    and distinct-shingle sets, off ONE pinned exploded-shingle stream
+    (the md5 hashes dominate this variant's cost — A/B in BASELINE.md —
+    so the stream is materialized once and feeds both the signature
+    aggregate and the verify sets)."""
+    sh = pin(_ensure_parallelism(shingles_exploded(df, id_col, text_col, 3)))
 
     # r12 session 2: the signature hashes run through one mapInArrow
     # pass emitting per-batch per-id partial minima (_md5_sig_batches —
@@ -544,7 +536,7 @@ def minhash_candidates_md5(df: DataFrame, id_col: str, text_col: str,
     both engines; band key = md5 of the comma-joined 4-row slice. Same
     tail as the xxhash64 path (_minhash_verify: band-bucket self-join,
     verify-join on survivors only); only the signature pass differs — a
-    checkpointed exploded-shingle stream feeding Arrow partial mins
+    pinned exploded-shingle stream feeding Arrow partial mins
     (_md5_bands_and_sets). The md5 family costs ~4× the whole-op time of
     xxhash64 (measured, BASELINE.md), which is exactly why the
     PRODUCTION op keeps the engine hash and this variant exists for
@@ -944,19 +936,17 @@ def connected_components(vertices: DataFrame, edges: DataFrame,
     shuffle on the edge key + one on the vertex id. Labels are monotone
     non-increasing, so the rounds needed = the graph diameter; near-dup
     graphs are tiny dense clusters (diameter ≤ 3-4 in practice). Lineage is
-    cut with localCheckpoint each round (iterative plans otherwise grow
+    cut with ``pin`` each round (iterative plans otherwise grow
     exponentially); convergence is detected by the label-sum fixpoint (one
     cheap agg per round — strictly decreasing until converged). At much
     larger diameters switch to large-star/small-star (Kiveris '14), which
     converges in O(log n) rounds over the same primitives.
 
-    Every cut is a lazy ``localCheckpoint`` and the fixpoint collect()
-    runs every round: that collect() is the next job and materializes a
-    lazy cut's blocks, so an eager cut's count() is a wasted driver-synced
-    job, and checking every 2nd round costs more in extra shuffled rounds
-    than it saves in syncs (OPTIMIZATION_r11.md "connected_components /
-    _star ... lazy cuts in both loops", OPTIMIZATION_r12.md "Measured
-    negatives").
+    The fixpoint collect() runs every round: it is the next job and
+    materializes the round's pin, and checking every 2nd round costs more
+    in extra shuffled rounds than it saves in syncs (OPTIMIZATION_r11.md
+    "connected_components / _star ... lazy cuts in both loops",
+    OPTIMIZATION_r12.md "Measured negatives").
     """
     # Materialize the symmetrized edge list ONCE before iterating: `edges`
     # is typically the expensive candidate-generation subtree (all-pairs /
@@ -966,11 +956,9 @@ def connected_components(vertices: DataFrame, edges: DataFrame,
     # O(diameter × candidate-gen) at 100 TB. Measured at sf0.1 on
     # ext_dedup_clusters_bounded (exact all-pairs front-end, ~4 rounds):
     # 3.3-4.3 s → 2.0 s, and run-to-run variance collapses with it.
-    sym = (edges.select("s", "t")
-           .union(edges.select(C("t").alias("s"), C("s").alias("t")))
-           .localCheckpoint(eager=False))
-    comp = (vertices.select(C("id"), C("id").alias("comp"))
-            .localCheckpoint(eager=False))
+    sym = pin(edges.select("s", "t")
+              .union(edges.select(C("t").alias("s"), C("s").alias("t"))))
+    comp = pin(vertices.select(C("id"), C("id").alias("comp")))
     prev_sum = None
     rounds = 0
     for _ in range(max_iter):
@@ -979,13 +967,11 @@ def connected_components(vertices: DataFrame, edges: DataFrame,
             .groupBy(C("t").alias("_mid"))
             .agg(F.min("comp").alias("_nbr_min"))
         )
-        comp = (
+        comp = pin(
             comp.join(msgs, C("id") == C("_mid"), "left")
             .select("id",
                     F.least(C("comp"), F.coalesce(C("_nbr_min"), C("comp")))
-                    .alias("comp"))
-            .localCheckpoint(eager=False)
-        )
+                    .alias("comp")))
         rounds += 1
         s = comp.agg(F.sum("comp")).collect()[0][0]
         if s == prev_sum:
@@ -1025,21 +1011,18 @@ def connected_components_star(vertices: DataFrame, edges: DataFrame,
 
     Both phases are groupBy + join over the edge list — plain hash
     shuffles, nothing driver-side; per-round lineage is cut with
-    localCheckpoint exactly like the min-label loop. Returns
+    ``pin`` exactly like the min-label loop. Returns
     (id, component_id = min reachable id), isolated vertices map to
     themselves — bit-identical contract to ``connected_components``
     (pytest pins equality on random graphs; the chain probe pins the
     round-count separation: scripts/probe_cc_star.py).
 
-    Cuts are lazy and the fixpoint signature is collected every round,
-    for the same measured reason as ``connected_components``: that
-    collect() materializes a lazy cut's blocks, so an eager cut's count()
-    is a wasted driver-synced job (OPTIMIZATION_r11.md, OPTIMIZATION_r12.md
-    "Measured negatives").
+    The fixpoint signature is collected every round, for the same
+    measured reason as ``connected_components`` (OPTIMIZATION_r11.md,
+    OPTIMIZATION_r12.md "Measured negatives").
     """
-    E = (edges.select(C("s").alias("a"), C("t").alias("b"))
-         .filter(C("a") != C("b")).distinct()
-         .localCheckpoint(eager=False))
+    E = pin(edges.select(C("s").alias("a"), C("t").alias("b"))
+            .filter(C("a") != C("b")).distinct())
     prev_sig = None
     rounds = 0
     for _ in range(max_iter):
@@ -1056,11 +1039,10 @@ def connected_components_star(vertices: DataFrame, edges: DataFrame,
         smins = (oriented.groupBy("a")
                  .agg(F.least(F.min("b"), F.first("a")).alias("m")))
         joined = oriented.join(smins, "a")
-        E = (joined.select(C("b").alias("a"), C("m").alias("b"))
-             .union(smins.select(C("a"), C("m").alias("b")))
-             .filter(C("a") != C("b"))
-             .distinct()
-             .localCheckpoint(eager=False))
+        E = pin(joined.select(C("b").alias("a"), C("m").alias("b"))
+                .union(smins.select(C("a"), C("m").alias("b")))
+                .filter(C("a") != C("b"))
+                .distinct())
         rounds += 1
         # Decimal(38,0) sums: the xxhash64 sum overflows BIGINT under
         # ANSI mode after a handful of rows; decimal accumulation is

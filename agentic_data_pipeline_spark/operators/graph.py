@@ -16,6 +16,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import load_table
 from ..registry import op
+from ..session import pin
 from .similarity import _KNN_GRAPH_ORACLE
 
 C = F.col
@@ -33,16 +34,14 @@ def pagerank(vertices: DataFrame, edges: DataFrame, damping: float = 0.85,
     the rank update — part of the same distributed plan, zero driver
     round-trips per iteration (the r4 nit: a scalar `.collect()` per
     round cost 10 extra driver-synced jobs for nothing).
-    localCheckpoint cuts the per-round lineage. At 100 TB-corpus graph
+    ``pin`` cuts the per-round lineage. At 100 TB-corpus graph
     sizes the state is two (id, double) tables partitioned on id; rounds
     are fixed-count, so the whole run is `iters` bounded shuffles.
 
-    Every cut is a lazy ``localCheckpoint`` on the loop-invariant inputs
-    and after every round: the next job materializes a lazy cut's blocks,
-    so an eager cut's count() is a wasted driver-synced job (eager, every
-    2nd/5th-round and disk-checkpoint cuts all measured slower or a wash:
-    OPTIMIZATION_r11.md "ext_pagerank — lazy per-round lineage cuts",
-    OPTIMIZATION_r12.md "Measured negatives").
+    The loop-invariant inputs are pinned once and the state after every
+    round (every 2nd/5th-round and disk-checkpoint cuts measured slower
+    or a wash: OPTIMIZATION_r11.md "ext_pagerank — lazy per-round lineage
+    cuts", OPTIMIZATION_r12.md "Measured negatives").
     """
     from pyspark.sql import Window
 
@@ -53,24 +52,24 @@ def pagerank(vertices: DataFrame, edges: DataFrame, damping: float = 0.85,
     # here the full BLAS kNN construction — TWICE and paid an extra join
     # (same recompute class as the r6 connected-components fix;
     # interleaved A/B at sf0.1: 3.61 s → 3.16 s, ranks bit-identical).
-    w_edges = edges.select(
+    w_edges = pin(edges.select(
         "src", "dst",
         (1.0 / F.count(F.lit(1)).over(Window.partitionBy("src")))
-        .alias("w")).localCheckpoint(eager=False)
+        .alias("w")))
     has_out = w_edges.select("src").distinct()
     # Dangling-ness is a property of the GRAPH, not the iteration: resolve
     # it once into a boolean carried on the rank state, so each round's
-    # dangling mass is a filter+agg over the checkpointed state instead of
+    # dangling mass is a filter+agg over the pinned state instead of
     # a fresh anti-join (one join per iteration saved — measured ~20% off
     # the 10-round sf0.1 wall time), and the update joins the prior state
     # rather than rescanning the vertex table.
-    ranks = (vertices
-             .join(has_out.select(C("src").alias("id"),
-                                  F.lit(True).alias("__has")),
-                   "id", "left")
-             .select("id", F.lit(1.0 / n).alias("rank"),
-                     F.coalesce(C("__has"), F.lit(False)).alias("has_out"))
-             .localCheckpoint(eager=False))
+    ranks = pin(vertices
+                .join(has_out.select(C("src").alias("id"),
+                                     F.lit(True).alias("__has")),
+                      "id", "left")
+                .select("id", F.lit(1.0 / n).alias("rank"),
+                        F.coalesce(C("__has"), F.lit(False))
+                        .alias("has_out")))
     for _ in range(iters):
         dang = (ranks.filter(~C("has_out"))
                 .agg(F.coalesce(F.sum("rank"), F.lit(0.0)).alias("__dang")))
@@ -82,16 +81,15 @@ def pagerank(vertices: DataFrame, edges: DataFrame, damping: float = 0.85,
         # double arithmetic as the oracle's recursive step.
         base = (F.lit((1.0 - damping) / n)
                 + F.lit(damping) * C("__dang") / F.lit(float(n)))
-        ranks = (ranks.select("id", "has_out")
-                 .join(contribs, C("id") == C("dst"), "left")
-                 .crossJoin(F.broadcast(dang))
-                 .select("id",
-                         (base
-                          + F.lit(damping) * F.coalesce(C("contrib"),
-                                                        F.lit(0.0)))
-                         .alias("rank"),
-                         "has_out")
-                 .localCheckpoint(eager=False))
+        ranks = pin(ranks.select("id", "has_out")
+                    .join(contribs, C("id") == C("dst"), "left")
+                    .crossJoin(F.broadcast(dang))
+                    .select("id",
+                            (base
+                             + F.lit(damping) * F.coalesce(C("contrib"),
+                                                           F.lit(0.0)))
+                            .alias("rank"),
+                            "has_out"))
     return ranks.select("id", "rank")
 
 
@@ -154,9 +152,6 @@ def ext_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
              .select(C("vec_id").alias("src"), C("neighbor_id").alias("dst")))
     verts = (load_table(spark, sf_dir, "embeddings")
              .select(C("vec_id").alias("id")))
-    # Lazy cuts + AQE (pagerank's fixed policy) floor 2.31 s vs eager's
-    # 2.62 s at sf0.1; AQE-off loses badly (32 uncoalesced tasks/stage):
-    # OPTIMIZATION_r11.md "ext_pagerank — lazy per-round lineage cuts".
     return (pagerank(verts, edges, damping=0.85, iters=10)
             .select("id", (F.floor(C("rank") * 1e9 + 1e-3) / 1e9)
                     .alias("rank")))
@@ -213,14 +208,12 @@ def triangle_count(edges: DataFrame, salt_threshold: int | None = None,
                                      & (C("u") < C("v")))
     # Oriented edge a→b with a ≺ b in (degree, id) order; keep b's key
     # so wedge legs can be ordered without re-joining degrees.
-    oriented = (with_deg.select(
+    # reused three times below (two wedge legs + closing probe): pin,
+    # don't recompute
+    oriented = pin(with_deg.select(
         F.when(u_first, C("u")).otherwise(C("v")).alias("a"),
         F.when(u_first, C("v")).otherwise(C("u")).alias("b"),
-        F.when(u_first, C("dv")).otherwise(C("du")).alias("db"))
-        .localCheckpoint(eager=False))  # reused three times below (two
-                             # wedge legs + closing probe): pin, don't
-                             # recompute; lazy — the first wedge join
-                             # materializes the blocks (r11)
+        F.when(u_first, C("dv")).otherwise(C("du")).alias("db")))
     order = (C("db1") < C("db2")) | ((C("db1") == C("db2"))
                                      & (C("b1") < C("b2")))
     if salt_threshold is None:

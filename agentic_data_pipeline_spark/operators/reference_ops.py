@@ -3,12 +3,14 @@
 Ingest/bronze/serve are *effectful* ops, so their query registrations are
 round-trips: write a fixture table out through the op, read it back, return
 the DataFrame — the DuckDB oracle is simply the original table, proving the
-op is lossless. Scratch space lives under the repo's .tmp/ dir.
+op is lossless. Scratch space lives under the checkout's .tmp/ dir
+(``_scratch``, the one owner of that root for every operator module).
 """
 
 from __future__ import annotations
 
 import os
+import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -23,9 +25,13 @@ from ..sources.ingest import IngestError, ingest
 
 C = F.col
 
-_TMP = os.path.join(os.path.dirname(os.path.dirname(os.path.dirname(__file__))), ".tmp")
-if not os.path.isdir(_TMP):  # __file__ may live elsewhere when installed
-    _TMP = "/root/repo/.tmp"
+_ROOT = os.path.dirname(os.path.dirname(os.path.dirname(
+    os.path.abspath(__file__))))
+# The checkout's gitignored .tmp, made on first use; an installed package
+# has no checkout, so it falls back to the system temp dir.
+_TMP = (os.path.join(_ROOT, ".tmp")
+        if os.path.isfile(os.path.join(_ROOT, "setup.py"))
+        else os.path.join(tempfile.gettempdir(), "agentic_data_pipeline_spark"))
 
 
 def _scratch(*parts: str) -> str:

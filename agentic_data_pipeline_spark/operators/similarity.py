@@ -41,6 +41,7 @@ from ..functions.vector import (
     trunc6, trunc6_np, trunc6_sql, vec_lit,
 )
 from ..registry import op
+from ..session import pin
 
 C = F.col
 
@@ -513,9 +514,8 @@ def pq_train(emb: DataFrame, vec_col: str = "embedding",
 
     d = len(emb.select(vec_col).head()[0])
     sub = d // m
-    sample = emb.select(id_col, vec_col).orderBy(id_col) \
-        .limit(sample_rows).localCheckpoint(eager=False)  # first fit
-                                                          # job pins it
+    sample = pin(emb.select(id_col, vec_col).orderBy(id_col)
+                 .limit(sample_rows))
     books = []
     for j in range(m):
         sl = F.slice(C(vec_col).cast("array<double>"), j * sub + 1, sub)
@@ -902,7 +902,7 @@ def semdedup(emb: DataFrame, k_clusters: int | None = None,
     if k_clusters > SEMDEDUP_DIRECT_FIT_CAP:
         # Past the single-Lloyd-fit regime: hierarchical cells FUSED with
         # the within-cell dedup (r8). The previous shape (derive_cells →
-        # shuffle-hash re-join → localCheckpoint → Catalyst pair join
+        # shuffle-hash re-join → pin → Catalyst pair join
         # computing the cosine with interpreted higher-order aggregate
         # expressions) spent most of its time on ~N·target/2 interpreted
         # 64-d dot products plus a full corpus materialization; the fused
@@ -910,7 +910,7 @@ def semdedup(emb: DataFrame, k_clusters: int | None = None,
         # (same seeded Lloyd as derive_cells — shared _sub_lloyd) and
         # BLAS-computes each sub-cell's pair cosines in the same pass,
         # emitting only (id, cluster_id, kept) — input-heavy/output-light
-        # across the Python boundary, one shuffle total, no checkpoint.
+        # across the Python boundary, one shuffle total, no pin.
         # A/B at the sf3 lake (fresh noop-write executions): see
         # BASELINE.md round-8 semdedup fusion section.
         if n_vectors is None:
@@ -922,11 +922,10 @@ def semdedup(emb: DataFrame, k_clusters: int | None = None,
     model = KMeans(k=k_clusters, seed=42, maxIter=10,
                    featuresCol="__features",
                    predictionCol="cluster_id").fit(feats)
-    assigned = (model.transform(feats).drop("__features")
-                .select(C(id_col), C("cluster_id").cast("bigint"),
-                        C(vec_col), l2_norm(C(vec_col)).alias("__n"))
-                .localCheckpoint(eager=False))  # pin: reused on both
-                                                # join sides (lazy, r11)
+    # pinned: reused on both join sides
+    assigned = pin(model.transform(feats).drop("__features")
+                   .select(C(id_col), C("cluster_id").cast("bigint"),
+                           C(vec_col), l2_norm(C(vec_col)).alias("__n")))
     dropped = (near_dup_pairs(assigned, "cluster_id", threshold, id_col,
                               vec_col, norm_col="__n")
                .select(C("b_id").alias(id_col)).distinct()
@@ -1011,7 +1010,7 @@ def ext_semdedup_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
     group guarantee). A k-means collapse, a broken semi-join, or a dropped
     isolated vector now fails the driver hash, not just pytest."""
     emb = load_table(spark, sf_dir, "embeddings")
-    res = semdedup(emb, threshold=0.35).localCheckpoint(eager=False)
+    res = pin(semdedup(emb, threshold=0.35))
 
     n_df = emb.agg(
         F.count(F.lit(1)).cast("int").alias("n_vectors"),
@@ -1284,7 +1283,7 @@ def knn_graph_derived(emb: DataFrame, k: int = 3,
     can audit the blocking itself.
 
     Scale shape: the k-means fit is per-iteration map + k-row reduce
-    (model broadcasts); assignment is one map pass, checkpointed so the
+    (model broadcasts); assignment is one map pass, pinned so the
     edge build and any audit reuse it without re-fitting; the edge build
     is ONE shuffle on the derived cell id. k ∝ N holds per-cell pair
     count ≈ N·target flat per block — the invariant the fixed-label
@@ -1302,23 +1301,18 @@ def knn_graph_derived(emb: DataFrame, k: int = 3,
         # is optimistic enough to pick one and OOM the driver at the
         # 2M-vector tier; a shuffled hash join on id is the scale shape).
         cells = derive_cells(emb, id_col, vec_col)
-        assigned = (emb.select(id_col, vec_col)
-                    .join(cells.hint("shuffle_hash"), id_col)
-                    .select(C(id_col), C("__cell"), C(vec_col))
-                    # EAGER: the consumers run after this builder scope
-                    # dies — the lazy form logs per-task accumulator
-                    # ERRORs (r11 lazy-pin sweep; see _md5_bands_and_sets)
-                    .localCheckpoint())
+        assigned = pin(emb.select(id_col, vec_col)
+                       .join(cells.hint("shuffle_hash"), id_col)
+                       .select(C(id_col), C("__cell"), C(vec_col)))
     else:
         feats = emb.withColumn(
             "__f", array_to_vector(C(vec_col).cast("array<double>")))
         model = KMeans(k=k_cells, seed=42, maxIter=10, featuresCol="__f",
                        predictionCol="__cell").fit(feats)
-        assigned = (model.transform(feats).drop("__f")
-                    .select(C(id_col),
-                            C("__cell").cast("int").alias("__cell"),
-                            C(vec_col))
-                    .localCheckpoint())  # eager — see branch above
+        assigned = pin(model.transform(feats).drop("__f")
+                       .select(C(id_col),
+                               C("__cell").cast("int").alias("__cell"),
+                               C(vec_col)))
     edges = knn_graph_batch(assigned, k=k, block_col="__cell",
                             id_col=id_col, vec_col=vec_col)
     return assigned, edges
@@ -1361,7 +1355,7 @@ def ext_knn_graph_derived(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     emb = load_table(spark, sf_dir, "embeddings")
     assigned, edges = knn_graph_derived(emb, k=3)
-    edges = edges.localCheckpoint()  # eager — see knn_graph_derived
+    edges = pin(edges)
 
     n_row = emb.agg(
         F.count(F.lit(1)).cast("int").alias("n_vectors"),

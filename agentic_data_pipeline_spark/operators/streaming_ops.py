@@ -21,6 +21,7 @@ C = F.col
 from ..streaming.windows import run_stream_to_table
 from .sessionize import SESSIONIZE_ORACLE as _SESSIONIZE_ORACLE
 from .dedup import INC_FUZZY_ORACLE as _INC_FUZZY_ORACLE
+from .reference_ops import _lake_fp, _materialize_once, _scratch, _sf_scratch
 
 
 def _as_stream_dir(parquet_path: str) -> str:
@@ -28,13 +29,11 @@ def _as_stream_dir(parquet_path: str) -> str:
     parquet files — expose each via a scratch dir with a symlink."""
     if os.path.isdir(parquet_path):
         return parquet_path
-    d = os.path.join("/root/repo/.tmp", "stream_src",
-                     parquet_path.strip("/").replace("/", "_"))
-    os.makedirs(d, exist_ok=True)
-    link = os.path.join(d, "part-0.parquet")
+    link = _scratch("stream_src", parquet_path.strip("/").replace("/", "_"),
+                    "part-0.parquet")
     if not os.path.exists(link):
         os.symlink(parquet_path, link)
-    return d
+    return os.path.dirname(link)
 
 
 @op("stream_tumble", oracle="""
@@ -194,7 +193,6 @@ def _wm_flush_stream_dir(spark: SparkSession, sf_dir: str) -> str:
     import shutil
 
     from ..catalog import load_table
-    from .reference_ops import _lake_fp, _materialize_once, _sf_scratch
 
     path = _sf_scratch(sf_dir, "stream_wm_flush", "events")
 
@@ -287,8 +285,7 @@ def stream_to_bronze_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources.bronze import read_bronze
     from ..streaming.windows import stream_to_bronze
 
-    scratch = os.path.join("/root/repo/.tmp", "stream_bronze",
-                           uuid.uuid4().hex[:8])
+    scratch = _scratch("stream_bronze", uuid.uuid4().hex[:8])
     path_lake = os.path.join(scratch, "lake")
     stream_to_bronze(spark, _as_stream_dir(table_path(sf_dir, "events")),
                      path_lake, "events_rt",
@@ -305,7 +302,6 @@ def _split_stream_dir(spark: SparkSession, sf_dir: str, n_files: int = 4) -> str
     symlink dir gives one batch, which would make an upsert test vacuous).
     Lake-fingerprinted like the ingest scratch (regenerated lake → rebuild)."""
     from ..catalog import load_table
-    from .reference_ops import _lake_fp, _materialize_once, _sf_scratch
 
     path = _sf_scratch(sf_dir, "stream_split", f"events_{n_files}")
     ev = load_table(spark, sf_dir, "events")
@@ -352,8 +348,7 @@ def stream_upsert_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     C = F.col
     split = _split_stream_dir(spark, sf_dir)
-    run_dir = os.path.join("/root/repo/.tmp", "stream_upsert",
-                           uuid.uuid4().hex[:8])
+    run_dir = _scratch("stream_upsert", uuid.uuid4().hex[:8])
     os.makedirs(run_dir, exist_ok=True)
 
     # one job reads a footer, unless the path's schema is already memoized
@@ -430,9 +425,6 @@ def stream_dedup_fuzzy_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     import uuid as _uuid
 
     from ..operators.dedup import _admit, _md5_bands_and_sets
-    from ..operators.reference_ops import (
-        _lake_fp, _materialize_once, _sf_scratch,
-    )
 
     src = _sf_scratch(sf_dir, "stream_fuzzy_src")
 
@@ -460,6 +452,10 @@ def stream_dedup_fuzzy_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     state: dict = {}
     decisions: list = []
 
+    # The one eager pin in the package (see session.pin): the batch, the
+    # bands/sets state and the decisions are materialized before the
+    # micro-batch ends, since the next batch and the caller read them
+    # after the batch's source is gone.
     def handle(bdf: DataFrame, batch_id: int) -> None:
         bdf = bdf.localCheckpoint()
         bands, sets = _md5_bands_and_sets(bdf, "doc_id", "text")
@@ -478,8 +474,7 @@ def stream_dedup_fuzzy_q(spark: SparkSession, sf_dir: str) -> DataFrame:
          .parquet(src)
          .writeStream.foreachBatch(handle)
          .option("checkpointLocation",
-                 os.path.join("/root/repo/.tmp", "stream_ckpt",
-                              f"fuzzy_{_uuid.uuid4().hex[:8]}"))
+                 _scratch("stream_ckpt", f"fuzzy_{_uuid.uuid4().hex[:8]}"))
          .trigger(availableNow=True)
          .start())
     q.awaitTermination()
@@ -556,10 +551,6 @@ def stream_quality_gate_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     here are exact by design so they can hash against the oracle)."""
     import uuid as _uuid
 
-    from ..operators.reference_ops import (
-        _lake_fp, _materialize_once, _sf_scratch,
-    )
-
     C = F.col
     split = _sf_scratch(sf_dir, "stream_gate", "orders_4")
     _materialize_once(
@@ -570,8 +561,7 @@ def stream_quality_gate_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         _lake_fp(sf_dir, "orders"))
 
     customer = load_table(spark, sf_dir, "customer").select("c_custkey")
-    run_dir = os.path.join("/root/repo/.tmp", "stream_gate",
-                           _uuid.uuid4().hex[:8])
+    run_dir = _scratch("stream_gate", _uuid.uuid4().hex[:8])
     os.makedirs(run_dir, exist_ok=True)
     schema = read_parquet(spark, split).schema
     state = {"counters": None, "keys": None}

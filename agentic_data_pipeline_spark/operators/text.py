@@ -19,6 +19,7 @@ from pyspark.sql import functions as F
 from ..catalog import load_table
 from ..functions.vector import cosine_sim, cosine_sql, normed_side
 from ..registry import op
+from ..session import pin
 from . import textnorm
 
 C = F.col
@@ -610,26 +611,24 @@ def bpe_merges(docs: DataFrame, text_col: str = "text",
     The WORD FREQUENCY table (distinct words, not documents) is the loop
     state — at 100 TB the corpus is touched once to build it; iterations
     then run on the vocabulary, which is millions of rows, not billions.
-    "Touched once" is enforced by a localCheckpoint of the initial table:
+    "Touched once" is enforced by a ``pin`` of the initial table:
     without it every step's argmax collect re-evaluates the corpus
     explode+groupBy from scratch (a corpus rescan per merge — the same
     recompute-per-round defect class fixed in connected_components), and
-    the loop re-checkpoints every 8 merges so the regexp_replace chain in
+    the loop re-pins every 8 merges so the regexp_replace chain in
     the plan stays bounded for large n_merges.
     """
     import re as _re
 
     F_ = F
-    wf = (docs.select(F_.explode(textnorm.words(C(text_col), textnorm.ALPHA))
-                      .alias("w"))
-          .filter(C("w") != "")
-          .groupBy("w").agg(F_.count(F_.lit(1)).alias("freq"))
-          # word → space-joined character symbols: "low" → "l o w"
-          .select(F_.array_join(F_.split(C("w"), ""), " ").alias("sym"),
-                  "freq")
-          # lazy pin: step 1's argmax collect materializes the blocks in
-          # its own job (the "touched once" barrier is unchanged — r11)
-          .localCheckpoint(eager=False))
+    wf = pin(docs.select(F_.explode(textnorm.words(C(text_col),
+                                                   textnorm.ALPHA))
+                         .alias("w"))
+             .filter(C("w") != "")
+             .groupBy("w").agg(F_.count(F_.lit(1)).alias("freq"))
+             # word → space-joined character symbols: "low" → "l o w"
+             .select(F_.array_join(F_.split(C("w"), ""), " ").alias("sym"),
+                     "freq"))
     merges: list[tuple[int, str, int]] = []
     for step in range(1, n_merges + 1):
         syms = F_.split(C("sym"), " ")
@@ -652,8 +651,7 @@ def bpe_merges(docs: DataFrame, text_col: str = "text",
         wf = wf.select(
             F_.regexp_replace(C("sym"), pat, a + b).alias("sym"), "freq")
         if step % 8 == 0:
-            wf = wf.localCheckpoint(eager=False)  # next argmax job
-                                                  # materializes (r11)
+            wf = pin(wf)
     return merges
 
 

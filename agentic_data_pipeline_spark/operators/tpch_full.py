@@ -37,6 +37,7 @@ from pyspark.sql import functions as F
 from ..catalog import load_table
 from ..functions.helpers import cents
 from ..registry import op
+from ..session import pin
 
 C = F.col
 
@@ -522,7 +523,7 @@ def q16_part_supplier_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     final ~10³ groups. Measured sf3: 3.28 s → 2.67 s over the string-key
     aggregate (BASELINE.md round-8).
 
-    The spec map is PINNED (localCheckpoint, ~10³ rows): it feeds TWO
+    The spec map is PINNED (``session.pin``, ~10³ rows): it feeds TWO
     broadcasts (the partkey→spec_id map and the final strings join-back)
     and Spark does not reuse the distinct+window subtree across them, so
     the unpinned form scanned part and ran the dim aggregate twice per
@@ -531,22 +532,17 @@ def q16_part_supplier_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     2.47→2.01 s. The r8 'fold into one string-keyed agg' idea was also
     measured at sf10: 2.24 s — beats the unpinned double-eval, loses to
     the pin, and gives up the narrow-key shuffle that matters at 100 TB.
-    Lifecycle: localCheckpoint blocks live on executor local disk for the
-    SparkSession's lifetime (dim-sized, ~10³ rows ≈ KBs) — same
-    caller-owns-session contract as pagerank's lineage cuts (graph.py).
+    The pin's blocks (dim-sized, ~10³ rows ≈ KBs) live for the session's
+    lifetime (``session.pin``).
     """
     part = (load_table(spark, sf_dir, "part")
             .filter((C("p_brand") != "Brand#1")
                     & (C("p_type") != "PROMO")
                     & C("p_size").isin(1, 4, 7, 10, 13, 16, 19, 22, 25, 28))
             .select("p_partkey", "p_brand", "p_type", "p_size"))
-    specs = (part.select("p_brand", "p_type", "p_size").distinct()
-             .withColumn("spec_id", F.row_number().over(
-                 Window.orderBy("p_brand", "p_type", "p_size")))
-             # lazy (r11): the first broadcast build materializes the
-             # blocks in its own job; the eager count() job was pure
-             # dispatch (same lever as the CC/pagerank lazy cuts)
-             .localCheckpoint(eager=False))
+    specs = pin(part.select("p_brand", "p_type", "p_size").distinct()
+                .withColumn("spec_id", F.row_number().over(
+                    Window.orderBy("p_brand", "p_type", "p_size"))))
     part_id = (part.join(F.broadcast(specs),
                          ["p_brand", "p_type", "p_size"])
                .select("p_partkey", "spec_id"))

@@ -19,7 +19,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 # Runtime-settable SQL confs that the engine depends on. Kept separate from
 # builder-time confs so they can also be applied to a session we did not
@@ -174,6 +174,37 @@ def apply_scaled_shuffle(spark: SparkSession, est_rows: int) -> int:
         except Exception:
             pass
     return parts
+
+
+def pin(df: DataFrame) -> DataFrame:
+    """Cut ``df``'s lineage: the one materialization pin every operator
+    uses (iterative loop state, loop-invariant inputs, a subtree read by
+    several consumers). Returns ``df.localCheckpoint(eager=False)``.
+
+    The rule is: always lazy. The first job that reads the pin
+    materializes its blocks. Under AQE (always on, ``RUNTIME_CONFS``) the
+    lazy call already runs every shuffle stage below the pin (q16's spec
+    map runs its stages at build time), so the eager form's ``count()``
+    adds one job, the final stage. PageRank's 10-round loop measured lazy
+    cuts at 2.31 s vs eager 2.62 s at sf0.1, and AQE off loses badly
+    (32 uncoalesced tasks per stage): OPTIMIZATION_r11.md
+    "ext_pagerank — lazy per-round lineage cuts". The md5 shingle pin
+    measured a wash (BASELINE.md "Accumulator ERRORs under a GC hammer").
+
+    The price of lazy: a lazy pin can log DAGScheduler "Failed to update
+    accumulator" ERRORs, where a task reports SQL metrics whose
+    driver-side accumulators GC has already collected. Rows are
+    unaffected; the stage's metrics miss those updates.
+    ``ext_knn_graph_derived`` logs it in some plain runs, other pinned ops
+    only under forced GCs; no eager pin logged it in the reproduction
+    (BASELINE.md "Accumulator ERRORs under a GC hammer").
+
+    Lifecycle: the blocks live on executor local disk for the session's
+    lifetime, so the caller owns the session. The one eager pin is the
+    streaming foreachBatch state (operators/streaming_ops.py), which must
+    be materialized before its micro-batch ends.
+    """
+    return df.localCheckpoint(eager=False)
 
 
 def get_spark(app_name: str = "agentic-data-pipeline-spark",

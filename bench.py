@@ -24,7 +24,7 @@ BASELINE.md):
   hoisted, the same way the DuckDB side's `PREPARE`-trivial parse cost is
   not what its numbers measure. EXCEPTION: ops in REBUILD are iterative —
   constructing their DataFrame *is* the computation (power iteration /
-  k-means / fixpoint with eager localCheckpoints) — so each timed run
+  k-means / fixpoint with lineage cuts, `session.pin`) — so each timed run
   rebuilds from scratch; anything else would time a cached result.
 - Two untimed global warm-up passes (JIT C2 compilation keeps lowering
   latencies for the first ~2 passes; 6 passes measured no gain over 3,

@@ -96,6 +96,7 @@ def test_stream_quality_gate_iterates_and_passes(spark, sf_dir):
     import glob
     import os
 
+    from agentic_data_pipeline_spark.operators.reference_ops import _TMP
     from agentic_data_pipeline_spark.registry import OPS, _ensure_loaded
 
     _ensure_loaded()
@@ -105,7 +106,7 @@ def test_stream_quality_gate_iterates_and_passes(spark, sf_dir):
         "orders_status_accepted", "orders_totalprice_positive",
         "orders_custkey_ri"}
     assert all(r["passed"] and r["metric"] == 0.0 for r in rows)
-    run_dirs = sorted(glob.glob("/root/repo/.tmp/stream_gate/*"),
+    run_dirs = sorted(glob.glob(os.path.join(_TMP, "stream_gate", "*")),
                       key=os.path.getmtime)
     states = glob.glob(os.path.join(run_dirs[-1], "keys_v*"))
     assert len(states) >= 3, f"expected >=3 micro-batches, got {len(states)}"

@@ -61,11 +61,12 @@ def test_stream_upsert_merges_across_micro_batches(spark, sf_dir):
     import glob
     import os
 
+    from agentic_data_pipeline_spark.operators.reference_ops import _TMP
     from agentic_data_pipeline_spark.registry import OPS
 
     out = OPS["stream_upsert"].fn(spark, sf_dir)
     assert out.count() > 0
-    run_dirs = sorted(glob.glob("/root/repo/.tmp/stream_upsert/*"),
+    run_dirs = sorted(glob.glob(os.path.join(_TMP, "stream_upsert", "*")),
                       key=os.path.getmtime)
     states = glob.glob(os.path.join(run_dirs[-1], "state_v*"))
     assert len(states) >= 3, f"expected >=3 micro-batches, got {len(states)}"
