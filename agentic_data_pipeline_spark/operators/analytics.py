@@ -22,39 +22,18 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
-from ..functions.helpers import cents
+from ..functions.helpers import (
+    cents, dec_avg, dec_sum, o_avg, o_cents, o_rev_c, o_revenue, o_sum,
+    rev_c, revenue,
+)
 from ..registry import op
 
 C = F.col
 
-# Oracle fragment: exact cents revenue sum ext*(1-disc), surfaced as DOUBLE.
-_O_REVENUE = """CAST(SUM(CAST(ROUND(l_extendedprice * 100, 0) AS BIGINT)
-                    * (100 - CAST(ROUND(l_discount * 100, 0) AS BIGINT)))
-                AS DOUBLE) / 10000.0"""
-
-
-def _revenue() -> F.Column:
-    """Exact cents revenue: sum(ext_c * (100 - disc_c)) / 1e4, as DOUBLE."""
-    return (F.sum(cents("l_extendedprice") * (100 - cents("l_discount")))
-            .cast("double") / 10000.0)
-
-
-def _rev_c() -> F.Column:
-    """Per-row revenue product in exact cents² BIGINT — folded BEFORE the
-    fact exchange so two DECIMAL columns never cross the wire (guide
-    §2.3); SUM over it divides out to the same double as _revenue()
-    bit-for-bit (integer products, associative sum)."""
-    return cents("l_extendedprice") * (100 - cents("l_discount"))
-
-
-def _rev_sum() -> F.Column:
-    """SUM of the pre-folded per-row product, surfaced as DOUBLE."""
-    return F.sum("rev_c").cast("double") / 10000.0
-
 
 @op("q3_shipping_priority", oracle=f"""
     SELECT l_orderkey,
-           {_O_REVENUE} AS revenue,
+           {o_revenue(o_rev_c())} AS revenue,
            o_orderdate,
            o_orderpriority
     FROM customer
@@ -79,7 +58,7 @@ def q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     lineitem exchange (two DECIMALs → 8 bytes; guide §2.3 — sum of
     per-row integer products is associative, so results are
     bit-identical; r11 interleaved A/B at sf10: 2.59 → 2.32 s,
-    probe_narrow_exchange.py).
+    OPTIMIZATION_r11.md "narrow the fact exchanges").
     """
     cust = (load_table(spark, sf_dir, "customer")
             .filter(C("c_mktsegment") == "BUILDING")
@@ -89,7 +68,7 @@ def q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
               .select("o_orderkey", "o_custkey", "o_orderdate", "o_orderpriority"))
     li = (load_table(spark, sf_dir, "lineitem")
           .filter(C("l_shipdate") > F.lit("1998-07-01").cast("timestamp_ntz"))
-          .select("l_orderkey", _rev_c().alias("rev_c")))
+          .select("l_orderkey", rev_c().alias("rev_c")))
     return (
         orders.join(F.broadcast(cust), C("o_custkey") == C("c_custkey"))
         # fact ⋈ fact: hint a shuffle hash join — Catalyst would broadcast
@@ -99,7 +78,7 @@ def q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
         # driver hazard at 100 TB; dims stay broadcast.
         .join(li.hint("shuffle_hash"), C("l_orderkey") == C("o_orderkey"))
         .groupBy("l_orderkey", "o_orderdate", "o_orderpriority")
-        .agg(_rev_sum().alias("revenue"))
+        .agg(revenue("rev_c").alias("revenue"))
         .select("l_orderkey", "revenue", "o_orderdate", "o_orderpriority")
         .orderBy(C("revenue").desc(), "l_orderkey")
         .limit(10)
@@ -108,7 +87,7 @@ def q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @op("q5_local_supplier_volume", oracle=f"""
     SELECT n_name,
-           {_O_REVENUE} AS revenue
+           {o_revenue(o_rev_c())} AS revenue
     FROM customer
     JOIN orders   ON c_custkey  = o_custkey
     JOIN lineitem ON l_orderkey = o_orderkey
@@ -135,22 +114,24 @@ def q5_local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     equality inside the join condition. The old shape applied all of
     this AFTER shuffling the full fact table — the exchange is the
     scale bottleneck, the broadcasts are free (r11 interleaved A/B,
-    results identical: sf10 7.38 s → 3.72 s; probe_q58_reorder.py).
+    results identical: sf10 7.38 s → 3.72 s;
+    OPTIMIZATION_r11.md "every broadcastable dim cut").
 
     r11 narrow-exchange pass (guide §2.3): the revenue product folds to
     one BIGINT before the lineitem exchange and the n_name STRING never
     crosses either exchange — the aggregate groups on the integer
     c_nationkey (1:1 with n_name by construction) and the 5-row name
     map re-attaches AFTER the agg as a broadcast. sf10 3.72 → 3.51 s,
-    rows identical (probe_narrow_exchange.py).
+    rows identical (OPTIMIZATION_r11.md "narrow the fact exchanges").
 
     r12 dispatch trim (verdict item 5): the post-agg name attach joins
     plain `nation`, not the nation⋈region ASIA subtree — every
     c_nationkey reaching the aggregate already passed through the
     ASIA-customer cut, so the region re-filter was a provably-redundant
     extra BroadcastExchange+BHJ build per run (rows identical by
-    construction, asserted in probe_q5_trim.py; n_nationkey is unique in
-    nation, so the inner join can neither drop nor duplicate).
+    construction, OPTIMIZATION_r12.md "post-agg name-attach trim";
+    n_nationkey is unique in nation, so the inner join can neither drop
+    nor duplicate).
     """
     region = (load_table(spark, sf_dir, "region")
               .filter(C("r_name") == "ASIA").select("r_regionkey"))
@@ -172,14 +153,14 @@ def q5_local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     supplier = (load_table(spark, sf_dir, "supplier")
                 .select("s_suppkey", "s_nationkey"))
     li = (load_table(spark, sf_dir, "lineitem")
-          .select("l_orderkey", "l_suppkey", _rev_c().alias("rev_c")))
+          .select("l_orderkey", "l_suppkey", rev_c().alias("rev_c")))
     return (
         li.join(orders, C("l_orderkey") == C("o_orderkey"))
         .join(F.broadcast(supplier),
               (C("l_suppkey") == C("s_suppkey"))
               & (C("c_nationkey") == C("s_nationkey")))
         .groupBy("c_nationkey")
-        .agg(_rev_sum().alias("revenue"))
+        .agg(revenue("rev_c").alias("revenue"))
         .join(F.broadcast(nation.select("n_nationkey", "n_name")),
               C("c_nationkey") == C("n_nationkey"))
         .select("n_name", "revenue")
@@ -189,7 +170,7 @@ def q5_local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
 @op("q10_returned_items", oracle=f"""
     SELECT c_custkey,
            c_name,
-           {_O_REVENUE} AS revenue,
+           {o_revenue(o_rev_c())} AS revenue,
            n_name
     FROM customer
     JOIN orders   ON c_custkey  = o_custkey
@@ -218,7 +199,7 @@ def q10_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
     so Catalyst's broadcast of it rebuilt a multi-million-row driver
     hash map per execution and is exactly the shape that dies at
     100 TB (same rule as q3/q9/q12). sf10 3.60 → 2.53 s, rows
-    identical (probe_narrow_exchange.py).
+    identical (OPTIMIZATION_r11.md "narrow the fact exchanges").
     """
     cust = load_table(spark, sf_dir, "customer").select(
         "c_custkey", "c_name", "c_nationkey")
@@ -229,13 +210,13 @@ def q10_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
               .select("o_orderkey", "o_custkey"))
     li = (load_table(spark, sf_dir, "lineitem")
           .filter(C("l_returnflag") == "R")
-          .select("l_orderkey", _rev_c().alias("rev_c")))
+          .select("l_orderkey", rev_c().alias("rev_c")))
     return (
         li.join(orders.hint("shuffle_hash"), C("l_orderkey") == C("o_orderkey"))
         .join(F.broadcast(cust), C("o_custkey") == C("c_custkey"))
         .join(F.broadcast(nation), C("c_nationkey") == C("n_nationkey"))
         .groupBy("c_custkey", "c_name", "n_name")
-        .agg(_rev_sum().alias("revenue"))
+        .agg(revenue("rev_c").alias("revenue"))
         .select("c_custkey", "c_name", "revenue", "n_name")
         .orderBy(C("revenue").desc(), "c_custkey")
         .limit(20)
@@ -329,7 +310,7 @@ def q4_late_shipments(spark: SparkSession, sf_dir: str) -> DataFrame:
     interleaved A/B vs the semi-join shape, identical rows: sf10 min
     3.52 s → 3.34 s, and 2x+ better in every contended pass (the
     smaller exchange is also the more pressure-robust one) —
-    probe_q421_rewrite.py.
+    OPTIMIZATION_r11.md "cut to the order grain".
     """
     orders = (load_table(spark, sf_dir, "orders")
               .filter((C("o_orderdate") >= F.lit("1997-01-01").cast("timestamp_ntz"))
@@ -350,7 +331,7 @@ def q4_late_shipments(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @op("q7_volume_shipping", oracle=f"""
     SELECT supp_nation, cust_nation, l_year,
-           {_O_REVENUE} AS revenue
+           {o_revenue(o_rev_c())} AS revenue
     FROM (
         SELECT n1.n_name AS supp_nation,
                n2.n_name AS cust_nation,
@@ -381,7 +362,7 @@ def q7_volume_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     attached, so it alone stays post-join. The old shape shuffled the
     full fact rows and applied every role cut after (r11 interleaved
     A/B, results identical: sf10 4.95 s → 2.56 s, ~2x in every pass;
-    probe_q58_reorder.py).
+    OPTIMIZATION_r11.md "every broadcastable dim cut").
 
     r11 narrow-exchange pass (guide §2.3): the revenue product and the
     ship year fold to BIGINTs before the lineitem exchange, and the two
@@ -389,7 +370,7 @@ def q7_volume_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     (1 = NATION_1, 2 = NATION_2 — a bijection by construction of the
     2-row filter); the names are re-derived from the codes AFTER the
     aggregate as a deterministic CASE. sf10 2.39 → 1.89 s, rows
-    identical (probe_narrow_exchange.py).
+    identical (OPTIMIZATION_r11.md "narrow the fact exchanges").
     """
     nation = load_table(spark, sf_dir, "nation").filter(
         C("n_name").isin("NATION_1", "NATION_2"))
@@ -414,7 +395,7 @@ def q7_volume_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
                   & (C("l_shipdate") < F.lit("1998-01-01").cast("timestamp_ntz")))
           .select("l_orderkey", "l_suppkey",
                   F.year("l_shipdate").cast("bigint").alias("l_year"),
-                  _rev_c().alias("rev_c"))
+                  rev_c().alias("rev_c"))
           .join(F.broadcast(supp), C("l_suppkey") == C("s_suppkey"))
           .select("l_orderkey", "l_year", "rev_c", "s_code"))
 
@@ -426,7 +407,7 @@ def q7_volume_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(((C("s_code") == 1) & (C("c_code") == 2))
                 | ((C("s_code") == 2) & (C("c_code") == 1)))
         .groupBy("s_code", "c_code", "l_year")
-        .agg(_rev_sum().alias("revenue"))
+        .agg(revenue("rev_c").alias("revenue"))
         .select(to_name("s_code").alias("supp_nation"),
                 to_name("c_code").alias("cust_nation"), "l_year", "revenue")
     )
@@ -434,14 +415,10 @@ def q7_volume_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @op("q14_promo_revenue", oracle=f"""
     SELECT CAST(date_trunc('month', l_shipdate) AS TIMESTAMP) AS ship_month,
-           CAST(SUM(CASE WHEN p_type = 'PROMO'
-                    THEN CAST(ROUND(l_extendedprice * 100, 0) AS BIGINT)
-                       * (100 - CAST(ROUND(l_discount * 100, 0) AS BIGINT))
+           CAST(SUM(CASE WHEN p_type = 'PROMO' THEN {o_rev_c()}
                     ELSE 0 END) AS DOUBLE) * 100.0
-             / CAST(SUM(CAST(ROUND(l_extendedprice * 100, 0) AS BIGINT)
-                       * (100 - CAST(ROUND(l_discount * 100, 0) AS BIGINT)))
-                    AS DOUBLE)                        AS promo_pct,
-           {_O_REVENUE} AS revenue
+             / CAST(SUM({o_rev_c()}) AS DOUBLE) AS promo_pct,
+           {o_revenue(o_rev_c())} AS revenue
     FROM lineitem JOIN part ON l_partkey = p_partkey
     WHERE l_shipdate >= TIMESTAMP '1997-01-01'
       AND l_shipdate <  TIMESTAMP '1998-01-01'
@@ -463,7 +440,8 @@ def q14_promo_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     of shipping every (p_partkey, p_type) pair: the broadcast build
     shrinks 6× and loses its string column at any scale. Measured sf10
     decomposition: scan+agg 0.60 s, +full-part broadcast 1.66 s,
-    +promo-subset left join 0.86 s (rows identical, probe_q14_promo.py).
+    +promo-subset left join 0.86 s (rows identical,
+    OPTIMIZATION_r11.md "promo-subset broadcast").
     """
     promo = (load_table(spark, sf_dir, "part")
              .filter(C("p_type") == "PROMO").select("p_partkey"))
@@ -471,29 +449,26 @@ def q14_promo_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
           .filter((C("l_shipdate") >= F.lit("1997-01-01").cast("timestamp_ntz"))
                   & (C("l_shipdate") < F.lit("1998-01-01").cast("timestamp_ntz")))
           .select("l_partkey", "l_extendedprice", "l_discount", "l_shipdate"))
-    rev_c = cents("l_extendedprice") * (100 - cents("l_discount"))
-    promo_c = F.when(C("p_partkey").isNotNull(), rev_c).otherwise(F.lit(0))
+    rev = rev_c()
+    promo_c = F.when(C("p_partkey").isNotNull(), rev).otherwise(F.lit(0))
     return (
         li.join(F.broadcast(promo), C("l_partkey") == C("p_partkey"), "left")
         .groupBy(F.date_trunc("month", "l_shipdate").alias("ship_month"))
         .agg(
             (F.sum(promo_c).cast("double") * 100.0
-             / F.sum(rev_c).cast("double")).alias("promo_pct"),
-            _revenue().alias("revenue"),
+             / F.sum(rev).cast("double")).alias("promo_pct"),
+            revenue(rev).alias("revenue"),
         )
     )
 
 
-@op("q17_small_quantity", oracle="""
+@op("q17_small_quantity", oracle=f"""
     WITH avgq AS (
-        SELECT l_partkey,
-               0.2 * (CAST(SUM(CAST(ROUND(l_quantity * 100, 0) AS BIGINT))
-                           AS DOUBLE) / 100.0 / COUNT(l_quantity)) AS qty_cut
+        SELECT l_partkey, 0.2 * {o_avg('l_quantity')} AS qty_cut
         FROM lineitem GROUP BY l_partkey
     )
     SELECT CAST(COUNT(*) AS BIGINT) AS n_small,
-           CAST(SUM(CAST(ROUND(l_extendedprice * 100, 0) AS BIGINT)) AS DOUBLE)
-               / 100.0 / 7.0 AS avg_yearly
+           {o_sum('l_extendedprice')} / 7.0 AS avg_yearly
     FROM lineitem
     JOIN part ON l_partkey = p_partkey
     JOIN avgq USING (l_partkey)
@@ -531,14 +506,13 @@ def q17_small_quantity(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(C("l_quantity") < C("qty_cut"))
         .agg(
             F.count(F.lit(1)).alias("n_small"),
-            (F.sum(cents("l_extendedprice")).cast("double") / 100.0 / 7.0)
-            .alias("avg_yearly"),
+            (dec_sum("l_extendedprice") / 7.0).alias("avg_yearly"),
         )
     )
 
 
 @op("q19_disjunctive_filter", oracle=f"""
-    SELECT {_O_REVENUE} AS revenue,
+    SELECT {o_revenue(o_rev_c())} AS revenue,
            CAST(COUNT(*) AS BIGINT) AS n_lines
     FROM lineitem JOIN part ON p_partkey = l_partkey
     WHERE (p_brand = 'Brand#1' AND p_size BETWEEN 1 AND 15
@@ -574,15 +548,14 @@ def q19_disjunctive_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         li.join(F.broadcast(part), C("p_partkey") == C("l_partkey"))
         .filter(cond)
-        .agg(_revenue().alias("revenue"),
+        .agg(revenue(rev_c()).alias("revenue"),
              F.count(F.lit(1)).alias("n_lines"))
     )
 
 
-@op("q22_dormant_customers", oracle="""
+@op("q22_dormant_customers", oracle=f"""
     WITH cutoff AS (
-        SELECT CAST(SUM(CAST(ROUND(c_acctbal * 100, 0) AS BIGINT)) AS DOUBLE)
-                   / 100.0 / COUNT(c_acctbal) AS avg_bal
+        SELECT {o_avg('c_acctbal')} AS avg_bal
         FROM customer WHERE c_acctbal > 0.0
     ), active AS (
         SELECT DISTINCT o_custkey FROM orders
@@ -590,8 +563,7 @@ def q19_disjunctive_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     SELECT c_nationkey,
            CAST(COUNT(*) AS BIGINT) AS n_custs,
-           CAST(SUM(CAST(ROUND(c_acctbal * 100, 0) AS BIGINT)) AS DOUBLE)
-               / 100.0 AS total_bal
+           {o_sum('c_acctbal')} AS total_bal
     FROM customer CROSS JOIN cutoff
     WHERE c_acctbal > avg_bal
       AND c_custkey NOT IN (SELECT o_custkey FROM active)
@@ -619,8 +591,7 @@ def q22_dormant_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     cust = load_table(spark, sf_dir, "customer").select(
         "c_custkey", "c_nationkey", "c_acctbal")
     avg_bal = (cust.filter(C("c_acctbal") > 0.0)
-               .agg((F.sum(cents("c_acctbal")).cast("double") / 100.0
-                     / F.count("c_acctbal")).alias("avg_bal")))
+               .agg(dec_avg("c_acctbal").alias("avg_bal")))
     active = (load_table(spark, sf_dir, "orders")
               .filter(C("o_orderdate") >= F.lit("2001-01-01").cast("timestamp_ntz"))
               .select("o_custkey")
@@ -631,22 +602,19 @@ def q22_dormant_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(active, C("c_custkey") == C("o_custkey"), "left_anti")
         .groupBy("c_nationkey")
         .agg(F.count(F.lit(1)).alias("n_custs"),
-             (F.sum(cents("c_acctbal")).cast("double") / 100.0)
-             .alias("total_bal"))
+             dec_sum("c_acctbal").alias("total_bal"))
     )
 
 
-@op("q18_large_orders", oracle="""
+@op("q18_large_orders", oracle=f"""
     WITH big AS (
         SELECT l_orderkey
         FROM lineitem
         GROUP BY l_orderkey
-        HAVING (CAST(SUM(CAST(ROUND(l_quantity * 100, 0) AS BIGINT)) AS DOUBLE)
-                / 100.0) > 120
+        HAVING {o_sum('l_quantity')} > 120
     )
     SELECT c_custkey, c_name, o_orderkey, o_orderdate,
-           (CAST(SUM(CAST(ROUND(l_quantity * 100, 0) AS BIGINT)) AS DOUBLE)
-            / 100.0) AS total_qty
+           {o_sum('l_quantity')} AS total_qty
     FROM customer
     JOIN orders   ON c_custkey = o_custkey
     JOIN lineitem ON l_orderkey = o_orderkey
@@ -672,8 +640,7 @@ def q18_large_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_quantity")
     big = (li.groupBy("l_orderkey")
-           .agg((F.sum(cents("l_quantity")).cast("double") / 100.0)
-                .alias("total_qty"))
+           .agg(dec_sum("l_quantity").alias("total_qty"))
            .filter(C("total_qty") > 120))
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_orderdate")
@@ -690,14 +657,14 @@ def q18_large_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@op("ext_salted_join", oracle="""
+@op("ext_salted_join", oracle=f"""
     WITH dim(event_type, weight) AS (
         VALUES ('click', 1), ('view', 1), ('purchase', 5),
                ('signup', 3), ('error', 2)
     )
     SELECT e.event_type, d.weight,
            CAST(COUNT(*) AS BIGINT) AS n_events,
-           (CAST(SUM(CAST(ROUND(e.value * 100, 0) AS BIGINT) * d.weight)
+           (CAST(SUM({o_cents('e.value')} * d.weight)
                  AS DOUBLE) / 100.0) AS weighted_value
     FROM events e JOIN dim d USING (event_type)
     GROUP BY e.event_type, d.weight

@@ -17,6 +17,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import load_table, read_parquet, ts_us_long
+from ..functions.helpers import o_sum
 from ..registry import op
 from . import textnorm
 
@@ -325,11 +326,10 @@ def ext_scd2_history(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@op("ext_bucketed_join", oracle="""
+@op("ext_bucketed_join", oracle=f"""
     SELECT o.o_orderpriority,
            CAST(COUNT(*) AS BIGINT) AS n_items,
-           CAST(SUM(CAST(ROUND(l.l_extendedprice * 100, 0) AS BIGINT))
-                AS DOUBLE) / 100.0 AS revenue
+           {o_sum('l.l_extendedprice')} AS revenue
     FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey
     GROUP BY o.o_orderpriority
 """)
@@ -504,7 +504,7 @@ def _snapshot_fixture(spark: SparkSession, sf_dir: str) -> str:
     return table
 
 
-@op("ext_snapshot_versions", oracle="""
+@op("ext_snapshot_versions", oracle=f"""
     WITH b AS (SELECT MAX(event_id) // 3 AS t1,
                       2 * MAX(event_id) // 3 AS t2 FROM events),
     tagged AS (
@@ -516,8 +516,7 @@ def _snapshot_fixture(spark: SparkSession, sf_dir: str) -> str:
     )
     SELECT CAST(version AS INT) AS version,
            CAST(COUNT(*) AS BIGINT) AS n_rows,
-           CAST(SUM(CAST(ROUND(value * 100, 0) AS BIGINT)) AS DOUBLE) / 100.0
-               AS sum_value
+           {o_sum('value')} AS sum_value
     FROM tagged GROUP BY version
 """)
 def ext_snapshot_versions(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -584,12 +583,11 @@ def _snapshot_expire_fixture(spark: SparkSession, sf_dir: str) -> str:
     return table
 
 
-@op("ext_snapshot_expire", oracle="""
+@op("ext_snapshot_expire", oracle=f"""
     WITH b AS (SELECT 2 * MAX(event_id) // 3 AS t2 FROM events)
     SELECT CAST(4 AS INT) AS version,
            CAST(COUNT(*) AS BIGINT) AS n_rows,
-           CAST(SUM(CAST(ROUND(value * 100, 0) AS BIGINT)) AS DOUBLE) / 100.0
-               AS sum_value,
+           {o_sum('value')} AS sum_value,
            CAST(1 AS BIGINT) AS versions_remaining,
            TRUE AS storage_matches_manifest
     FROM events, b WHERE event_id >= b.t2
@@ -707,7 +705,7 @@ def _partition_evolution_fixture(spark: SparkSession, sf_dir: str) -> str:
     return table
 
 
-@op("ext_partition_evolution", oracle="""
+@op("ext_partition_evolution", oracle=f"""
     WITH w AS (
         SELECT CAST(CAST(date_trunc('week', MIN(ts)) AS DATE) AS VARCHAR)
                    AS wk,
@@ -716,8 +714,7 @@ def _partition_evolution_fixture(spark: SparkSession, sf_dir: str) -> str:
     )
     SELECT CAST(CAST(ts AS DATE) AS VARCHAR) AS day,
            CAST(COUNT(*) AS BIGINT) AS n_rows,
-           CAST(SUM(CAST(ROUND(value * 100, 0) AS BIGINT)) AS DOUBLE)
-               / 100.0 AS sum_value,
+           {o_sum('value')} AS sum_value,
            (SELECT CAST(COUNT(*) AS BIGINT) FROM events, w
             WHERE CAST(CAST(ts AS DATE) AS VARCHAR) = w.d0)
                AS min_day_rows,

@@ -6,8 +6,8 @@ canonical shape of the reference's analytic surface, and the first thing
 predicate pushdown + column pruning (only 7 of 11 columns read), map-side
 partial aggregation into ~6 groups (tiny shuffle), AQE-coalesced final agg.
 
-All money arithmetic is decimal-exact *before* any aggregation (see
-functions.helpers.dec_mul for why double-then-round is not portable).
+All money arithmetic is exact fixed-point cents *before* any aggregation
+(functions.helpers owns the rules and their oracle twins).
 """
 
 from __future__ import annotations
@@ -16,31 +16,27 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
-from ..functions.helpers import cents, dec_avg, dec_sum
+from ..functions.helpers import (
+    cents, dec_avg, dec_sum, o_avg, o_cents, o_rev_c, o_revenue, o_sum,
+    rev_c, revenue,
+)
 from ..registry import op
 
 C = F.col
 
 
-@op("q1_pricing_summary", oracle="""
+@op("q1_pricing_summary", oracle=f"""
     SELECT l_returnflag,
            l_linestatus,
-           (CAST(SUM(CAST(ROUND(l_quantity * 100, 0) AS BIGINT)) AS DOUBLE) / 100.0)      AS sum_qty,
-           (CAST(SUM(CAST(ROUND(l_extendedprice * 100, 0) AS BIGINT)) AS DOUBLE) / 100.0) AS sum_base_price,
-           CAST(SUM(CAST(ROUND(l_extendedprice * 100, 0) AS BIGINT)
-                    * (100 - CAST(ROUND(l_discount * 100, 0) AS BIGINT)))
-                AS DOUBLE) / 10000.0                                   AS sum_disc_price,
-           CAST(SUM(CAST(ROUND(l_extendedprice * 100, 0) AS BIGINT)
-                    * (100 - CAST(ROUND(l_discount * 100, 0) AS BIGINT))
-                    * (100 + CAST(ROUND(l_tax * 100, 0) AS BIGINT)))
-                AS DOUBLE) / 1000000.0                                 AS sum_charge,
-           (CAST(SUM(CAST(ROUND(l_quantity * 100, 0) AS BIGINT)) AS DOUBLE) / 100.0)
-               / COUNT(l_quantity)                                     AS avg_qty,
-           (CAST(SUM(CAST(ROUND(l_extendedprice * 100, 0) AS BIGINT)) AS DOUBLE) / 100.0)
-               / COUNT(l_extendedprice)                                AS avg_price,
-           (CAST(SUM(CAST(ROUND(l_discount * 100, 0) AS BIGINT)) AS DOUBLE) / 100.0)
-               / COUNT(l_discount)                                     AS avg_disc,
-           CAST(COUNT(*) AS BIGINT)                                    AS count_order
+           {o_sum('l_quantity')} AS sum_qty,
+           {o_sum('l_extendedprice')} AS sum_base_price,
+           {o_revenue(o_rev_c())} AS sum_disc_price,
+           CAST(SUM({o_rev_c()} * (100 + {o_cents('l_tax')})) AS DOUBLE)
+               / 1000000.0 AS sum_charge,
+           {o_avg('l_quantity')} AS avg_qty,
+           {o_avg('l_extendedprice')} AS avg_price,
+           {o_avg('l_discount')} AS avg_disc,
+           CAST(COUNT(*) AS BIGINT) AS count_order
     FROM lineitem
     WHERE l_shipdate <= TIMESTAMP '1998-09-02'
     GROUP BY l_returnflag, l_linestatus
@@ -48,18 +44,15 @@ C = F.col
 def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pricing summary by return flag / line status (TPC-H Q1 shape)."""
     li = load_table(spark, sf_dir, "lineitem")
-    ext_c = cents("l_extendedprice")           # exact fixed-point (see helpers)
-    disc_c = cents("l_discount")
-    tax_c = cents("l_tax")
-    disc_price_c = ext_c * (100 - disc_c)      # exact, 1e-4 currency units
-    charge_c = disc_price_c * (100 + tax_c)    # exact, 1e-6 currency units
+    disc_price_c = rev_c()                     # exact, 1e-4 currency units
+    charge_c = disc_price_c * (100 + cents("l_tax"))   # exact, 1e-6 units
     return (
         li.filter(C("l_shipdate") <= F.lit("1998-09-02").cast("timestamp_ntz"))
         .groupBy("l_returnflag", "l_linestatus")
         .agg(
             dec_sum("l_quantity").alias("sum_qty"),
             dec_sum("l_extendedprice").alias("sum_base_price"),
-            (F.sum(disc_price_c).cast("double") / 10000.0).alias("sum_disc_price"),
+            revenue(disc_price_c).alias("sum_disc_price"),
             (F.sum(charge_c).cast("double") / 1000000.0).alias("sum_charge"),
             dec_avg("l_quantity").alias("avg_qty"),
             dec_avg("l_extendedprice").alias("avg_price"),

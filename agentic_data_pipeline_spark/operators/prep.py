@@ -10,6 +10,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
+from ..functions.helpers import o_sum
 from ..functions.vector import trunc6
 from ..registry import op
 from . import textnorm
@@ -459,13 +460,12 @@ def passage_dedup(df: DataFrame, id_col: str, text_col: str,
     )
 
 
-@op("ext_pseudonymize", oracle="""
+@op("ext_pseudonymize", oracle=f"""
     SELECT md5('uid:' || CAST(user_id AS VARCHAR)) AS user_pseudo,
            CAST(CAST(DATE_TRUNC('day', ts) AS DATE) AS VARCHAR) AS day,
            event_type,
            CAST(COUNT(*) AS BIGINT)                AS n_events,
-           CAST(SUM(CAST(ROUND(value * 100, 0) AS BIGINT)) AS DOUBLE) / 100.0
-                                                   AS total_value
+           {o_sum('value')}                        AS total_value
     FROM events
     GROUP BY 1, 2, 3
 """)
@@ -881,8 +881,7 @@ _DP_MEAN_ORACLE = f"""
     WITH g AS (
         SELECT o_orderpriority,
                CAST(COUNT(*) AS BIGINT) AS n_true,
-               CAST(SUM(CAST(ROUND(LEAST(o_totalprice, {DP_CLIP}) * 100, 0)
-                        AS BIGINT)) AS DOUBLE) / 100.0 AS sum_clipped
+               {o_sum(f'LEAST(o_totalprice, {DP_CLIP})')} AS sum_clipped
         FROM orders GROUP BY o_orderpriority
     ), u AS (
         SELECT o_orderpriority, n_true, sum_clipped,

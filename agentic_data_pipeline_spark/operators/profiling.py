@@ -12,7 +12,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
-from ..functions.helpers import cents
+from ..functions.helpers import dec_sum, o_sum
 from ..functions.vector import trunc6
 from ..registry import op
 from . import textnorm
@@ -27,8 +27,7 @@ HIST_WIDTH = 25_000.0   # o_totalprice spans [~1e3, 5e5) → 20 buckets
     SELECT CAST(FLOOR((o_totalprice - {HIST_LO}) / {HIST_WIDTH}) AS INT)
                AS bucket,
            CAST(COUNT(*) AS BIGINT) AS cnt,
-           (CAST(SUM(CAST(ROUND(o_totalprice * 100, 0) AS BIGINT)) AS DOUBLE)
-               / 100.0) AS sum_price
+           {o_sum('o_totalprice')} AS sum_price
     FROM orders
     GROUP BY 1
 """)
@@ -46,8 +45,7 @@ def q_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     bucket = F.floor((C("o_totalprice") - HIST_LO) / HIST_WIDTH).cast("int")
     return (orders.groupBy(bucket.alias("bucket"))
             .agg(F.count(F.lit(1)).alias("cnt"),
-                 (F.sum(cents("o_totalprice")).cast("double") / 100.0)
-                 .alias("sum_price")))
+                 dec_sum("o_totalprice").alias("sum_price")))
 
 
 @op("ext_entropy", oracle=r"""
@@ -419,8 +417,7 @@ _PROFILE_COLS = ("l_quantity", "l_extendedprice", "l_discount")
            CAST(COUNT(DISTINCT {c}) AS BIGINT)         AS n_distinct,
            MIN({c})                                    AS min_v,
            MAX({c})                                    AS max_v,
-           CAST(SUM(CAST(ROUND({c} * 100, 0) AS BIGINT)) AS DOUBLE) / 100.0
-                                                       AS sum_v
+           {o_sum(c)}                                AS sum_v
     FROM lineitem""" for c in _PROFILE_COLS))
 def ext_data_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Column-profiling pass (the data-quality report every pipeline runs

@@ -17,6 +17,7 @@ from pyspark.sql import functions as F
 
 from ..agent import TransformationAgent
 from ..catalog import load_table, read_parquet
+from ..functions.helpers import o_sum
 from ..plans.dialect import sql_exec
 from ..registry import op
 from ..serving import bar_chart_data, preview, serve_csv, serve_json
@@ -299,10 +300,10 @@ def read_bronze_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ------------------------------------------------------------------- sql
 
-_SQL_EXEC_QUERY = """
+_SQL_EXEC_QUERY = f"""
     SELECT l_returnflag,
            CAST(COUNT(*) AS BIGINT) AS cnt,
-           (CAST(SUM(CAST(ROUND(l_quantity * 100, 0) AS BIGINT)) AS DOUBLE) / 100.0) AS sum_qty
+           {o_sum('l_quantity')} AS sum_qty
     FROM CURRENT_TABLE
     GROUP BY l_returnflag
 """
@@ -381,9 +382,9 @@ def serve_csv_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@op("viz_bar", oracle="""
+@op("viz_bar", oracle=f"""
     SELECT o_orderpriority AS x,
-           (CAST(SUM(CAST(ROUND(o_totalprice * 100, 0) AS BIGINT)) AS DOUBLE) / 100.0) AS y_sum
+           {o_sum('o_totalprice')} AS y_sum
     FROM orders GROUP BY o_orderpriority
 """)
 def viz_bar_q(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -401,11 +402,10 @@ def preview_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     return preview(li, order_by=["l_orderkey", "l_linenumber"], n=10)
 
 
-@op("ext_partitioned_write", oracle="""
+@op("ext_partitioned_write", oracle=f"""
     SELECT CAST(user_id % 10 AS BIGINT) AS user_mod,
            CAST(COUNT(*) AS BIGINT)     AS n_events,
-           CAST(SUM(CAST(ROUND(value * 100, 0) AS BIGINT)) AS DOUBLE) / 100.0
-                                        AS total_value
+           {o_sum('value')}             AS total_value
     FROM events WHERE event_type = 'click'
     GROUP BY 1
 """)

@@ -21,7 +21,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import Window
 
 from ..catalog import load_table
-from ..functions.helpers import cents, dec_sum, money
+from ..functions.helpers import cents, dec_sum, money, o_cents, o_money, o_sum
 from ..registry import op
 
 C = F.col
@@ -68,7 +68,7 @@ def remove_outliers(df: DataFrame, cols: list[str], z: float = 3.0) -> DataFrame
     for c in cols:
         aggs += [
             F.count(C(c)).alias(f"__n_{c}"),
-            (F.sum(cents(c)).cast("double") / 100.0).alias(f"__s_{c}"),
+            dec_sum(c).alias(f"__s_{c}"),
             F.sum(money(c) * money(c)).cast("double").alias(f"__ss_{c}"),
         ]
     stats = df.agg(*aggs)
@@ -141,10 +141,10 @@ def rule_clean_emails_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("c_custkey", "email")
 
 
-@op("rule_standardize_currency", oracle="""
+@op("rule_standardize_currency", oracle=f"""
     SELECT o_orderkey,
            currency,
-           CAST(CAST(o_totalprice AS DECIMAL(18,2))
+           CAST({o_money('o_totalprice')}
                 * (CASE CAST(o_orderkey % 3 AS INT)
                        WHEN 0 THEN CAST(1.0000 AS DECIMAL(8,4))
                        WHEN 1 THEN CAST(1.0800 AS DECIMAL(8,4))
@@ -176,12 +176,12 @@ def rule_standardize_currency_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("o_orderkey", "currency", "usd_amount")
 
 
-@op("rule_remove_outliers", oracle="""
+@op("rule_remove_outliers", oracle=f"""
     WITH s AS (
         SELECT CAST(COUNT(o_totalprice) AS BIGINT) AS n,
-               (CAST(SUM(CAST(ROUND(o_totalprice * 100, 0) AS BIGINT)) AS DOUBLE) / 100.0) AS s,
-               CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))
-                        * CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS ss
+               {o_sum('o_totalprice')} AS s,
+               CAST(SUM({o_money('o_totalprice')}
+                        * {o_money('o_totalprice')}) AS DOUBLE) AS ss
         FROM orders
     )
     SELECT o_orderkey, o_totalprice
@@ -195,14 +195,14 @@ def rule_remove_outliers_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("o_orderkey", "o_totalprice")
 
 
-@op("rule_top_performers", oracle="""
+@op("rule_top_performers", oracle=f"""
     SELECT custkey, sales
     FROM (
         SELECT custkey, sales,
                PERCENT_RANK() OVER (ORDER BY sales) AS pr
         FROM (
             SELECT o_custkey AS custkey,
-                   (CAST(SUM(CAST(ROUND(o_totalprice * 100, 0) AS BIGINT)) AS DOUBLE) / 100.0) AS sales
+                   {o_sum('o_totalprice')} AS sales
             FROM orders GROUP BY o_custkey
         )
     )
@@ -218,7 +218,7 @@ def rule_top_performers_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     return top_performers(sales, "sales", frac=0.10).select("custkey", "sales")
 
 
-@op("ext_winsorize", oracle="""
+@op("ext_winsorize", oracle=f"""
     WITH b AS (
         SELECT l_returnflag,
                ROUND(quantile_cont(l_extendedprice, 0.01), 6) AS lb,
@@ -234,8 +234,7 @@ def rule_top_performers_q(spark: SparkSession, sf_dir: str) -> DataFrame:
            ROUND(
                (CAST(SUM(CASE WHEN l.l_extendedprice >= b.lb
                                AND l.l_extendedprice <= b.ub
-                              THEN CAST(ROUND(l.l_extendedprice * 100, 0)
-                                        AS BIGINT)
+                              THEN {o_cents('l.l_extendedprice')}
                               ELSE 0 END) AS DOUBLE) / 100.0
                 + SUM(CASE WHEN l.l_extendedprice < b.lb
                            THEN 1 ELSE 0 END) * b.lb

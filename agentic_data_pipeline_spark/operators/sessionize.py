@@ -12,7 +12,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import load_table, ts_us_long
-from ..functions.helpers import cents
+from ..functions.helpers import dec_sum, o_sum
 from ..registry import op
 
 C = F.col
@@ -42,8 +42,7 @@ SESSIONIZE_ORACLE = f"""
            CAST(session_id AS BIGINT)                       AS session_id,
            CAST(MIN(ts_us) // 1000000 AS BIGINT)            AS session_start_epoch,
            CAST(COUNT(*) AS BIGINT)                         AS n_events,
-           (CAST(SUM(CAST(ROUND(value * 100, 0) AS BIGINT)) AS DOUBLE) / 100.0)
-                                                            AS sum_value
+           {o_sum('value')}                                 AS sum_value
     FROM s
     GROUP BY user_id, session_id
 """
@@ -74,7 +73,6 @@ def ext_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.expr("min(ts_us) div 1000000").alias("session_start_epoch"),
             F.count(F.lit(1)).alias("n_events"),
-            (F.sum(cents(C("value"))).cast("double") / 100.0)
-            .alias("sum_value"),
+            dec_sum(C("value")).alias("sum_value"),
         )
     )

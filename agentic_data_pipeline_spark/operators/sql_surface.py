@@ -25,7 +25,10 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import events_with_ts, load_table, register_views
-from ..functions.helpers import cents, dec_avg, dec_sum, money
+from ..functions.helpers import (
+    cents, dec_avg, dec_sum, money, o_avg, o_cents, o_money, o_rev_c,
+    o_revenue, o_sum, rev_c, revenue,
+)
 from ..registry import op
 
 C = F.col
@@ -33,10 +36,10 @@ C = F.col
 
 # ---------------------------------------------------------------- projection
 
-@op("q_project", oracle="""
+@op("q_project", oracle=f"""
     SELECT o_orderkey,
            o_totalprice,
-           CAST(CAST(o_totalprice AS DECIMAL(18,2))
+           CAST({o_money('o_totalprice')}
                 * CAST(0.9 AS DECIMAL(2,1)) AS DOUBLE) AS discounted,
            UPPER(o_orderstatus)          AS status
     FROM orders
@@ -108,13 +111,11 @@ def q_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # -------------------------------------------------------------- aggregation
 
-@op("q_agg", oracle="""
+@op("q_agg", oracle=f"""
     SELECT CAST(COUNT(*) AS BIGINT)                                   AS cnt,
            CAST(COUNT(DISTINCT l_orderkey) AS BIGINT)                 AS n_orders,
-           (CAST(SUM(CAST(ROUND(l_quantity * 100, 0) AS BIGINT)) AS DOUBLE) / 100.0)     AS sum_qty,
-           CAST(SUM(CAST(ROUND(l_extendedprice * 100, 0) AS BIGINT)
-                    * (100 - CAST(ROUND(l_discount * 100, 0) AS BIGINT)))
-                AS DOUBLE) / 10000.0                                  AS sum_disc_price,
+           {o_sum('l_quantity')}                                      AS sum_qty,
+           {o_revenue(o_rev_c())}                                     AS sum_disc_price,
            MIN(l_extendedprice)                                       AS min_price,
            MAX(l_extendedprice)                                       AS max_price
     FROM lineitem
@@ -126,20 +127,18 @@ def q_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("cnt"),
         F.count_distinct("l_orderkey").alias("n_orders"),
         dec_sum("l_quantity").alias("sum_qty"),
-        (F.sum(cents("l_extendedprice") * (100 - cents("l_discount")))
-         .cast("double") / 10000.0).alias("sum_disc_price"),
+        revenue(rev_c()).alias("sum_disc_price"),
         F.min("l_extendedprice").alias("min_price"),
         F.max("l_extendedprice").alias("max_price"),
     )
 
 
-@op("q_groupby", oracle="""
+@op("q_groupby", oracle=f"""
     SELECT l_returnflag,
            l_linestatus,
            CAST(COUNT(*) AS BIGINT)                               AS cnt,
-           (CAST(SUM(CAST(ROUND(l_quantity * 100, 0) AS BIGINT)) AS DOUBLE) / 100.0) AS sum_qty,
-           (CAST(SUM(CAST(ROUND(l_quantity * 100, 0) AS BIGINT)) AS DOUBLE) / 100.0)
-               / COUNT(l_quantity)                                AS avg_qty
+           {o_sum('l_quantity')}                                  AS sum_qty,
+           {o_avg('l_quantity')}                                  AS avg_qty
     FROM lineitem
     GROUP BY l_returnflag, l_linestatus
     HAVING COUNT(*) > 5
@@ -158,11 +157,11 @@ def q_groupby(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@op("q_rollup", oracle="""
+@op("q_rollup", oracle=f"""
     SELECT l_returnflag,
            l_linestatus,
            CAST(COUNT(*) AS BIGINT)                               AS cnt,
-           (CAST(SUM(CAST(ROUND(l_quantity * 100, 0) AS BIGINT)) AS DOUBLE) / 100.0) AS sum_qty
+           {o_sum('l_quantity')}                                  AS sum_qty
     FROM lineitem
     GROUP BY ROLLUP (l_returnflag, l_linestatus)
 """)
@@ -175,11 +174,11 @@ def q_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@op("q_cube", oracle="""
+@op("q_cube", oracle=f"""
     SELECT l_returnflag,
            l_linestatus,
            CAST(COUNT(*) AS BIGINT)                               AS cnt,
-           (CAST(SUM(CAST(ROUND(l_quantity * 100, 0) AS BIGINT)) AS DOUBLE) / 100.0) AS sum_qty
+           {o_sum('l_quantity')}                                  AS sum_qty
     FROM lineitem
     GROUP BY CUBE (l_returnflag, l_linestatus)
 """)
@@ -226,12 +225,12 @@ def q_window_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@op("q_window_agg", oracle="""
+@op("q_window_agg", oracle=f"""
     SELECT o_orderkey,
            o_custkey,
-           CAST(SUM(CAST(ROUND(o_totalprice * 100, 0) AS BIGINT)) OVER w
+           CAST(SUM({o_cents('o_totalprice')}) OVER w
                 AS DOUBLE) / 100.0                           AS moving_sum,
-           FLOOR(CAST(SUM(CAST(ROUND(o_totalprice * 100, 0) AS BIGINT)) OVER w
+           FLOOR(CAST(SUM({o_cents('o_totalprice')}) OVER w
                       AS DOUBLE) / 100.0
                  / COUNT(*) OVER w * 1e6) / 1e6              AS moving_avg
     FROM orders
@@ -287,15 +286,15 @@ def q_window_nav(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@op("q_window_range", oracle="""
+@op("q_window_range", oracle=f"""
     SELECT o_orderkey,
            o_custkey,
            CAST(COUNT(*) OVER w AS BIGINT)  AS n_within_50k,
-           CAST(SUM(CAST(ROUND(o_totalprice * 100, 0) AS BIGINT)) OVER w
+           CAST(SUM({o_cents('o_totalprice')}) OVER w
                 AS DOUBLE) / 100.0          AS sum_within_50k
     FROM orders
     WINDOW w AS (PARTITION BY o_custkey
-                 ORDER BY CAST(ROUND(o_totalprice * 100, 0) AS BIGINT)
+                 ORDER BY {o_cents('o_totalprice')}
                  RANGE BETWEEN 5000000 PRECEDING AND CURRENT ROW)
 """)
 def q_window_range(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -338,7 +337,7 @@ def q_join_inner(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@op("q_join_left", oracle="""
+@op("q_join_left", oracle=f"""
     SELECT c_custkey,
            c_name,
            CAST(COALESCE(s.cnt, 0) AS BIGINT)     AS n_orders,
@@ -347,7 +346,7 @@ def q_join_inner(spark: SparkSession, sf_dir: str) -> DataFrame:
     LEFT JOIN (
         SELECT o_custkey,
                COUNT(*) AS cnt,
-               (CAST(SUM(CAST(ROUND(o_totalprice * 100, 0) AS BIGINT)) AS DOUBLE) / 100.0) AS sales
+               {o_sum('o_totalprice')} AS sales
         FROM orders GROUP BY o_custkey
     ) s ON c_custkey = s.o_custkey
 """)
@@ -400,19 +399,15 @@ def q_join_anti(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("c_custkey", "c_name")
 
 
-@op("q_join_full", oracle="""
+@op("q_join_full", oracle=f"""
     WITH y96 AS (
-        SELECT o_custkey,
-               CAST(SUM(CAST(ROUND(o_totalprice * 100, 0) AS BIGINT)) AS DOUBLE)
-                   / 100.0 AS spend_1996
+        SELECT o_custkey, {o_sum('o_totalprice')} AS spend_1996
         FROM orders
         WHERE o_orderdate >= TIMESTAMP '1996-01-01'
           AND o_orderdate <  TIMESTAMP '1997-01-01'
         GROUP BY o_custkey
     ), y99 AS (
-        SELECT o_custkey,
-               CAST(SUM(CAST(ROUND(o_totalprice * 100, 0) AS BIGINT)) AS DOUBLE)
-                   / 100.0 AS spend_1999
+        SELECT o_custkey, {o_sum('o_totalprice')} AS spend_1999
         FROM orders
         WHERE o_orderdate >= TIMESTAMP '1999-01-01'
           AND o_orderdate <  TIMESTAMP '2000-01-01'
@@ -470,13 +465,13 @@ def q_join_cross(spark: SparkSession, sf_dir: str) -> DataFrame:
     return region.crossJoin(F.broadcast(prios))
 
 
-@op("q_pivot", oracle="""
+@op("q_pivot", oracle=f"""
     SELECT l_returnflag,
            (CAST(SUM(CASE WHEN l_linestatus = 'F'
-                 THEN CAST(ROUND(l_quantity * 100, 0) AS BIGINT) END)
+                 THEN {o_cents('l_quantity')} END)
                  AS DOUBLE) / 100.0)                          AS qty_F,
            (CAST(SUM(CASE WHEN l_linestatus = 'O'
-                 THEN CAST(ROUND(l_quantity * 100, 0) AS BIGINT) END)
+                 THEN {o_cents('l_quantity')} END)
                  AS DOUBLE) / 100.0)                          AS qty_O
     FROM lineitem
     GROUP BY l_returnflag
@@ -488,7 +483,7 @@ def q_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         li.groupBy("l_returnflag")
         .pivot("l_linestatus", ["F", "O"])
-        .agg((F.sum(cents("l_quantity")).cast("double") / 100.0))
+        .agg(dec_sum("l_quantity"))
         .select(
             "l_returnflag",
             C("F").alias("qty_F"),
@@ -610,17 +605,15 @@ def q_percentile(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Written in the Spark/DuckDB common dialect: the *same* SQL text runs on
 # both engines (Spark side goes through spark.sql over registered views,
 # exercising the reference's execute_sql path end-to-end).
-_CTE_SQL = """
+_CTE_SQL = f"""
     WITH cust_sales AS (
-        SELECT o_custkey,
-               (CAST(SUM(CAST(ROUND(o_totalprice * 100, 0) AS BIGINT)) AS DOUBLE) / 100.0) AS sales
+        SELECT o_custkey, {o_sum('o_totalprice')} AS sales
         FROM orders
         GROUP BY o_custkey
     )
     SELECT o_custkey AS custkey, sales
     FROM cust_sales
-    WHERE sales > (SELECT (CAST(SUM(CAST(ROUND(sales * 100, 0) AS BIGINT)) AS DOUBLE) / 100.0)
-                          / COUNT(*)
+    WHERE sales > (SELECT {o_sum('sales')} / COUNT(*)
                    FROM cust_sales)
 """
 
@@ -772,11 +765,11 @@ def q_array_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@op("q_json_funcs", oracle="""
+@op("q_json_funcs", oracle=f"""
     SELECT CAST(CAST(json_extract_string(props, '$.k') AS INT) % 10 AS INT)
                AS k_bucket,
            CAST(COUNT(*) AS BIGINT) AS cnt,
-           (CAST(SUM(CAST(ROUND(value * 100, 0) AS BIGINT)) AS DOUBLE) / 100.0) AS sum_value
+           {o_sum('value')} AS sum_value
     FROM events
     GROUP BY 1
 """)
@@ -790,11 +783,11 @@ def q_json_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@op("q_tumble", oracle="""
+@op("q_tumble", oracle=f"""
     SELECT CAST(epoch(DATE_TRUNC('hour', ts)) AS BIGINT)       AS bucket_epoch,
            event_type,
            CAST(COUNT(*) AS BIGINT)                            AS cnt,
-           (CAST(SUM(CAST(ROUND(value * 100, 0) AS BIGINT)) AS DOUBLE) / 100.0)   AS sum_value
+           {o_sum('value')}                                    AS sum_value
     FROM events
     GROUP BY 1, 2
 """)
@@ -873,13 +866,12 @@ def q_lateral(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_GROUPING_SETS_SQL = """
+_GROUPING_SETS_SQL = f"""
     SELECT l_returnflag, l_linestatus,
            CAST(GROUPING(l_returnflag) AS INT)  AS g_flag,
            CAST(GROUPING(l_linestatus) AS INT)  AS g_status,
            CAST(COUNT(*) AS BIGINT)             AS cnt,
-           (CAST(SUM(CAST(ROUND(l_quantity * 100, 0) AS BIGINT)) AS DOUBLE)
-                / 100.0)                        AS sum_qty
+           {o_sum('l_quantity')}             AS sum_qty
     FROM lineitem
     GROUP BY GROUPING SETS ((l_returnflag, l_linestatus), (l_returnflag), ())
 """

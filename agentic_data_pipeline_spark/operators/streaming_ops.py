@@ -15,6 +15,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load_table, read_parquet, table_path
+from ..functions.helpers import dec_sum, o_sum
 from ..registry import op
 
 C = F.col
@@ -36,11 +37,11 @@ def _as_stream_dir(parquet_path: str) -> str:
     return os.path.dirname(link)
 
 
-@op("stream_tumble", oracle="""
+@op("stream_tumble", oracle=f"""
     SELECT CAST(epoch(DATE_TRUNC('hour', ts)) AS BIGINT)       AS bucket_epoch,
            event_type,
            CAST(COUNT(*) AS BIGINT)                            AS cnt,
-           (CAST(SUM(CAST(ROUND(value * 100, 0) AS BIGINT)) AS DOUBLE) / 100.0)   AS sum_value
+           {o_sum('value')}                                    AS sum_value
     FROM events
     GROUP BY 1, 2
 """)
@@ -51,7 +52,7 @@ def stream_tumble_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.table(table)
 
 
-@op("stream_sliding", oracle="""
+@op("stream_sliding", oracle=f"""
     WITH e AS (
         SELECT unnest([CAST(epoch(DATE_TRUNC('hour', ts)) AS BIGINT),
                        CAST(epoch(DATE_TRUNC('hour', ts)) AS BIGINT) - 3600])
@@ -61,8 +62,7 @@ def stream_tumble_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     SELECT bucket_epoch, event_type,
            CAST(COUNT(*) AS BIGINT) AS cnt,
-           (CAST(SUM(CAST(ROUND(value * 100, 0) AS BIGINT)) AS DOUBLE) / 100.0)
-               AS sum_value
+           {o_sum('value')} AS sum_value
     FROM e
     GROUP BY 1, 2
 """)
@@ -115,11 +115,10 @@ def stream_dedup_watermark_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.table(table)
 
 
-@op("stream_join", oracle="""
+@op("stream_join", oracle=f"""
     SELECT n.n_name AS nation, e.event_type,
            CAST(COUNT(*) AS BIGINT) AS cnt,
-           (CAST(SUM(CAST(ROUND(e.value * 100, 0) AS BIGINT)) AS DOUBLE) / 100.0)
-               AS sum_value
+           {o_sum('e.value')} AS sum_value
     FROM events e
     JOIN customer c ON e.user_id = c.c_custkey
     JOIN nation n   ON c.c_nationkey = n.n_nationkey
@@ -266,11 +265,10 @@ def stream_stream_join_outer_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.table(table).filter(C("user_id") != -1)
 
 
-@op("stream_to_bronze", oracle="""
+@op("stream_to_bronze", oracle=f"""
     SELECT event_type,
            CAST(COUNT(*) AS BIGINT) AS cnt,
-           (CAST(SUM(CAST(ROUND(value * 100, 0) AS BIGINT)) AS DOUBLE) / 100.0)
-               AS sum_value
+           {o_sum('value')} AS sum_value
     FROM events
     GROUP BY event_type
 """)
@@ -281,7 +279,6 @@ def stream_to_bronze_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     the events fixture into a scratch bronze dataset, read the bronze
     parquet back, and aggregate — hash-equal to aggregating the source
     directly iff no row was lost or doubled."""
-    from ..functions.helpers import dec_sum
     from ..sources.bronze import read_bronze
     from ..streaming.windows import stream_to_bronze
 

@@ -10,7 +10,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import load_table, ts_us_long, ts_us_timestamp
-from ..functions.helpers import cents
+from ..functions.helpers import dec_sum, o_sum
 from ..registry import op
 
 C = F.col
@@ -75,8 +75,7 @@ BAND_WIDTH = 50
 @op("ext_range_join", oracle=f"""
     SELECT t.tier_name,
            CAST(COUNT(*) AS BIGINT) AS cnt,
-           (CAST(SUM(CAST(ROUND(e.value * 100, 0) AS BIGINT)) AS DOUBLE) / 100.0)
-               AS sum_value
+           {o_sum('e.value')} AS sum_value
     FROM events e
     JOIN (VALUES ('t0', 0), ('t1', 1), ('t2', 2), ('t3', 3))
          AS t(tier_name, band)
@@ -101,19 +100,17 @@ def ext_range_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("tier_name")
         .agg(
             F.count(F.lit(1)).alias("cnt"),
-            (F.sum(cents(C("value")))
-             .cast("double") / 100.0).alias("sum_value"),
+            dec_sum(C("value")).alias("sum_value"),
         )
     )
 
 
-@op("ext_gap_fill", oracle="""
+@op("ext_gap_fill", oracle=f"""
     WITH hourly AS (
         SELECT event_type,
                DATE_TRUNC('hour', ts) AS h,
                CAST(COUNT(*) AS BIGINT) AS cnt,
-               (CAST(SUM(CAST(ROUND(value * 100, 0) AS BIGINT)) AS DOUBLE)
-                / 100.0) AS sum_value
+               {o_sum('value')} AS sum_value
         FROM events GROUP BY 1, 2
     ), bounds AS (
         SELECT event_type, MIN(h) AS mn, MAX(h) AS mx FROM hourly GROUP BY 1
@@ -147,8 +144,7 @@ def ext_gap_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
     hourly = (
         ev.groupBy("event_type", F.date_trunc("hour", C("ts_us")).alias("h"))
         .agg(F.count(F.lit(1)).alias("cnt"),
-             (F.sum(cents(C("value"))).cast("double") / 100.0)
-             .alias("sum_value"))
+             dec_sum(C("value")).alias("sum_value"))
     )
     series = (
         hourly.groupBy("event_type")

@@ -35,19 +35,13 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
-from ..functions.helpers import cents
+from ..functions.helpers import (
+    cents, dec_sum, o_cents, o_rev_c, o_revenue, o_sum, rev_c, revenue,
+)
 from ..registry import op
 from ..session import pin
 
 C = F.col
-
-_O_CENTS_REV = """SUM(CAST(ROUND(l_extendedprice * 100, 0) AS BIGINT)
-                    * (100 - CAST(ROUND(l_discount * 100, 0) AS BIGINT)))"""
-
-
-def _rev_c() -> F.Column:
-    """Revenue ext*(1-disc) in cents^2 fixed point (exact BIGINT)."""
-    return F.sum(cents("l_extendedprice") * (100 - cents("l_discount")))
 
 
 @op("q2_min_cost_supplier", oracle="""
@@ -110,10 +104,9 @@ def q2_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@op("q6_forecast_revenue", oracle="""
-    SELECT CAST(SUM(CAST(ROUND(l_extendedprice * 100, 0) AS BIGINT)
-                    * CAST(ROUND(l_discount * 100, 0) AS BIGINT)) AS DOUBLE)
-               / 10000.0 AS revenue,
+@op("q6_forecast_revenue", oracle=f"""
+    SELECT {o_revenue(o_cents('l_extendedprice') + ' * '
+                      + o_cents('l_discount'))} AS revenue,
            CAST(COUNT(*) AS BIGINT) AS n_lines
     FROM lineitem
     WHERE l_shipdate >= TIMESTAMP '1997-01-01'
@@ -137,8 +130,8 @@ def q6_forecast_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
                   & (C("l_shipdate") < F.lit("1998-01-01").cast("timestamp_ntz"))
                   & C("l_discount").between(0.05, 0.07)
                   & (C("l_quantity") < 24))
-        .agg((F.sum(cents("l_extendedprice") * cents("l_discount"))
-              .cast("double") / 10000.0).alias("revenue"),
+        .agg(revenue(cents("l_extendedprice") * cents("l_discount"))
+             .alias("revenue"),
              F.count(F.lit(1)).alias("n_lines"))
     )
 
@@ -146,8 +139,7 @@ def q6_forecast_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
 @op("q8_market_share", oracle=f"""
     WITH all_sales AS (
         SELECT CAST(EXTRACT(year FROM o_orderdate) AS BIGINT) AS o_year,
-               CAST(ROUND(l_extendedprice * 100, 0) AS BIGINT)
-                   * (100 - CAST(ROUND(l_discount * 100, 0) AS BIGINT)) AS rev_c,
+               {o_rev_c()} AS rev_c,
                n2.n_name AS supp_nation
         FROM lineitem
         JOIN orders   ON l_orderkey = o_orderkey
@@ -179,10 +171,10 @@ def q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     them map-side shrinks BOTH sides of the exchange — the old shape
     shuffled the full 60M-row fact first and dropped 5/6 of it after
     (r11 interleaved A/B, results identical: sf10 8.47 s → 3.03 s;
-    probe_q58_reorder.py). The share is a conditional-sum / total-sum
-    ratio computed in one hash-agg pass over exact cents, so the division
-    is the only floating step and it divides identical BIGINT-derived
-    doubles in both engines.
+    OPTIMIZATION_r11.md "every broadcastable dim cut"). The share is a
+    conditional-sum / total-sum ratio computed in one hash-agg pass over
+    exact cents, so the division is the only floating step and it
+    divides identical BIGINT-derived doubles in both engines.
 
     r11 narrow-exchange pass (guide §2.3): the revenue product folds to
     one BIGINT and the supplier-nation name to an is-NATION_1 BOOLEAN
@@ -190,7 +182,8 @@ def q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     BEFORE the lineitem exchange; the orders side ships the year BIGINT
     instead of the timestamp. The exchange carries (orderkey, rev_c,
     is_n1) ≈ 17 B/row instead of (orderkey, 2 DECIMALs, STRING) ≈ 40.
-    sf10 2.49 → 2.22 s, rows identical (probe_narrow_exchange.py).
+    sf10 2.49 → 2.22 s, rows identical
+    (OPTIMIZATION_r11.md "narrow the fact exchanges").
     """
     region = (load_table(spark, sf_dir, "region")
               .filter(C("r_name") == "ASIA").select("r_regionkey"))
@@ -217,8 +210,7 @@ def q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
                       F.year("o_orderdate").cast("bigint").alias("o_year")))
     li = (load_table(spark, sf_dir, "lineitem")
           .select("l_orderkey", "l_partkey", "l_suppkey",
-                  (cents("l_extendedprice")
-                   * (100 - cents("l_discount"))).alias("rev_c"))
+                  rev_c().alias("rev_c"))
           .join(F.broadcast(part), C("l_partkey") == C("p_partkey"))
           .join(F.broadcast(supp), C("l_suppkey") == C("s_suppkey"))
           .join(F.broadcast(n1key), C("s_nationkey") == C("sn_nkey"), "left")
@@ -233,14 +225,11 @@ def q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@op("q9_product_profit", oracle="""
+@op("q9_product_profit", oracle=f"""
     SELECT n_name AS nation,
            CAST(EXTRACT(year FROM o_orderdate) AS BIGINT) AS o_year,
-           CAST(SUM(CAST(ROUND(l_extendedprice * 100, 0) AS BIGINT)
-                      * (100 - CAST(ROUND(l_discount * 100, 0) AS BIGINT))
-                    - CAST(ROUND(p_retailprice * 100, 0) AS BIGINT)
-                      * CAST(ROUND(l_quantity * 100, 0) AS BIGINT))
-                AS DOUBLE) / 10000.0 AS profit
+           {o_revenue(o_rev_c() + ' - ' + o_cents('p_retailprice')
+                      + ' * ' + o_cents('l_quantity'))} AS profit
     FROM lineitem
     JOIN orders   ON o_orderkey = l_orderkey
     JOIN part     ON p_partkey = l_partkey
@@ -273,9 +262,10 @@ def q9_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
     (orderkey, nationkey, profit_c4) ≈ 20 B/row instead of six 8-byte
     columns ≈ 48; the aggregate groups on the integer nationkey and the
     25-row name map re-attaches AFTER it as a broadcast. sf10
-    2.75 → 2.60 s, rows identical (probe_narrow_exchange.py) — the
-    residual vs the twin stays the exchange dispatch tax decomposed in
-    BASELINE.md (r10 q9 exoneration), now on 2.4× fewer bytes.
+    2.75 → 2.60 s, rows identical (OPTIMIZATION_r11.md "narrow the fact
+    exchanges") — the residual vs the twin stays the exchange dispatch
+    tax decomposed in BASELINE.md (r10 q9 exoneration), now on 2.4×
+    fewer bytes.
     """
     part = (load_table(spark, sf_dir, "part")
             .filter(C("p_name").like("%widget%"))
@@ -286,8 +276,7 @@ def q9_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_nationkey", C("n_name").alias("nation"))
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderdate")
-    profit_c4 = (cents("l_extendedprice") * (100 - cents("l_discount"))
-                 - cents("p_retailprice") * cents("l_quantity"))
+    profit_c4 = rev_c() - cents("p_retailprice") * cents("l_quantity")
     li = (load_table(spark, sf_dir, "lineitem")
           .select("l_orderkey", "l_partkey", "l_suppkey",
                   "l_extendedprice", "l_discount", "l_quantity")
@@ -298,16 +287,15 @@ def q9_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         li.join(orders.hint("shuffle_hash"), C("o_orderkey") == C("l_orderkey"))
         .groupBy("nkey", F.year("o_orderdate").cast("bigint").alias("o_year"))
-        .agg((F.sum("profit_c4").cast("double") / 10000.0).alias("profit"))
+        .agg(revenue("profit_c4").alias("profit"))
         .join(F.broadcast(nation), C("nkey") == C("n_nationkey"))
         .select("nation", "o_year", "profit")
     )
 
 
-@op("q11_important_parts", oracle="""
+@op("q11_important_parts", oracle=f"""
     WITH nat_items AS (
-        SELECT l_partkey,
-               CAST(ROUND(l_extendedprice * 100, 0) AS BIGINT) AS ext_c
+        SELECT l_partkey, {o_cents('l_extendedprice')} AS ext_c
         FROM lineitem
         JOIN supplier ON l_suppkey = s_suppkey
         JOIN nation   ON s_nationkey = n_nationkey
@@ -380,7 +368,7 @@ def q12_priority_by_delay(spark: SparkSession, sf_dir: str) -> DataFrame:
     `high` BOOLEAN BEFORE the orders-side exchange (guide §2.3 — the
     aggregate only ever tests membership in the high set, so ~10 bytes
     of string per row never cross the wire; sf10 2.02 → 1.94 s, rows
-    identical, probe_narrow_exchange.py).
+    identical, OPTIMIZATION_r11.md "narrow the fact exchanges").
     """
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderdate",
@@ -447,12 +435,9 @@ def q13_order_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
             .agg(F.count(F.lit(1)).alias("custdist")))
 
 
-@op("q15_top_supplier", oracle="""
+@op("q15_top_supplier", oracle=f"""
     WITH rev AS (
-        SELECT l_suppkey,
-               SUM(CAST(ROUND(l_extendedprice * 100, 0) AS BIGINT)
-                   * (100 - CAST(ROUND(l_discount * 100, 0) AS BIGINT)))
-                   AS total_c
+        SELECT l_suppkey, SUM({o_rev_c()}) AS total_c
         FROM lineitem
         WHERE l_shipdate >= TIMESTAMP '1997-01-01'
           AND l_shipdate <  TIMESTAMP '1997-04-01'
@@ -483,7 +468,7 @@ def q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
           .filter((C("l_shipdate") >= F.lit("1997-01-01").cast("timestamp_ntz"))
                   & (C("l_shipdate") < F.lit("1997-04-01").cast("timestamp_ntz")))
           .select("l_suppkey", "l_extendedprice", "l_discount"))
-    rev = li.groupBy("l_suppkey").agg(_rev_c().alias("total_c"))
+    rev = li.groupBy("l_suppkey").agg(F.sum(rev_c()).alias("total_c"))
     supp = load_table(spark, sf_dir, "supplier").select("s_suppkey", "s_name")
     return (
         rev.withColumn("max_c", F.max("total_c").over(Window.partitionBy()))
@@ -560,7 +545,7 @@ def q16_part_supplier_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@op("q20_promotion_suppliers", oracle="""
+@op("q20_promotion_suppliers", oracle=f"""
     SELECT s_suppkey, s_name
     FROM supplier JOIN nation ON s_nationkey = n_nationkey
     WHERE n_name = 'NATION_2'
@@ -571,8 +556,7 @@ def q16_part_supplier_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
             AND l_shipdate >= TIMESTAMP '1997-01-01'
             AND l_shipdate <  TIMESTAMP '1998-01-01'
           GROUP BY l_suppkey, l_partkey
-          HAVING CAST(SUM(CAST(ROUND(l_quantity * 100, 0) AS BIGINT))
-                      AS DOUBLE) / 100.0 > 50.0
+          HAVING {o_sum('l_quantity')} > 50.0
       )
 """)
 def q20_promotion_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -597,8 +581,7 @@ def q20_promotion_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     movers = (
         li.join(F.broadcast(part), C("l_partkey") == C("p_partkey"))
         .groupBy("l_suppkey", "l_partkey")
-        .agg((F.sum(cents("l_quantity")).cast("double") / 100.0)
-             .alias("qty"))
+        .agg(dec_sum("l_quantity").alias("qty"))
         .filter(C("qty") > 50.0)
         .select("l_suppkey"))
     nation = (load_table(spark, sf_dir, "nation")
@@ -658,10 +641,10 @@ def q21_waiting_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     output — at sf10 orders is ~7M rows, does NOT broadcast, and that
     shape shuffled the fact-sized join output a second time (r11
     interleaved A/B, identical rows: sf10 min 8.3 s → 6.08 s, better in
-    every pass — probe_q421_rewrite.py). Two hash aggregates replace
-    the r2 version's aggregate + two-function window: no per-partition
-    sort, and the order grain (≪ line grain) feeds the final broadcast
-    join.
+    every pass — OPTIMIZATION_r11.md "cut to the order grain"). Two
+    hash aggregates replace the r2 version's aggregate + two-function
+    window: no per-partition sort, and the order grain (≪ line grain)
+    feeds the final broadcast join.
     """
     orders = (load_table(spark, sf_dir, "orders")
               .filter(C("o_orderstatus") == "F")

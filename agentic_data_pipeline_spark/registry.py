@@ -7,8 +7,9 @@ re-exports this registry as the driver contract.
 
 Determinism contract for every registered op (SURVEY.md §5):
 - alias every computed column identically in Spark and oracle SQL;
-- money aggregates go through DECIMAL(18,2) so sums are order-independent,
-  then cast to DOUBLE at the end (exact conversion, identical both engines);
+- money aggregates run in BIGINT cents through the rules in
+  ``functions/helpers.py`` (one Catalyst and one DuckDB form each), so sums
+  are order-independent and the final DOUBLE is identical in both engines;
 - every LIMIT is paired with a total ORDER BY including a unique tiebreaker;
 - no approximate aggregates.
 """
@@ -64,114 +65,161 @@ def op(op_id: str, oracle: str | None = None, tags: tuple[str, ...] = (),
 
 # Driver-facing iteration order. The driver verifies ops in queries()-dict
 # order with a bounded per-round budget (~50 ops/round observed). The
-# ordering is GENERATED each round by
-# `python scripts/evidence_rotation.py --priority` (r8 verdict items 2-3:
-# FUNCTION-granular staleness via git log -L): ops whose own def changed
-# after their last driver row lead (r12 head: the six ops whose PLANS the
-# r12 Arrow rewrites changed — curation/decontaminate/the md5-LSH twins
-# via the shingle generator, prep's scored→kept pass, q5's name-attach
-# trim; curation/the LSH twins are promoted manually because their defs
-# are unchanged — the generator can't see a cross-function dep through
-# dedup.shingles_exploded — then the ≤r5-evidence cohort the r11 verdict
-# item 7 asked drained: q1_pricing_summary's newest row is r01, the
-# temporal family r03), then
-# ops whose FILE changed around an unchanged def, then fresh ops by
-# evidence age; driver-hidden ops sit at the tail
-# so the budget window is spent entirely on oracle-checkable rows
-# (scripts/driver_preflight.py asserts this).
+# ordering is GENERATED by `python scripts/evidence_rotation.py --priority`
+# (r8 verdict items 2-3: FUNCTION-granular staleness via git log -L): ops
+# whose own def changed after their last driver row lead, then ops whose
+# FILE changed around an unchanged def, then fresh ops by evidence age;
+# driver-hidden ops sit at the tail so the budget window is spent entirely
+# on oracle-checkable rows (scripts/driver_preflight.py asserts this).
+# Head: the 52 ops whose oracle SQL now calls the functions/helpers.py
+# money rules, in the generator's order. They are promoted by hand: an
+# oracle sits in the @op decorator or a module constant, outside the def
+# range the generator tracks.
 DRIVER_PRIORITY: tuple[str, ...] = (
-    "ext_curation_pipeline",
-    "ext_decontaminate",
-    "ext_training_prep_pipeline",
-    "ext_dedup_minhash_md5",
-    "ext_dedup_simhash_md5",
-    "q5_local_supplier_volume",
-    "ext_ann_pq",
-    "ext_audio_dedup_fingerprint",
-    "ext_audio_features",
-    "ext_bm25_search",
-    "ext_contrastive_triplets",
-    "ext_decontaminate_embedding",
-    "ext_dedup_components_star",
-    "ext_dedup_incremental_fuzzy",
-    "ext_dedup_substring",
-    "ext_embed_word2vec",
-    "ext_embedding_quantize",
-    "ext_heavy_hitters",
-    "ext_hybrid_search",
-    "ext_image_dedup_ahash",
-    "ext_k_anonymity",
-    "ext_resize_png",
-    "ext_similarity_topk_batch",
-    "ext_triangle_count",
-    "ext_video_dedup_scenehash",
-    "ext_video_frames",
-    "ext_vocab_coverage",
-    "ext_drift_psi",
-    "ext_expectations",
-    "ext_hll_rollup",
-    "ext_partition_evolution",
-    "ext_quantile_rollup",
-    "ext_skew_report",
-    "ext_snapshot_expire",
-    "ext_snapshot_versions",
-    "ext_time_travel_diff",
-    "ext_winsorize",
-    "q_approx_agg",
-    "stream_dedup_fuzzy",
-    "stream_quality_gate",
-    "stream_stream_join_outer",
-    "ext_bpe_encode",
-    "ext_bpe_merges",
-    "ext_chunk_overlap",
-    "ext_dedup_components",
-    "ext_dedup_exact",
-    "ext_dedup_passage",
-    "ext_dedup_resolve",
-    "ext_diversity_sample",
-    "ext_docs_to_chunks",
-    "ext_dp_histogram",
-    "ext_fingerprint",
-    "ext_group_topk",
-    "ext_html_strip",
-    "ext_lang_id",
-    "ext_ngram_freq",
-    "ext_pack_sequences",
-    "ext_pii_redact",
-    "ext_quality_score",
-    "ext_salted_join",
-    "ext_text_stats",
-    "ext_tfidf",
-    "ext_token_count",
-    "merge_upsert",
     "q15_top_supplier",
     "q17_small_quantity",
     "q18_large_orders",
     "q19_disjunctive_filter",
+    "q22_dormant_customers",
+    "q_agg",
+    "q_groupby",
+    "q_histogram",
+    "rule_top_performers",
+    "stream_to_bronze",
+    "q20_promotion_suppliers",
+    "q6_forecast_revenue",
+    "q_json_funcs",
+    "q_rollup",
+    "rule_remove_outliers",
+    "stream_tumble",
+    "ext_gap_fill",
+    "ext_partitioned_write",
+    "ext_range_join",
+    "ext_sessionize",
+    "q10_returned_items",
+    "q14_promo_revenue",
+    "q1_pricing_summary",
+    "q3_shipping_priority",
+    "q7_volume_shipping",
+    "q8_market_share",
+    "q9_product_profit",
+    "q_pivot",
+    "q5_local_supplier_volume",
+    "ext_salted_join",
+    "ext_data_profile",
+    "ext_dp_mean",
+    "q_cte",
+    "ext_bucketed_join",
+    "ext_pseudonymize",
+    "q11_important_parts",
+    "q_grouping_sets",
+    "q_join_left",
+    "q_tumble",
+    "sql_exec",
+    "stream_join",
+    "stream_sessionize",
+    "stream_sliding",
+    "viz_bar",
+    "q_cube",
+    "q_join_full",
+    "q_window_agg",
+    "q_window_range",
+    "ext_partition_evolution",
+    "ext_snapshot_expire",
+    "ext_snapshot_versions",
+    "ext_winsorize",
     "ext_compact_files",
     "ext_dedup_incremental",
-    "ext_entropy",
-    "ext_frame_sample",
+    "ext_dp_histogram",
+    "ext_fingerprint",
     "ext_latest_by_key",
-    "ext_multimodal",
-    "ext_pdf_corpus",
+    "ext_ngram_freq",
     "ext_pmi_bigrams",
+    "ext_tfidf",
     "ext_dedup_embedding",
-    "ext_dp_mean",
-    "ext_gopher_filters",
     "ext_inverted_index",
-    "ext_k_anonymity_enforce",
     "ext_kmeans_clusters",
     "ext_knn_graph_batch",
-    "q13_order_distribution",
-    "q22_dormant_customers",
-    "q2_min_cost_supplier",
-    "vector_index",
-    "vector_search_batch",
-    "ext_data_profile",
-    "ext_domain_mix",
-    "ext_histogram_rollup",
     "ext_scd2_history",
+    "preview",
+    "q13_order_distribution",
+    "q2_min_cost_supplier",
+    "q_array_funcs",
+    "q_join_anti",
+    "q_window_rank",
+    "rule_clean_emails",
+    "rule_standardize_currency",
+    "vector_index",
+    "ext_corpus_stats",
+    "ext_dedup_clusters_bounded",
+    "ext_knn_graph",
+    "ext_quality_classifier",
+    "ext_rare_bigrams",
+    "ext_repetition",
+    "ext_word2vec_train",
+    "q_join_inner",
+    "q_lateral",
+    "q_topk",
+    "read_bronze",
+    "serve_csv",
+    "stream_dedup_watermark",
+    "stream_upsert",
+    "write_bronze",
+    "ext_ann_int8",
+    "ext_ann_ivf",
+    "ext_asof_join",
+    "ext_knn_graph_derived",
+    "ext_lm_perplexity",
+    "ext_lm_score_holdout",
+    "ext_pagerank",
+    "ext_semdedup_contract",
+    "ext_similarity_topk",
+    "q12_priority_by_delay",
+    "q16_part_supplier_counts",
+    "q21_waiting_suppliers",
+    "q4_late_shipments",
+    "q_join_cross",
+    "q_percentile",
+    "q_window_nav",
+    "ext_bm25_search",
+    "ext_contrastive_triplets",
+    "ext_curation_pipeline",
+    "ext_decontaminate_embedding",
+    "ext_dedup_components",
+    "ext_dedup_components_star",
+    "ext_dedup_exact",
+    "ext_dedup_incremental_fuzzy",
+    "ext_dedup_minhash_md5",
+    "ext_dedup_resolve",
+    "ext_dedup_simhash_md5",
+    "ext_dedup_substring",
+    "ext_diversity_sample",
+    "ext_drift_psi",
+    "ext_embed_word2vec",
+    "ext_heavy_hitters",
+    "ext_hybrid_search",
+    "ext_similarity_topk_batch",
+    "ext_training_prep_pipeline",
+    "ext_vocab_coverage",
+    "stream_dedup_fuzzy",
+    "stream_quality_gate",
+    "stream_stream_join_outer",
+    "ext_entropy",
+    "ext_group_topk",
+    "ext_html_strip",
+    "ext_lang_id",
+    "ext_pack_sequences",
+    "ext_pii_redact",
+    "ext_quality_score",
+    "ext_text_stats",
+    "ext_token_count",
+    "merge_upsert",
+    "ext_frame_sample",
+    "ext_multimodal",
+    "ext_pdf_corpus",
+    "ext_domain_mix",
+    "ext_gopher_filters",
+    "ext_k_anonymity_enforce",
     "ext_topic_model",
     "ext_zorder_cluster",
     "ingest_csv",
@@ -183,122 +231,70 @@ DRIVER_PRIORITY: tuple[str, ...] = (
     "ingest_text",
     "nl_fallback",
     "nl_transform",
-    "preview",
-    "q_agg",
-    "q_array_funcs",
     "q_case_when",
-    "q_cte",
     "q_date_funcs",
     "q_distinct",
     "q_except",
     "q_filter",
-    "q_groupby",
-    "q_histogram",
     "q_intersect",
-    "q_join_anti",
     "q_variant",
-    "q_window_rank",
-    "rule_clean_emails",
-    "rule_standardize_currency",
-    "rule_top_performers",
     "stream_dedup",
-    "stream_to_bronze",
-    "ext_dedup_clusters_bounded",
+    "vector_search_batch",
+    "ext_histogram_rollup",
+    "ext_cdc_changelog",
     "ext_dedup_containment",
     "ext_dedup_ngram",
-    "ext_knn_graph",
-    "ext_pseudonymize",
-    "ext_quality_classifier",
-    "ext_repetition",
-    "ext_word2vec_train",
-    "q11_important_parts",
-    "q20_promotion_suppliers",
-    "q6_forecast_revenue",
-    "vector_search",
-    "ext_bucketed_join",
-    "ext_cdc_changelog",
-    "ext_corpus_stats",
-    "ext_rare_bigrams",
-    "ext_resize",
     "ext_sample_stratified",
     "ext_train_val_split",
     "q_exists",
-    "q_grouping_sets",
-    "q_join_inner",
-    "q_join_left",
     "q_join_semi",
-    "q_json_funcs",
-    "q_lateral",
     "q_math_funcs",
     "q_project",
     "q_regex_filter",
-    "q_rollup",
     "q_str_funcs",
-    "q_topk",
-    "q_tumble",
     "q_union",
-    "read_bronze",
-    "rule_remove_outliers",
-    "serve_csv",
     "serve_json",
-    "sql_exec",
-    "stream_dedup_watermark",
-    "stream_join",
-    "stream_sessionize",
-    "stream_sliding",
     "stream_stream_join",
-    "stream_tumble",
-    "stream_upsert",
-    "viz_bar",
-    "write_bronze",
-    "q10_returned_items",
-    "q14_promo_revenue",
-    "q3_shipping_priority",
-    "q4_late_shipments",
-    "q7_volume_shipping",
-    "ext_ann_int8",
-    "ext_ann_ivf",
+    "vector_search",
+    "ext_resize",
     "ext_ann_lsh",
-    "ext_asof_join",
     "ext_funnel",
-    "ext_gap_fill",
-    "ext_knn_graph_derived",
-    "ext_lm_perplexity",
-    "ext_lm_score_holdout",
-    "ext_pagerank",
-    "ext_partitioned_write",
-    "ext_range_join",
     "ext_retention",
     "ext_sample_fixed_n",
-    "ext_semdedup_contract",
-    "ext_sessionize",
     "ext_shard_assign",
-    "ext_similarity_topk",
     "ext_temperature_sample",
     "ext_upsample_repeat",
     "ingest_json_multiline",
     "ingest_schema_evolution",
     "ingest_xml",
-    "q12_priority_by_delay",
-    "q16_part_supplier_counts",
-    "q1_pricing_summary",
-    "q21_waiting_suppliers",
-    "q8_market_share",
-    "q9_product_profit",
-    "q_cube",
     "q_except_all",
     "q_intersect_all",
-    "q_join_cross",
-    "q_join_full",
-    "q_percentile",
-    "q_pivot",
     "q_recursive_cte",
     "q_string_agg",
     "q_unpivot",
-    "q_window_agg",
     "q_window_dist",
-    "q_window_nav",
-    "q_window_range",
+    "ext_ann_pq",
+    "ext_bpe_encode",
+    "ext_bpe_merges",
+    "ext_chunk_overlap",
+    "ext_decontaminate",
+    "ext_dedup_passage",
+    "ext_docs_to_chunks",
+    "ext_embedding_quantize",
+    "ext_k_anonymity",
+    "ext_skew_report",
+    "ext_time_travel_diff",
+    "ext_triangle_count",
+    "ext_audio_dedup_fingerprint",
+    "ext_audio_features",
+    "ext_expectations",
+    "ext_hll_rollup",
+    "ext_image_dedup_ahash",
+    "ext_quantile_rollup",
+    "ext_resize_png",
+    "ext_video_dedup_scenehash",
+    "ext_video_frames",
+    "q_approx_agg",
     "ext_dedup_minhash",
     "ext_dedup_simhash",
     "ext_dedup_minhash_clusters",

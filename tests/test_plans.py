@@ -310,7 +310,7 @@ HEADLINE_MAX_SHUFFLES = {
     # broadcasts (it doesn't past sf1) and re-shuffling the LINE-grain
     # join output; the third exchange now carries the ~4x-smaller order
     # grain instead — node count up, exchange bytes down (sf10 A/B
-    # 8.3->6.08 s, probe_q421_rewrite.py).
+    # 8.3->6.08 s, OPTIMIZATION_r11.md "cut to the order grain").
     "q21_waiting_suppliers": 3,
     "ext_curation_pipeline": 5,  # composed multi-stage pipeline
 }
